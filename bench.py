@@ -85,13 +85,12 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def build_once(cpus: int, n_docs: int, codec: str = "varint") -> dict:
+def build_once(cpus: int, n_docs: int) -> dict:
     """Subprocess entry: fresh JVM+Python, one index build, timing on stdout."""
     from knowledgeir_spark.index.build import IndexConfig, build_index
     from knowledgeir_spark.session import get_spark
 
-    suffix = "" if codec == "varint" else f"_{codec}"
-    idx_dir = os.path.join(CACHE, f"index_c{cpus}_{n_docs}{suffix}")
+    idx_dir = os.path.join(CACHE, f"index_c{cpus}_{n_docs}")
     shutil.rmtree(idx_dir, ignore_errors=True)
     spark = get_spark(cpus=cpus, app_name=f"kir-bench-build-{cpus}")
     from knowledgeir_spark.index.build import choose_salt_range
@@ -111,7 +110,6 @@ def build_once(cpus: int, n_docs: int, codec: str = "varint") -> dict:
         salt_range=choose_salt_range(n_docs, 16),
         n_buckets=32,
         build_partitions=max(16, n_docs // 18_000),
-        codec=codec,
     )
     t0 = time.time()
     build_index(spark, docs, idx_dir, cfg, input_token=f"bench_{n_docs}")
@@ -119,7 +117,7 @@ def build_once(cpus: int, n_docs: int, codec: str = "varint") -> dict:
     spark.stop()
     return {
         "cpus": cpus, "build_sec": round(dt, 3), "idx_dir": idx_dir,
-        "codec": codec, "index_bytes": _dir_bytes(idx_dir),
+        "index_bytes": _dir_bytes(idx_dir),
     }
 
 
@@ -702,7 +700,6 @@ def _timed_leg(fn, n: int):
 
 def build_in_subprocess(
     cpus: int, n_docs: int | None = None, timeout_s: int = 900,
-    codec: str = "varint",
 ) -> dict | None:
     """One isolated build; None on timeout (the shared VM occasionally
     wedges a JVM for many minutes — a hung leg must not hang the whole
@@ -713,9 +710,8 @@ def build_in_subprocess(
         {
             "KIR_BENCH_BUILD_CPUS": str(cpus),
             "KIR_BENCH_BUILD_DOCS": str(n_docs or N_DOCS),
-            "KIR_BENCH_BUILD_CODEC": codec,
         },
-        timeout_s, f"build (cpus={cpus}, codec={codec})",
+        timeout_s, f"build (cpus={cpus})",
     )
 
 
@@ -1122,40 +1118,6 @@ def main() -> None:
             ),
         }
 
-    # 2c. PFor codec cost vs varint: one isolated 1M-doc build per codec,
-    # wall + on-disk index bytes.  Cached on the build-code fingerprint.
-    if os.environ.get("KIR_BENCH_PFOR", "1") == "1":
-        bfp = _build_code_fingerprint()
-        pfor_docs = int(os.environ.get("KIR_BENCH_PFOR_DOCS", "1000000"))
-        key = os.path.join(CACHE, f"pfor_{pfor_docs}_{bfp}.json")
-        if os.path.exists(key):
-            with open(key) as f:
-                extras["codec_cost"] = json.load(f)
-            extras["codec_cost"]["cached"] = True
-        else:
-            ensure_webtext(pfor_docs)
-            legs = {}
-            for codec in ("varint", "pfor"):
-                b = build_in_subprocess(8, pfor_docs, codec=codec)
-                if b:
-                    legs[codec] = {
-                        "build_sec": b["build_sec"],
-                        "index_bytes": b.get("index_bytes"),
-                        "steal_ratio": b["steal_ratio"],
-                    }
-            if len(legs) == 2:
-                legs["bytes_ratio_pfor_vs_varint"] = round(
-                    legs["pfor"]["index_bytes"] / legs["varint"]["index_bytes"], 4
-                )
-                legs["build_ratio_pfor_vs_varint"] = round(
-                    legs["pfor"]["build_sec"] / legs["varint"]["build_sec"], 4
-                )
-            legs["n_docs"] = pfor_docs
-            legs["build_code_fingerprint"] = bfp
-            extras["codec_cost"] = legs
-            with open(key, "w") as f:
-                json.dump(legs, f)
-
     if os.environ.get("KIR_BENCH_BUILDS_ONLY") == "1":
         print(json.dumps({
             "metric": "kir_spark_index_build", "value": b_hi["build_sec"],
@@ -1340,7 +1302,7 @@ def main() -> None:
     # captured tail).
     bulky = [
         k for k in (
-            "leg_evidence", "codec_cost", "dedup_scale", "ngram_span_scale",
+            "leg_evidence", "dedup_scale", "ngram_span_scale",
             "serving_block_skip", "web_serving_legs", "scaling_2_8_dram_bound",
             "phrase_scale", "freshness", "suggest_scale", "anchor_skew",
             "serving_cold", "serving_cold_prewarmed",
@@ -1413,7 +1375,6 @@ if __name__ == "__main__":
                 build_once(
                     int(os.environ["KIR_BENCH_BUILD_CPUS"]),
                     int(os.environ.get("KIR_BENCH_BUILD_DOCS", N_DOCS)),
-                    codec=os.environ.get("KIR_BENCH_BUILD_CODEC", "varint"),
                 )
             )
         )

@@ -7,7 +7,7 @@ Pipeline (each stage an idempotent lineage-tracked commit, plans/lineage.py):
   doc_terms(doc_id, term, tf, doc_len)                       [stage 1]
     --[salt = doc_id // salt_range; bucket = md5(term) % n_buckets;
        repartition(term, salt) + sortWithinPartitions(term, salt, doc_id);
-       mapInPandas block encoder]-->
+       mapInArrow block encoder]-->
   postings(bucket=*/...)                                     [stage 2]
   term_stats(term, df, cf)                                   [stage 3]
   field_stats.json {n_docs, total_len, avg_doc_len}          [stage 4]
@@ -32,27 +32,31 @@ uses operators/ids.assign_doc_ids (deterministic dense ids).
 from __future__ import annotations
 
 import hashlib
+import json
+import os
 from collections.abc import Iterator
 from dataclasses import asdict, dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_terms
 from ..plans.lineage import StageManager, StageResult
-from .codec import BLOCK_SIZE, encode_block
+from .codec import BLOCK_SIZE
 
 
 @dataclass(frozen=True)
 class IndexConfig:
+    """Index layout, recorded in field_stats.json by build_index; maintenance
+    calls refuse a config that disagrees with it (check_layout).  Posting
+    payloads are always varint (index/codec.py)."""
+
     block_size: int = BLOCK_SIZE
     salt_range: int = 1 << 20      # docs per salt bucket (contiguous ranges)
     n_buckets: int = 32            # term-hash partition dirs (query pruning)
     build_partitions: int | None = None  # shuffle width; None -> session default
     tokenizer: str = "spec"        # "spec" (engine v1) | "simple" (SQL-parity)
-    codec: str = "varint"          # posting payload codec: "varint" | "pfor"
     # "docid": blocks = contiguous doc_id runs (disjoint per-block id
     # ranges; enables decode-level WAND).  "impact": within each (term,
     # salt) group postings are BUCKETED into blocks by descending tf first
@@ -64,6 +68,45 @@ class IndexConfig:
 
     def fingerprint_dict(self) -> dict:
         return asdict(self)
+
+
+# layout fields a maintenance call must share with the index it writes into
+# (n_buckets is not one: compact re-buckets and defrag skips on a mismatch)
+_LAYOUT_FIELDS = ("tokenizer", "block_size", "salt_range", "block_order")
+
+
+def check_codec(field_stats: dict, index_dir: str) -> None:
+    """Refuse an index whose posting payloads are not varint (an index
+    written before the format went varint-only)."""
+    codec = field_stats.get("codec", "varint")
+    if codec != "varint":
+        raise ValueError(
+            f"index {index_dir} stores {codec!r} posting payloads; only "
+            "varint is readable — rebuild it with build_index"
+        )
+
+
+def check_layout(index_dir: str, config: IndexConfig) -> None:
+    """Raise ValueError when `config` disagrees with the layout recorded in
+    index_dir's field_stats.json (no base index yet: nothing to check).
+    Deltas or re-blocked buckets written under another tokenizer, block
+    size, salt range or block order would silently mix two layouts."""
+    path = os.path.join(index_dir, "field_stats.json")
+    if not os.path.exists(path):
+        return
+    with open(path) as f:
+        fs = json.load(f)
+    check_codec(fs, index_dir)
+    diff = [
+        f"{k}: index has {fs[k]!r}, config has {getattr(config, k)!r}"
+        for k in _LAYOUT_FIELDS
+        if k in fs and fs[k] != getattr(config, k)
+    ]
+    if diff:
+        raise ValueError(
+            f"IndexConfig does not match the layout of {index_dir}: "
+            + "; ".join(diff)
+        )
 
 
 # what the block ENCODERS emit; `bucket` is appended afterwards from the
@@ -102,177 +145,36 @@ def term_bucket_expr(term: Column, n_buckets: int) -> Column:
     ).cast("int")
 
 
-def _impact_reorder(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """Impact-ordered block assignment (block_order="impact"): within each
-    (term, salt) group — input rows sorted by (term, salt, doc_id) — assign
-    postings to blocks by DESCENDING tf (ties: doc_id asc, deterministic),
-    then re-sort each block by doc_id so the delta codec still sees
-    ascending ids.  Group extents and block sizes are unchanged, so the
-    downstream change-detection encoder emits the same block count with the
-    same (term, salt, block_id) keys — only membership differs.  A doc
-    still appears in exactly one block per term; only block METADATA
-    sharpens (block 0 carries the group's max tf, later blocks strictly
-    lower), which is what makes the serving bound-cut discriminative."""
-    terms = pdf["term"].to_numpy()
-    salts = pdf["salt"].to_numpy(np.int64)
-    ids = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
-    n = len(pdf)
-    new_grp = np.ones(n, dtype=bool)
-    new_grp[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
-    grp_id = np.cumsum(new_grp) - 1
-    order = np.lexsort((ids, -tfs, grp_id))  # grp asc, tf desc, id asc
-    grp_sorted = grp_id[order]
-    starts = np.flatnonzero(np.r_[True, grp_sorted[1:] != grp_sorted[:-1]])
-    sizes = np.diff(np.append(starts, n))
-    offs = np.arange(n, dtype=np.int64) - np.repeat(starts, sizes)
+def _impact_order(grp_id: np.ndarray, offs: np.ndarray, ids: np.ndarray,
+                  tfs: np.ndarray, block_size: int) -> np.ndarray:
+    """Permutation for block_order="impact": within each (term, salt) group
+    (rows sorted by term, salt, doc_id; grp_id numbers the groups, offs is
+    each row's offset in its group) assign postings to blocks by DESCENDING
+    tf (ties: doc_id asc, deterministic), then re-sort each block by doc_id
+    so the delta codec still sees ascending ids.  Groups keep their row
+    extents, so the encoder emits the same (term, salt, block_id) keys as
+    under docid order — only block membership differs.  A doc still
+    appears in exactly one block per term; only block METADATA sharpens
+    (block 0 carries the group's max tf, later blocks strictly lower),
+    which is what makes the serving bound-cut discriminative."""
+    order = np.lexsort((ids, -tfs.astype(np.int64), grp_id))
     blk = offs // block_size
-    order2 = np.lexsort((ids[order], blk, grp_sorted))
-    return pdf.iloc[order[order2]].reset_index(drop=True)
+    return order[np.lexsort((ids[order], blk, grp_id))]
 
 
-def _make_block_builder(
-    block_size: int, codec: str = "varint", block_order: str = "docid"
-):
-    """mapInPandas fn: partition rows sorted by (term, salt, doc_id) ->
+def _make_block_builder_arrow(block_size: int, block_order: str = "docid"):
+    """mapInArrow fn: partition rows sorted by (term, salt, doc_id) ->
     posting-block rows.  Streams Arrow batches with a carry buffer so a
     (term, salt) group spanning batch boundaries is encoded exactly once;
     memory is bounded by max group size (<= salt_range postings) + one batch.
     block_order="impact" re-buckets each group's postings into blocks by
-    descending tf before encoding (see _impact_reorder).
-    """
+    descending tf before encoding (see _impact_order).
 
-    def encode_groups_slow(pdf: pd.DataFrame) -> list[dict]:
-        """Per-block encode via pandas groupby — reference path, used for
-        self-delimiting codecs (pfor) and as the cross-test oracle for the
-        vectorized varint path below."""
-        rows = []
-        for (term, salt), g in pdf.groupby(["term", "salt"], sort=False):
-            ids = g["doc_id"].to_numpy(np.int64).astype(np.uint64)
-            tfs = g["tf"].to_numpy(np.int64).astype(np.uint64)
-            dls = g["doc_len"].to_numpy(np.int64).astype(np.uint64)
-            for bi, start in enumerate(range(0, len(ids), block_size)):
-                blk = encode_block(
-                    ids[start : start + block_size],
-                    tfs[start : start + block_size],
-                    dls[start : start + block_size],
-                    codec=codec,
-                )
-                blk.update(
-                    term=term, salt=int(salt), block_id=bi,
-                    sum_tf=int(tfs[start : start + block_size].sum()),
-                )
-                rows.append(blk)
-        return rows
-
-    def encode_groups_varint(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-partition vectorized encoder (varint only): group/block
-        boundaries by change detection on the SORTED (term, salt) columns,
-        deltas with per-block absolute resets, then ONE varint encode per
-        stream sliced at block byte offsets — byte-identical to the
-        per-block path (tested) at ~5x less Python overhead, which is the
-        postings stage's hot loop."""
-        from .codec import varint_encode_with_offsets
-
-        terms = pdf["term"].to_numpy()
-        salts = pdf["salt"].to_numpy(np.int64)
-        ids = pdf["doc_id"].to_numpy(np.int64).astype(np.uint64)
-        tfs = pdf["tf"].to_numpy(np.int64).astype(np.uint64)
-        dls = pdf["doc_len"].to_numpy(np.int64).astype(np.uint64)
-        n = len(ids)
-        new_grp = np.ones(n, dtype=bool)
-        new_grp[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
-        grp_starts = np.flatnonzero(new_grp)
-        sizes = np.diff(np.append(grp_starts, n))
-        offs = np.arange(n, dtype=np.int64) - np.repeat(grp_starts, sizes)
-        blk_starts = np.flatnonzero(offs % block_size == 0)
-        blk_ends = np.append(blk_starts[1:], n)
-        deltas = ids.copy()
-        deltas[1:] -= ids[:-1]
-        deltas[blk_starts] = ids[blk_starts]
-        d_bytes, d_off = varint_encode_with_offsets(deltas)
-        t_bytes, t_off = varint_encode_with_offsets(tfs)
-        l_bytes, l_off = varint_encode_with_offsets(dls)
-        last = blk_ends - 1
-        return pd.DataFrame(
-            {
-                "term": terms[blk_starts],
-                "salt": salts[blk_starts],
-                "block_id": (offs[blk_starts] // block_size).astype(np.int32),
-                "n_docs": (blk_ends - blk_starts).astype(np.int32),
-                "first_doc_id": ids[blk_starts].astype(np.int64),
-                "max_doc_id": ids[last].astype(np.int64),
-                "max_tf": np.maximum.reduceat(tfs, blk_starts).astype(np.int32),
-                "min_doc_len": np.minimum.reduceat(dls, blk_starts).astype(np.int32),
-                "doc_id_deltas": [
-                    d_bytes[d_off[s]:d_off[e]] for s, e in zip(blk_starts, blk_ends)
-                ],
-                "tfs": [
-                    t_bytes[t_off[s]:t_off[e]] for s, e in zip(blk_starts, blk_ends)
-                ],
-                "doc_lens": [
-                    l_bytes[l_off[s]:l_off[e]] for s, e in zip(blk_starts, blk_ends)
-                ],
-                "sum_tf": np.add.reduceat(
-                    tfs.astype(np.int64), blk_starts
-                ).astype(np.int64),
-            }
-        )
-
-    def encode_groups(pdf: pd.DataFrame):
-        if block_order == "impact":
-            pdf = _impact_reorder(pdf, block_size)
-        if codec == "varint":
-            out = encode_groups_varint(pdf)
-            return out if len(out) else None
-        rows = encode_groups_slow(pdf)
-        return pd.DataFrame(rows)[cols] if rows else None
-
-    cols = [
-        "term", "salt", "block_id", "n_docs", "first_doc_id",
-        "max_doc_id", "max_tf", "min_doc_len", "doc_id_deltas", "tfs",
-        "doc_lens", "sum_tf",
-    ]
-
-    def builder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_term = pdf["term"].iat[-1]
-            last_salt = pdf["salt"].iat[-1]
-            suffix = (pdf["term"].values == last_term) & (
-                pdf["salt"].values == last_salt
-            )
-            first_idx = int(np.flatnonzero(suffix)[0])
-            carry = pdf.iloc[first_idx:]
-            head = pdf.iloc[:first_idx]
-            if len(head):
-                out = encode_groups(head)
-                if out is not None:
-                    yield out[cols]
-        if carry is not None and len(carry):
-            out = encode_groups(carry)
-            if out is not None:
-                yield out[cols]
-
-    return builder
-
-
-def _make_block_builder_arrow(block_size: int):
-    """mapInArrow twin of the varint/docid block builder — byte-identical
-    output (cross-tested), ~3x less Python-boundary cost.
-
-    The pandas path materializes every posting's term as a Python string
-    object just to detect group boundaries (measured: a one-column pandas
-    passthrough costs 3.5s on an 8M-row shuffle whose JVM side is 1.9s).
-    Here the term column stays an Arrow array end to end: boundary
-    detection is an Arrow compute kernel over shifted slices, the numeric
-    columns are zero-copy numpy views, block terms come out via take(), and
-    the three varint payload columns are built by RE-SLICING the single
-    encoded stream with a per-block offsets array over the same buffer
+    The term column stays an Arrow array end to end: boundary detection is
+    an Arrow compute kernel over shifted slices, the numeric columns are
+    zero-copy numpy views, block terms come out via take(), and the three
+    varint payload columns are built by RE-SLICING the single encoded stream
+    with a per-block offsets array over the same buffer
     (pyarrow.Array.from_buffers — no per-block byte copies at all)."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -289,22 +191,33 @@ def _make_block_builder_arrow(block_size: int):
             [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)],
         )
 
-    def encode_table(tbl: "pa.Table") -> "pa.RecordBatch":
+    def group_starts(tbl: "pa.Table"):
+        """(terms, salts, mask of rows that open a (term, salt) group)."""
         n = tbl.num_rows
         terms = tbl["term"].combine_chunks()
         salts = tbl["salt"].to_numpy()
-        ids = tbl["doc_id"].to_numpy().astype(np.uint64)
-        tfs = tbl["tf"].to_numpy().astype(np.uint64)
-        dls = tbl["doc_len"].to_numpy().astype(np.uint64)
         new_grp = np.ones(n, dtype=bool)
         if n > 1:
             t_neq = pc.not_equal(
                 terms.slice(1), terms.slice(0, n - 1)
             ).to_numpy(zero_copy_only=False)
             new_grp[1:] = t_neq | (salts[1:] != salts[:-1])
+        return terms, salts, new_grp
+
+    def encode_table(tbl: "pa.Table") -> "pa.RecordBatch":
+        n = tbl.num_rows
+        terms, salts, new_grp = group_starts(tbl)
+        ids = tbl["doc_id"].to_numpy().astype(np.uint64)
+        tfs = tbl["tf"].to_numpy().astype(np.uint64)
+        dls = tbl["doc_len"].to_numpy().astype(np.uint64)
         grp_starts = np.flatnonzero(new_grp)
         sizes = np.diff(np.append(grp_starts, n))
         offs = np.arange(n, dtype=np.int64) - np.repeat(grp_starts, sizes)
+        if block_order == "impact":
+            perm = _impact_order(
+                np.cumsum(new_grp) - 1, offs, ids, tfs, block_size
+            )
+            ids, tfs, dls = ids[perm], tfs[perm], dls[perm]
         blk_starts = np.flatnonzero(offs % block_size == 0)
         blk_ends = np.append(blk_starts[1:], n)
         blk_bounds = np.append(blk_starts, n)
@@ -345,20 +258,10 @@ def _make_block_builder_arrow(block_size: int):
             tbl = pa.Table.from_batches([batch])
             if carry is not None and carry.num_rows:
                 tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            n = tbl.num_rows
-            if not n:
+            if not tbl.num_rows:
                 continue
             # split off the (possibly batch-spanning) last (term, salt) group
-            terms = tbl["term"].combine_chunks()
-            salts = tbl["salt"].to_numpy()
-            if n > 1:
-                t_neq = pc.not_equal(
-                    terms.slice(1), terms.slice(0, n - 1)
-                ).to_numpy(zero_copy_only=False)
-                changed = np.flatnonzero(t_neq | (salts[1:] != salts[:-1]))
-                last_start = int(changed[-1]) + 1 if len(changed) else 0
-            else:
-                last_start = 0
+            last_start = int(np.flatnonzero(group_starts(tbl)[2])[-1])
             carry = tbl.slice(last_start)
             if last_start:
                 yield encode_table(tbl.slice(0, last_start))
@@ -370,20 +273,13 @@ def _make_block_builder_arrow(block_size: int):
 
 def apply_block_encoder(sorted_df: DataFrame, config: IndexConfig) -> DataFrame:
     """Partition rows sorted by (term, salt, doc_id) -> posting-block rows
-    (POSTINGS_SCHEMA), choosing the Arrow-native builder for the default
-    varint/docid layout and the pandas builder for the pfor /
-    impact-ordered variants.  The term-hash `bucket` is computed HERE, on
-    the ~1/25-sized block rows, not per posting."""
-    if config.codec == "varint" and config.block_order == "docid":
-        encoded = sorted_df.mapInArrow(
-            _make_block_builder_arrow(config.block_size), ENCODER_SCHEMA
-        )
-    else:
-        encoded = sorted_df.mapInPandas(
-            _make_block_builder(config.block_size, config.codec,
-                                config.block_order),
-            ENCODER_SCHEMA,
-        )
+    (POSTINGS_SCHEMA) through the Arrow block builder.  The term-hash
+    `bucket` is computed HERE, on the ~1/25-sized block rows, not per
+    posting."""
+    encoded = sorted_df.mapInArrow(
+        _make_block_builder_arrow(config.block_size, config.block_order),
+        ENCODER_SCHEMA,
+    )
     return encoded.withColumn(
         "bucket", term_bucket_expr(F.col("term"), config.n_buckets)
     )
@@ -401,9 +297,10 @@ def build_index(
     """Build (or resume) the full index at index_dir.  Returns stage results
     (each .skipped tells whether the committed snapshot was reused)."""
     mgr = StageManager(index_dir)
-    # format 2 = sum_tf block column (round 6); bumping the fingerprint keeps
-    # resume from ever pairing new term_stats code with an old snapshot
-    conf = {"input": input_token, "format": 2, **config.fingerprint_dict()}
+    # format 2 = sum_tf block column; format 3 = varint-only payloads.
+    # Bumping the fingerprint keeps resume from ever pairing new code with
+    # an old snapshot
+    conf = {"input": input_token, "format": 3, **config.fingerprint_dict()}
     results: dict[str, StageResult] = {}
 
     # stage 1: long-form doc terms (map-only tokenize+TF)
@@ -492,7 +389,7 @@ def build_index(
                 "n_buckets": config.n_buckets,
                 "block_size": config.block_size,
                 "salt_range": config.salt_range,
-                "codec": config.codec,
+                "codec": "varint",
                 "block_order": config.block_order,
                 "tokenizer": config.tokenizer,
             },

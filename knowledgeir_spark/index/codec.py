@@ -12,11 +12,11 @@ Vectorization: per-value byte lengths are computed from bit_length, output
 offsets by cumsum, and all bytes written via flat numpy fancy indexing —
 O(total_bytes) numpy work, no per-posting Python.
 
-Both codecs exist: varint (default — decode is branch-free vectorizable
-below, and codec time is a small share of the build after the vectorized
-whole-partition encoder) and PForDelta (pfor_* below: fixed-width bit
-packing + varint exception patching, 2-2.6x denser on head-term gap
-streams; selectable via IndexConfig.codec, auto-detected by readers).
+Varint is the only payload codec (PForDelta measured no better: larger
+postings at 3,000 docs, 10% smaller at 1M docs for 2.36x the build time).
+The build encodes a whole partition's streams at once
+(varint_encode_with_offsets); readers decode many blocks at once
+(decode_blocks_concat).
 """
 
 from __future__ import annotations
@@ -85,84 +85,6 @@ def varint_decode(data: bytes, count: int) -> np.ndarray:
     return out
 
 
-# ---------------------------------------------------------------------------
-# PForDelta ("patched frame of reference", Zukowski et al. 2006 family):
-# pack each value into b bits where b covers >= 7/8 of the block; larger
-# values are stored as (position, value) varint exception pairs.  Layout:
-#   [b: 1 byte][n_exceptions: varint][packed: ceil(n*b/8) bytes]
-#   [exception positions: varints][exception values: varints]
-# numpy-vectorized via an n x b bit matrix + packbits — blocks are <= 128
-# values so the matrix is tiny.  2-6x smaller than varint on dense head-term
-# delta streams (gaps of 1-3 pack into 2 bits vs 1 byte).
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    v = np.asarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b"\x00" + varint_encode(np.array([0], dtype=np.uint64))
-    bits = np.zeros(n, dtype=np.int64)
-    tmp = v.copy()
-    while (tmp > 0).any():
-        bits[tmp > 0] += 1
-        tmp >>= np.uint64(1)
-    max_exceptions = max(n // 8, 0)
-    b = 0
-    for cand in range(0, 65):
-        if int((bits > cand).sum()) <= max_exceptions:
-            b = cand
-            break
-    exc_mask = bits > b
-    exc_pos = np.flatnonzero(exc_mask).astype(np.uint64)
-    exc_val = v[exc_mask]
-    low = np.where(exc_mask, np.uint64(0), v)
-    if b > 0:
-        shifts = np.arange(b - 1, -1, -1, dtype=np.uint64)
-        bitmat = ((low[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.uint8)
-        packed = np.packbits(bitmat.reshape(-1)).tobytes()
-    else:
-        packed = b""
-    return (
-        bytes([b])
-        + varint_encode(np.array([len(exc_pos)], dtype=np.uint64))
-        + packed
-        + varint_encode(exc_pos)
-        + varint_encode(exc_val)
-    )
-
-
-def pfor_decode(data: bytes, count: int) -> np.ndarray:
-    if count == 0:
-        return np.zeros(0, dtype=np.uint64)
-    b = data[0]
-    n_exc = int(varint_decode(data[1:], 1)[0])
-    # varint length of n_exc field
-    off = 1
-    while data[off] & 0x80:
-        off += 1
-    off += 1
-    packed_len = (count * b + 7) // 8
-    out = np.zeros(count, dtype=np.uint64)
-    if b > 0:
-        raw = np.frombuffer(data[off : off + packed_len], dtype=np.uint8)
-        bitmat = np.unpackbits(raw)[: count * b].reshape(count, b)
-        shifts = np.arange(b - 1, -1, -1, dtype=np.uint64)
-        out = (bitmat.astype(np.uint64) << shifts[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-    off += packed_len
-    if n_exc:
-        tail = data[off:]
-        pos = varint_decode(tail, n_exc).astype(np.int64)
-        # advance past the position varints to the value varints
-        raw = np.frombuffer(tail, dtype=np.uint8)
-        ends = np.flatnonzero((raw & 0x80) == 0)
-        val_off = int(ends[n_exc - 1]) + 1
-        vals = varint_decode(tail[val_off:], n_exc)
-        out[pos] = vals
-    return out
-
-
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
     """[id0, id1-id0, id2-id1, ...] — ids must be sorted ascending unique."""
     ids = np.asarray(sorted_ids, dtype=np.uint64)
@@ -178,16 +100,7 @@ def delta_decode(deltas: np.ndarray) -> np.ndarray:
     return np.cumsum(np.asarray(deltas, dtype=np.uint64), dtype=np.uint64)
 
 
-def encode_payload(values: np.ndarray, codec: str = "varint") -> bytes:
-    return pfor_encode(values) if codec == "pfor" else varint_encode(values)
-
-
-def decode_payload(data: bytes, count: int, codec: str = "varint") -> np.ndarray:
-    return pfor_decode(data, count) if codec == "pfor" else varint_decode(data, count)
-
-
-def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
-                 codec: str = "varint") -> dict:
+def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray) -> dict:
     """One posting block -> row dict (schema FIXTURES.md §7 + inline doc_lens).
 
     doc_lens are stored inline so query-time scoring needs NO join against a
@@ -200,54 +113,44 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
         "max_doc_id": int(doc_ids[-1]),
         "max_tf": int(np.max(tfs)),
         "min_doc_len": int(np.min(doc_lens)),
-        "doc_id_deltas": encode_payload(delta_encode(doc_ids), codec),
-        "tfs": encode_payload(np.asarray(tfs, dtype=np.uint64), codec),
-        "doc_lens": encode_payload(np.asarray(doc_lens, dtype=np.uint64), codec),
+        "doc_id_deltas": varint_encode(delta_encode(doc_ids)),
+        "tfs": varint_encode(np.asarray(tfs, dtype=np.uint64)),
+        "doc_lens": varint_encode(np.asarray(doc_lens, dtype=np.uint64)),
     }
 
 
+def _block_ids(delta_bufs, ns: np.ndarray, total: int) -> np.ndarray:
+    """Doc ids of many blocks from their concatenated delta streams: one
+    varint decode, then a segmented cumsum (each block's first delta is
+    absolute, so ids_i = cumsum - running-total-at-block-start)."""
+    cs = np.cumsum(varint_decode(b"".join(delta_bufs), total), dtype=np.uint64)
+    starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
+    base = np.zeros(len(ns), dtype=np.uint64)
+    base[1:] = cs[starts[1:] - 1]
+    return cs - np.repeat(base, ns)
+
+
 def decode_blocks_concat(
-    delta_bufs: list[bytes], tf_bufs: list[bytes], dl_bufs: list[bytes],
-    n_docs: list[int], codec: str = "varint",
+    delta_bufs, tf_bufs, dl_bufs, n_docs,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode MANY blocks of one term at once.
-
-    varint: three vectorized passes — streams are concatenated and decoded
-    once; doc ids are recovered with a segmented cumsum (each block's first
-    delta is absolute, so ids_i = cumsum - running-total-at-block-start).
-    ~100x less per-block Python overhead on head terms.
-
-    pfor: blocks are self-delimiting (header + fixed-width payload), so they
-    decode per block (still numpy-vectorized within a block)."""
+    """Decode MANY blocks at once: each stream is concatenated and decoded
+    in one vectorized pass (~100x less per-block Python overhead on head
+    terms).  The buffers are any bytes-like objects; a caller holding the
+    blocks' payloads as one contiguous buffer per stream may pass it as a
+    one-element list, since only n_docs delimits the blocks."""
     ns = np.asarray(n_docs, dtype=np.int64)
     total = int(ns.sum())
     if total == 0:
         z = np.zeros(0, dtype=np.uint64)
         return z, z, z
-    if codec == "pfor":
-        ids_l, tfs_l, dls_l = [], [], []
-        for db, tb, lb, n in zip(delta_bufs, tf_bufs, dl_bufs, n_docs):
-            n = int(n)
-            ids_l.append(delta_decode(pfor_decode(db, n)))
-            tfs_l.append(pfor_decode(tb, n))
-            dls_l.append(pfor_decode(lb, n))
-        return (
-            np.concatenate(ids_l), np.concatenate(tfs_l), np.concatenate(dls_l)
-        )
-    deltas = varint_decode(b"".join(delta_bufs), total)
-    tfs = varint_decode(b"".join(tf_bufs), total)
-    dls = varint_decode(b"".join(dl_bufs), total)
-    cs = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    base = np.zeros(len(ns), dtype=np.uint64)
-    base[1:] = cs[starts[1:] - 1]
-    ids = cs - np.repeat(base, ns)
-    return ids, tfs, dls
+    return (
+        _block_ids(delta_bufs, ns, total),
+        varint_decode(b"".join(tf_bufs), total),
+        varint_decode(b"".join(dl_bufs), total),
+    )
 
 
-def decode_ids_concat(
-    delta_bufs: list[bytes], n_docs: list[int], codec: str = "varint"
-) -> np.ndarray:
+def decode_ids_concat(delta_bufs, n_docs) -> np.ndarray:
     """Doc-id-only variant of decode_blocks_concat — for terms whose score
     contribution is provably zero (idf clamp) but whose docs still count as
     candidates, tf/doc_len streams need not be decoded at all."""
@@ -255,22 +158,11 @@ def decode_ids_concat(
     total = int(ns.sum())
     if total == 0:
         return np.zeros(0, dtype=np.uint64)
-    if codec == "pfor":
-        return np.concatenate(
-            [delta_decode(pfor_decode(db, int(n))) for db, n in zip(delta_bufs, n_docs)]
-        )
-    deltas = varint_decode(b"".join(delta_bufs), total)
-    cs = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    base = np.zeros(len(ns), dtype=np.uint64)
-    base[1:] = cs[starts[1:] - 1]
-    return cs - np.repeat(base, ns)
+    return _block_ids(delta_bufs, ns, total)
 
 
-def decode_block(row, codec: str = "varint") -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """row with (n_docs, doc_id_deltas, tfs, doc_lens) -> (doc_ids, tfs, doc_lens)."""
-    n = int(row["n_docs"])
-    ids = delta_decode(decode_payload(bytes(row["doc_id_deltas"]), n, codec))
-    tfs = decode_payload(bytes(row["tfs"]), n, codec)
-    dls = decode_payload(bytes(row["doc_lens"]), n, codec)
-    return ids, tfs, dls
+    return decode_blocks_concat(
+        [row["doc_id_deltas"]], [row["tfs"]], [row["doc_lens"]], [row["n_docs"]]
+    )

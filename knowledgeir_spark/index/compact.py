@@ -8,7 +8,7 @@ term_stats / field_stats to cover the delta docs.
 
 Implementation: PER-BUCKET incremental merge.  Deltas share the base's
 term-hash bucket partitioning, so only buckets with delta rows are decoded
-back to long form (the inverse mapInPandas of the builder; the base scan is
+back to long form (the inverse mapInArrow of the builder; the base scan is
 partition-pruned to those buckets) and re-blocked; untouched bucket dirs
 carry over as hardlinks (an Iceberg partition-level replace on a real
 cluster), and term_stats rows for untouched buckets carry over via an
@@ -44,48 +44,60 @@ from __future__ import annotations
 import glob
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.lineage import StageManager
-from .build import IndexConfig, apply_block_encoder, term_bucket_expr
-from .codec import decode_payload, delta_decode
+from .build import IndexConfig, apply_block_encoder, check_layout, term_bucket_expr
+from .codec import decode_blocks_concat
 
 _LONG_FORM = "doc_id long, term string, tf long, doc_len long"
 
 
-def decode_postings_df(blocks: DataFrame, codec: str = "varint") -> DataFrame:
-    """Inverse of the block builder: block rows -> (doc_id, term, tf, doc_len)."""
+def _payload_stream(col):
+    """The blocks' payloads of one Arrow binary column as one contiguous
+    buffer (the column's data buffer between its first and last offset)."""
+    import pyarrow as pa
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_l, terms_l, tfs_l, dls_l = [], [], [], []
-            for row in pdf.itertuples():
-                n = int(row.n_docs)
-                ids = delta_decode(decode_payload(bytes(row.doc_id_deltas), n, codec))
-                tfs = decode_payload(bytes(row.tfs), n, codec)
-                dls = decode_payload(bytes(row.doc_lens), n, codec)
-                ids_l.append(ids.astype(np.int64))
-                tfs_l.append(tfs.astype(np.int64))
-                dls_l.append(dls.astype(np.int64))
-                terms_l.extend([row.term] * n)
-            if ids_l:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(ids_l),
-                        "term": terms_l,
-                        "tf": np.concatenate(tfs_l),
-                        "doc_len": np.concatenate(dls_l),
-                    }
-                )
+    if not len(col):
+        return b""
+    _, off_buf, data = col.buffers()
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(off_buf, dtype=width)
+    return memoryview(data)[offs[col.offset]:offs[col.offset + len(col)]]
+
+
+def decode_postings_df(blocks: DataFrame) -> DataFrame:
+    """Inverse of the block builder: block rows -> (doc_id, term, tf, doc_len).
+    mapInArrow: each batch's blocks decode in one decode_blocks_concat call,
+    and each block's term repeats n_docs times."""
+    import pyarrow as pa
+
+    def run(batches):
+        for batch in batches:
+            ns = batch.column("n_docs").to_numpy().astype(np.int64)
+            streams = [
+                [_payload_stream(batch.column(c))]
+                for c in ("doc_id_deltas", "tfs", "doc_lens")
+            ]
+            ids, tfs, dls = decode_blocks_concat(*streams, ns)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids.astype(np.int64)),
+                    batch.column("term").take(
+                        pa.array(np.repeat(np.arange(len(ns)), ns))
+                    ),
+                    pa.array(tfs.astype(np.int64)),
+                    pa.array(dls.astype(np.int64)),
+                ],
+                names=["doc_id", "term", "tf", "doc_len"],
+            )
 
     return blocks.select(
         "term", "n_docs", "doc_id_deltas", "tfs", "doc_lens"
-    ).mapInPandas(run, _LONG_FORM)
+    ).mapInArrow(run, _LONG_FORM)
 
 
 def _heal_interrupted_swap(mgr: StageManager) -> None:
@@ -227,7 +239,9 @@ def defrag(
     O(delta) per batch, and a bucket is defragmented only when its file
     count crosses the threshold (Lucene's tiered-merge policy shape).
     Crash-safe via the same stage-commit + swap + heal protocol as
-    compact()."""
+    compact().  Raises ValueError when `config` disagrees with the index's
+    layout (check_layout)."""
+    check_layout(index_dir, config)
     mgr = StageManager(index_dir)
     _heal_interrupted_swap(mgr)
     _swap_compacted_stages(mgr)  # install leftovers of a crashed prior run
@@ -250,7 +264,7 @@ def defrag(
     base = spark.read.parquet(mgr.stage_path("postings")).filter(
         F.col("bucket").isin(list(buckets))
     )
-    long_form = decode_postings_df(base, config.codec)
+    long_form = decode_postings_df(base)
 
     def write_postings(tmp: str):
         salted = long_form.select(
@@ -312,9 +326,13 @@ def compact(
     (min_pending_deltas x batch interval) — pick the knob from the
     freshness SLA.  Crash-window deltas (swap committed, stats commit
     lost) always heal immediately regardless of the policy.
+
+    Raises ValueError when `config` disagrees with the index's layout
+    (check_layout).
     """
     if mode not in ("merge", "append"):
         raise ValueError(f"unknown compaction mode {mode!r}")
+    check_layout(index_dir, config)
     mgr = StageManager(index_dir)
     _heal_interrupted_swap(mgr)
 
@@ -387,7 +405,7 @@ def compact(
 
         def write_term_stats_append(tmp: str):
             parts = [
-                decode_postings_df(spark.read.parquet(d), config.codec)
+                decode_postings_df(spark.read.parquet(d))
                 for d in to_compact
             ]
             dl = parts[0]
@@ -442,9 +460,9 @@ def compact(
         base = spark.read.parquet(mgr.stage_path("postings"))
         if touched_ids is not None:
             base = base.filter(F.col("bucket").isin(touched_ids))
-        parts = [decode_postings_df(base, config.codec)]
+        parts = [decode_postings_df(base)]
         for d in to_compact:
-            parts.append(decode_postings_df(spark.read.parquet(d), config.codec))
+            parts.append(decode_postings_df(spark.read.parquet(d)))
         long_form = parts[0]
         for p in parts[1:]:
             long_form = long_form.unionByName(p)

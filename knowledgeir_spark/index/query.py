@@ -40,8 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topk import topk_per_query
-from .build import term_bucket_py
-from .codec import decode_blocks_concat, decode_ids_concat, decode_payload, delta_decode
+from .build import check_codec, term_bucket_py
+from .codec import decode_blocks_concat, decode_ids_concat
 from . import scoring_np as S
 
 _RANK_Q = 1e9
@@ -61,7 +61,6 @@ def _score_group(
     model: str,
     k: int,
     prune: bool,
-    codec: str = "varint",
 ) -> pd.DataFrame:
     """One (qid, salt) group -> local top-k (qid, doc_id, score)."""
     qid = pdf["qid"].iat[0]
@@ -79,7 +78,6 @@ def _score_group(
             [bytes(x) for x in g["tfs"]],
             [bytes(x) for x in g["doc_lens"]],
             g["n_docs"].tolist(),
-            codec=codec,
         )
         id_by[term] = ids.astype(np.int64)
         tf_raw[term] = tfs.astype(np.float64)
@@ -155,7 +153,6 @@ def _score_group_bmw(
     n: float,
     avgdl: float,
     k: int,
-    codec: str = "varint",
     init_batch: int = 256,
 ) -> pd.DataFrame:
     """Cursor-style Block-Max WAND at DECODE granularity (bm25 only) — the
@@ -212,13 +209,13 @@ def _score_group_bmw(
     def decode_into_cache(d: dict, jj: int):
         c = d["cache"]
         if jj not in c:
-            nd = int(d["nd"][jj])
+            ids, tfs, dls = decode_blocks_concat(
+                [d["deltas"][jj]], [d["tfs"][jj]], [d["dls"][jj]],
+                [d["nd"][jj]],
+            )
             c[jj] = (
-                delta_decode(
-                    decode_payload(bytes(d["deltas"][jj]), nd, codec)
-                ).astype(np.int64),
-                decode_payload(bytes(d["tfs"][jj]), nd, codec).astype(np.float64),
-                decode_payload(bytes(d["dls"][jj]), nd, codec).astype(np.float64),
+                ids.astype(np.int64), tfs.astype(np.float64),
+                dls.astype(np.float64),
             )
         return c[jj]
 
@@ -386,7 +383,6 @@ def _score_group_dense(
     n: float,
     avgdl: float,
     k: int,
-    codec: str,
     id_space: int,
     cache: DecodedTermCache | None = None,
 ) -> pd.DataFrame:
@@ -422,7 +418,6 @@ def _score_group_dense(
             [bytes(x) for x in g["tfs"]],
             [bytes(x) for x in g["doc_lens"]],
             g["n_docs"].tolist(),
-            codec=codec,
         )
         return ids.astype(np.int64), tfs, dls
 
@@ -520,7 +515,7 @@ def _score_group_dense(
             qid=qid, n_scored_terms=1, n_essential=1,
             blocks_total=len(g), blocks_decoded=pos, cache_hit=cache_hit,
         )
-        return _dense_topk(qid, score, seen, deferred, k, codec)
+        return _dense_topk(qid, score, seen, deferred, k)
 
     # SELECTION (MaxScore at block-metadata granularity — the mid-idf
     # head-term lever): decode terms in descending bound order; once the
@@ -638,7 +633,7 @@ def _score_group_dense(
             tfs.astype(np.float64), float(t["df"]), dls.astype(np.float64),
             n, avgdl,
         )
-    return _dense_topk(qid, score, seen, deferred, k, codec)
+    return _dense_topk(qid, score, seen, deferred, k)
 
 
 def _dense_topk(
@@ -647,7 +642,6 @@ def _dense_topk(
     seen: np.ndarray,
     deferred: list,
     k: int,
-    codec: str,
 ) -> pd.DataFrame:
     """Shared dense-scorer tail: zero-idf candidacy fill, bm25 finalize,
     quantized-key pre-selection, top-k."""
@@ -664,7 +658,6 @@ def _dense_topk(
             for g in deferred:
                 ids = decode_ids_concat(
                     [bytes(x) for x in g["doc_id_deltas"]], g["n_docs"].tolist(),
-                    codec,
                 ).astype(np.int64)
                 seen[ids] = True
             cand = np.flatnonzero(seen)
@@ -693,7 +686,6 @@ def _score_group_bool(
     avgdl: float,
     model: str,
     k: int,
-    codec: str,
     excl_terms: dict[str, set[str]] | None = None,
     cache: "DecodedTermCache | None" = None,
     return_all: bool = False,
@@ -747,7 +739,6 @@ def _score_group_bool(
             [bytes(x) for x in g["tfs"]],
             [bytes(x) for x in g["doc_lens"]],
             g["n_docs"].tolist(),
-            codec=codec,
         )
         ids = ids.astype(np.int64)
         order = np.argsort(ids, kind="stable")
@@ -925,7 +916,7 @@ class IndexReader:
         with open(os.path.join(index_dir, "field_stats.json")) as f:
             self.field_stats = json.load(f)
         self.n_buckets = int(self.field_stats["n_buckets"])
-        self.codec = self.field_stats.get("codec", "varint")
+        check_codec(self.field_stats, index_dir)
         # "impact" layouts have overlapping per-block doc-id ranges, which
         # invalidates the decode-level WAND's disjointness assumption — the
         # reader gates that path on the recorded layout
@@ -1085,15 +1076,12 @@ class IndexReader:
         )
         joined = joined.repartition(parts, "qid", "salt")
 
-        codec = self.codec
-
         def apply_fn(pdf):
             if mode == "and":
                 return _score_group_bool(
-                    pdf, q_terms, n, avgdl, model, k, codec,
-                    excl_terms=excl_map,
+                    pdf, q_terms, n, avgdl, model, k, excl_terms=excl_map,
                 )
-            return _score_group(pdf, q_terms, n, avgdl, model, k, prune, codec)
+            return _score_group(pdf, q_terms, n, avgdl, model, k, prune)
 
         local = joined.groupBy("qid", "salt").applyInPandas(
             apply_fn, "qid string, doc_id long, score double"
@@ -1237,7 +1225,6 @@ class IndexReader:
                 [bytes(x) for x in g["tfs"]],
                 [bytes(x) for x in g["doc_lens"]],
                 g["n_docs"].tolist(),
-                codec=self.codec,
             )
             self.decode_cache.put(term, (ids.astype(np.int64), tfs, dls))
             warmed += 1
@@ -1298,7 +1285,6 @@ class IndexReader:
                         decode_ids_concat(
                             [bytes(x) for x in sub["doc_id_deltas"]],
                             sub["n_docs"].tolist(),
-                            self.codec,
                         ).astype(np.int64)
                     )
                 if per_term is None:
@@ -1317,7 +1303,6 @@ class IndexReader:
                     decode_ids_concat(
                         [bytes(x) for x in sub["doc_id_deltas"]],
                         sub["n_docs"].tolist(),
-                        self.codec,
                     ).astype(np.int64)
                 )
             for value, cnt in self._facet_store.counts(facet, ids):
@@ -1459,7 +1444,7 @@ class IndexReader:
             sub = sub.assign(qid=qid)
             if mode == "and":
                 res = _score_group_bool(
-                    sub, q_terms, n, avgdl, model, k, self.codec,
+                    sub, q_terms, n, avgdl, model, k,
                     excl_terms=excl_map, cache=self.decode_cache,
                     return_all=_all_matches,
                     cand_init=(cand_init or {}).get(qid),
@@ -1475,16 +1460,16 @@ class IndexReader:
             id_space = int(sub["max_doc_id"].max()) + 1
             if prune and model == "bm25" and id_space <= self._DENSE_MAX_DOCS:
                 res = _score_group_dense(
-                    sub, q_terms, n, avgdl, k, self.codec, id_space,
+                    sub, q_terms, n, avgdl, k, id_space,
                     cache=self.decode_cache,
                 )
             elif (
                 prune and model == "bm25" and len(sub) >= _BMW_MIN_BLOCKS
                 and self.block_order == "docid"
             ):
-                res = _score_group_bmw(sub, q_terms, n, avgdl, k, self.codec)
+                res = _score_group_bmw(sub, q_terms, n, avgdl, k)
             else:
-                res = _score_group(sub, q_terms, n, avgdl, model, k, prune, self.codec)
+                res = _score_group(sub, q_terms, n, avgdl, model, k, prune)
             for rank, row in enumerate(res.itertuples(), start=1):
                 out.append((qid, int(row.doc_id), float(row.score), rank))
         return out

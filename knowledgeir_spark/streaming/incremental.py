@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_terms
-from ..index.build import IndexConfig, apply_block_encoder, term_bucket_expr
+from ..index.build import IndexConfig, apply_block_encoder, check_layout
 
 
 def _delta_writer(index_root: str, config: IndexConfig):
@@ -59,7 +59,10 @@ def incremental_index(
     config: IndexConfig = IndexConfig(),
 ) -> None:
     """Process all currently-available new files into index deltas, then stop.
-    Re-invocable: the checkpoint makes it resume from unseen files only."""
+    Re-invocable: the checkpoint makes it resume from unseen files only.
+    Raises ValueError when `config` disagrees with the base index's layout
+    (check_layout)."""
+    check_layout(index_root, config)
     stream = spark.readStream.schema(schema).parquet(input_path)
     q = (
         stream.writeStream.foreachBatch(_delta_writer(index_root, config))

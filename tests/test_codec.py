@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -56,144 +57,88 @@ def test_block_roundtrip():
 
 
 def test_truncated_stream_raises():
-    import pytest
-
     data = varint_encode(np.array([1, 2, 3], dtype=np.uint64))
     with pytest.raises(ValueError):
         varint_decode(data, 4)
 
 
-def test_vectorized_builder_byte_identical_to_per_block(spark, webpages_pdf):
-    """The whole-partition vectorized varint encoder must produce
-    byte-identical block rows to the per-block reference path (same order,
-    same payloads, same stats) — it is a pure hot-loop rewrite."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
+def _sorted_postings(seed: int = 11) -> dict:
+    """Synthetic long-form postings sorted by (term, salt, doc_id), shaped
+    like a Zipf vocabulary: t00 has 900 postings split over two salts, so
+    its groups are several batches long; tf in 1..5 leaves many ties."""
+    rng = np.random.default_rng(seed)
+    terms, ids = [], []
+    for i in range(40):
+        df = max(1, 900 // (i + 1))
+        terms += [f"t{i:02d}"] * df
+        ids.append(np.sort(rng.choice(2000, size=df, replace=False)))
+    ids = np.concatenate(ids).astype(np.int64)
+    n = len(ids)
+    return {
+        "doc_id": ids,
+        "term": np.array(terms, dtype=object),
+        "tf": rng.integers(1, 6, n).astype(np.int32),
+        "doc_len": rng.integers(5, 400, n).astype(np.int32),
+        "salt": ids // 1024,
+    }
 
-    from knowledgeir_spark.functions.text import doc_terms
-    from knowledgeir_spark.index.build import _make_block_builder
-    from knowledgeir_spark.index.codec import encode_block
 
-    pdf_src = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
-    docs = spark.createDataFrame(pdf_src[["doc_id", "text"]])
-    pdf = (
-        doc_terms(docs)
-        .withColumn("salt", (F.col("doc_id") / 64).cast("long"))
-        .withColumn("bucket", F.lit(3))
-        .orderBy("term", "salt", "doc_id")
-        .toPandas()
-    )
-    fast = pd.concat(list(_make_block_builder(16, "varint")(iter([pdf]))))
+def _groups(cols: dict) -> list[tuple[int, int]]:
+    """[start, end) row ranges of the (term, salt) groups."""
+    keys = list(zip(cols["term"], cols["salt"]))
+    starts = [i for i in range(len(keys)) if i == 0 or keys[i] != keys[i - 1]]
+    return list(zip(starts, starts[1:] + [len(keys)]))
+
+
+def _per_block_reference(cols: dict, block_size: int, block_order: str) -> list:
+    """encode_block per block; impact order = tf desc, doc_id asc within
+    each (term, salt) group, then each block re-sorted by doc_id."""
     rows = []
-    for (term, salt, bucket), g in pdf.groupby(
-        ["term", "salt", "bucket"], sort=False
-    ):
-        ids = g["doc_id"].to_numpy(np.int64).astype(np.uint64)
-        tfs = g["tf"].to_numpy(np.int64).astype(np.uint64)
-        dls = g["doc_len"].to_numpy(np.int64).astype(np.uint64)
-        for bi, start in enumerate(range(0, len(ids), 16)):
-            blk = encode_block(
-                ids[start:start + 16], tfs[start:start + 16],
-                dls[start:start + 16],
-            )
-            blk.update(term=term, salt=int(salt), bucket=3, block_id=bi,
-                       sum_tf=int(tfs[start:start + 16].sum()))
+    for s, e in _groups(cols):
+        ids = cols["doc_id"][s:e].astype(np.uint64)
+        tfs = cols["tf"][s:e].astype(np.uint64)
+        dls = cols["doc_len"][s:e].astype(np.uint64)
+        if block_order == "impact":
+            o = np.lexsort((ids, -tfs.astype(np.int64)))
+            ids, tfs, dls = ids[o], tfs[o], dls[o]
+        for bi, b in enumerate(range(0, len(ids), block_size)):
+            sl = slice(b, b + block_size)
+            o = np.argsort(ids[sl], kind="stable")
+            blk = encode_block(ids[sl][o], tfs[sl][o], dls[sl][o])
+            blk.update(term=cols["term"][s], salt=int(cols["salt"][s]), block_id=bi,
+                       sum_tf=int(tfs[sl].sum()))
             rows.append(blk)
-    slow = pd.DataFrame(rows)[list(fast.columns)]
-    assert len(fast) == len(slow) > 50
-    for c in fast.columns:
-        a, b = fast[c].tolist(), slow[c].tolist()
-        if c in ("doc_id_deltas", "tfs", "doc_lens"):
-            a, b = [bytes(x) for x in a], [bytes(x) for x in b]
-        assert a == b, c
+    return rows
 
 
-def test_vectorized_builder_byte_identical_under_impact_order(spark, webpages_pdf):
-    """Impact reorder feeds BOTH encoder paths the same permuted rows, so
-    the vectorized varint path must stay byte-identical to the per-block
-    reference path under block_order='impact' too."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from knowledgeir_spark.functions.text import doc_terms
-    from knowledgeir_spark.index.build import _impact_reorder, _make_block_builder
-    from knowledgeir_spark.index.codec import encode_block
-
-    pdf_src = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
-    docs = spark.createDataFrame(pdf_src[["doc_id", "text"]])
-    pdf = (
-        doc_terms(docs)
-        .withColumn("salt", (F.col("doc_id") / 64).cast("long"))
-        .withColumn("bucket", F.lit(3))
-        .orderBy("term", "salt", "doc_id")
-        .toPandas()
-    )
-    fast = pd.concat(
-        list(_make_block_builder(16, "varint", "impact")(iter([pdf])))
-    )
-    ref = _impact_reorder(pdf, 16)
-    rows = []
-    for (term, salt, bucket), g in ref.groupby(
-        ["term", "salt", "bucket"], sort=False
-    ):
-        ids = g["doc_id"].to_numpy(np.int64).astype(np.uint64)
-        tfs = g["tf"].to_numpy(np.int64).astype(np.uint64)
-        dls = g["doc_len"].to_numpy(np.int64).astype(np.uint64)
-        for bi, start in enumerate(range(0, len(ids), 16)):
-            blk = encode_block(
-                ids[start:start + 16], tfs[start:start + 16],
-                dls[start:start + 16],
-            )
-            blk.update(term=term, salt=int(salt), bucket=int(bucket),
-                       block_id=bi, sum_tf=int(tfs[start:start + 16].sum()))
-            rows.append(blk)
-    slow = pd.DataFrame(rows)[list(fast.columns)]
-    assert len(fast) == len(slow)
-    for c in fast.columns:
-        assert list(fast[c]) == list(slow[c]), c
-    # every block's ids ascend (delta-codable) and per-group max_tf declines
-    grp = slow.groupby(["term", "salt"])["max_tf"]
-    assert (grp.apply(lambda s: (s.to_numpy()[:-1] >= s.to_numpy()[1:]).all())).all()
-
-
-def test_arrow_builder_byte_identical_to_pandas(spark, webpages_pdf):
-    """The mapInArrow block builder (round-6 hot-path rewrite for the
-    default varint/docid layout) must produce byte-identical block rows to
-    the pandas builder, including across carry-spanning batch boundaries."""
-    import numpy as np
+@pytest.mark.parametrize("block_order", ["docid", "impact"])
+def test_arrow_builder_byte_identical_to_per_block(block_order):
+    """The mapInArrow block builder (whole-partition vectorized varint
+    encode, impact permutation applied to the numpy columns) must produce
+    exactly the per-block encode_block rows, including for (term, salt)
+    groups carried across several 257-row batches and an empty batch."""
     import pyarrow as pa
-    from pyspark.sql import functions as F
 
-    from knowledgeir_spark.functions.text import doc_terms
-    from knowledgeir_spark.index.build import (
-        _make_block_builder,
-        _make_block_builder_arrow,
-    )
+    from knowledgeir_spark.index.build import _make_block_builder_arrow
 
-    pdf_src = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
-    docs = spark.createDataFrame(pdf_src[["doc_id", "text"]])
-    pdf = (
-        doc_terms(docs)
-        .withColumn("salt", (F.col("doc_id") / 64).cast("long"))
-        .withColumn("bucket", F.lit(3).cast("int"))
-        .orderBy("term", "salt", "doc_id")
-        .toPandas()
-    )
-    import pandas as pd
-
-    ref = pd.concat(list(_make_block_builder(16, "varint")(iter([pdf]))))
-    # feed the arrow builder the same rows split into small batches so the
-    # carry path (group spanning a batch boundary) is exercised
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    cols = _sorted_postings()
+    tbl = pa.table(cols)
     batches = tbl.to_batches(max_chunksize=257)
-    got_batches = list(_make_block_builder_arrow(16)(iter(batches)))
-    got = pa.Table.from_batches(got_batches).to_pandas()
-    assert list(got.columns) == list(ref.columns)
-    assert len(got) == len(ref) > 50
-    for c in ref.columns:
-        a, b = got[c].tolist(), ref[c].tolist()
-        if c in ("doc_id_deltas", "tfs", "doc_lens"):
-            a, b = [bytes(x) for x in a], [bytes(x) for x in b]
-        assert a == b, c
+    batches.insert(2, pa.RecordBatch.from_pylist([], schema=tbl.schema))
+    # the carry path must see a group spanning three or more batches
+    assert max((e - 1) // 257 - s // 257 for s, e in _groups(cols)) >= 2
+
+    out = pa.Table.from_batches(
+        list(_make_block_builder_arrow(16, block_order)(iter(batches)))
+    ).to_pylist()
+    ref = _per_block_reference(cols, 16, block_order)
+    assert len(out) == len(ref) > 100
+    for got, want in zip(out, ref):
+        assert got == {c: want[c] for c in got}, (got["term"], got["block_id"])
+    if block_order == "impact":
+        by_group: dict = {}
+        for r in out:
+            by_group.setdefault((r["term"], r["salt"]), []).append(r["max_tf"])
+        assert all(
+            a >= b for mts in by_group.values() for a, b in zip(mts, mts[1:])
+        )

@@ -523,3 +523,38 @@ def test_append_fold_batching_policy(spark, webpages_pdf, tmp_path):
     # idempotent + policy no-op afterwards
     assert compact(spark, idx_dir, CFG, mode="append",
                    min_pending_deltas=3) == {}
+
+
+def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
+    """incremental_index, compact and defrag write blocks under the caller's
+    IndexConfig, so one whose tokenizer, block_size, salt_range or
+    block_order disagrees with the index's field_stats.json is refused
+    before anything is written."""
+    import glob
+
+    from knowledgeir_spark.index.compact import defrag
+
+    idx_dir = str(tmp_path / "idx_layout")
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    build_index(spark, spark.createDataFrame(pdf.iloc[:60][["doc_id", "text"]]),
+                idx_dir, CFG, input_token="base60")
+    inp = str(tmp_path / "arr_layout")
+    spark.createDataFrame(pdf.iloc[60:80][["doc_id", "text"]]).write.parquet(inp)
+
+    def other(**kw):
+        return IndexConfig(**{**CFG.fingerprint_dict(), **kw})
+
+    with pytest.raises(ValueError, match="tokenizer"):
+        incremental_index(spark, inp, idx_dir, "doc_id long, text string",
+                          other(tokenizer="simple"))
+    assert not glob.glob(f"{idx_dir}/deltas/batch_*")
+    with pytest.raises(ValueError, match="block_order"):
+        defrag(spark, idx_dir, other(block_order="impact"), buckets=[0])
+    with pytest.raises(ValueError, match="block_size"):
+        compact(spark, idx_dir, other(block_size=32))
+    with pytest.raises(ValueError, match="salt_range"):
+        compact(spark, idx_dir, other(salt_range=128), mode="append")
+    # the matching config still folds
+    incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
+    assert compact(spark, idx_dir, CFG, mode="append")
+    _assert_matches_oracle(spark, idx_dir, pdf.iloc[:80])

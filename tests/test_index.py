@@ -179,19 +179,18 @@ def test_bmw_skips_block_decodes():
     n, avgdl, k = 100000.0, 20.0, 5
 
     n_decoded = {"n": 0}
-    orig = Q.decode_payload
+    orig = Q.decode_blocks_concat
 
     def counting(*a, **kw):
-        n_decoded["n"] += 1
+        n_decoded["n"] += len(a[3])  # blocks in this decode call
         return orig(*a, **kw)
 
-    Q.decode_payload = counting
+    Q.decode_blocks_concat = counting
     try:
-        res = Q._score_group_bmw(pdf, q_terms, n, avgdl, k, "varint",
-                                 init_batch=16)
+        res = Q._score_group_bmw(pdf, q_terms, n, avgdl, k, init_batch=16)
     finally:
-        Q.decode_payload = orig
-    decoded_blocks = n_decoded["n"] / 3  # 3 payloads per block
+        Q.decode_blocks_concat = orig
+    decoded_blocks = n_decoded["n"]
     assert decoded_blocks < len(pdf) * 0.2, (decoded_blocks, len(pdf))
 
     brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
@@ -232,7 +231,7 @@ def test_dense_scorer_matches_union_scorer():
     ]}
     n, avgdl = 1000.0, 18.0
     for k in (5, 7, 50):  # 50 > positive-score docs -> zero-tie fallback
-        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, "varint", 1000)
+        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 1000)
         brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
         assert list(dense["doc_id"]) == list(brute["doc_id"]), k
         assert np.allclose(dense["score"], brute["score"]), k
@@ -270,7 +269,7 @@ def test_dense_scorer_maxscore_skips_blocks():
     ]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, "varint", 100001)
+    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 100001)
     stats = dict(Q._LAST_DENSE_STATS)
     assert stats["n_essential"] == 1, stats
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.2, stats
@@ -304,7 +303,7 @@ def test_dense_scorer_maxscore_no_skip_when_unsafe():
         {"term": "gamma", "term_idx": 2, "q_tf": 1, "df": 1000.0},
     ]}
     n, avgdl, k = 10000.0, 12.0, 10
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, "varint", 3000)
+    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 3000)
     stats = dict(Q._LAST_DENSE_STATS)
     assert stats["blocks_decoded"] == stats["blocks_total"], stats
     brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
@@ -339,7 +338,7 @@ def test_dense_scorer_single_term_block_cut():
     q_terms = {"1": [{"term": "solo", "term_idx": 0, "q_tf": 1, "df": 20000.0}]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, "varint", 40000)
+    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 40000)
     stats = dict(Q._LAST_DENSE_STATS)
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.5, stats
 
@@ -388,24 +387,23 @@ def test_prewarm_cache_and_identical_results(spark, built, queries_pdf):
     assert again["terms_warmed"] == 0
 
 
+@pytest.fixture(scope="module")
+def built_impact(spark, built, tmp_path_factory):
+    """The `built` corpus under block_order='impact'."""
+    idx_dir = str(tmp_path_factory.mktemp("index_impact"))
+    cfg = IndexConfig(**{**CFG.fingerprint_dict(), "block_order": "impact"})
+    build_index(spark, built["docs"], idx_dir, cfg, input_token="webpages300")
+    return idx_dir
+
+
 def test_impact_layout_rank_identical_and_discriminative(
-    spark, built, queries_pdf, tmp_path_factory
+    spark, built, built_impact, queries_pdf
 ):
     """block_order='impact' must return EXACTLY the docid layout's results
     (both paths, all queries) while making block score bounds strictly
     decline within each (term, salt) group — the property that lets the
     serving bound-cut skip blocks on Zipf corpora."""
-    import numpy as np
-
-    from knowledgeir_spark.index.build import IndexConfig
-    from knowledgeir_spark.index.query import IndexReader
-
-    idx_dir = str(tmp_path_factory.mktemp("index_impact"))
-    pdf = built["pdf"]
-    docs = spark.createDataFrame(pdf[["doc_id", "text"]])
-    cfg = IndexConfig(**{**CFG.fingerprint_dict(), "block_order": "impact"})
-    build_index(spark, docs, idx_dir, cfg, input_token="webpages300")
-
+    idx_dir = built_impact
     rd_i = IndexReader(spark, idx_dir)
     assert rd_i.block_order == "impact"
     rd_d = IndexReader(spark, built["idx_dir"])
@@ -438,6 +436,70 @@ def test_impact_layout_rank_identical_and_discriminative(
         assert all(mt[i] >= mt[i + 1] for i in range(len(mt) - 1)), mt
         declines += int(len(mt) > 1 and mt[0] > mt[-1])
     assert declines > 0  # bounds actually discriminate, not just equal
+
+
+def _edge_queries(oracle) -> list[tuple[str, str]]:
+    vocab = sorted(oracle.postings)
+    return [
+        ("empty", ""),
+        ("blank", " \t  "),
+        ("oov", "zzqxjv qqvvkw"),
+        ("stopwords", "the of and a"),
+        ("punct", "!!! ... ,;: ??"),
+        ("long", " ".join((vocab * 200)[:200])),
+        ("repeat", "web web web page"),
+    ]
+
+
+@pytest.mark.parametrize("layout", ["docid", "impact"])
+def test_edge_queries_match_oracle(spark, built, built_impact, layout):
+    """Empty, blank, OOV-only, stopword-only, punctuation-only, 200-term and
+    repeated-term queries, and an empty query list: search_local == search
+    == oracle on both block layouts."""
+    rd = IndexReader(spark, built_impact if layout == "impact" else built["idx_dir"])
+    o = built["oracle"]
+    queries = _edge_queries(o)
+    assert rd.search_local([], k=10) == []
+    assert rd.search([], k=10).collect() == []
+
+    local: dict[str, list] = {}
+    for qid, doc_id, score, rank in rd.search_local(queries, k=10):
+        local.setdefault(qid, []).append((rank, doc_id, score))
+    dist: dict[str, list] = {}
+    for r in rd.search(queries, k=10).collect():
+        dist.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for qid, qtext in queries:
+        expected = o.topk(qtext, k=10)
+        for got in (local, dist):
+            have = sorted(got.get(qid, []))
+            assert [d for _, d, _ in have] == [d for d, _ in expected], qid
+            assert [s for _, _, s in have] == pytest.approx(
+                [s for _, s in expected], abs=1e-6
+            ), qid
+    assert local["long"] and local["repeat"]
+
+
+def test_reader_refuses_non_varint_index(spark, built, tmp_path):
+    """An index whose field_stats.json records another posting codec (a
+    pfor index from before the format went varint-only) is refused with a
+    rebuild message, by readers and by maintenance calls alike."""
+    import json
+    import shutil
+
+    from knowledgeir_spark.index.compact import compact
+
+    idx = str(tmp_path / "pfor_idx")
+    shutil.copytree(built["idx_dir"], idx)
+    fs_path = f"{idx}/field_stats.json"
+    with open(fs_path) as f:
+        fs = json.load(f)
+    fs["codec"] = "pfor"
+    with open(fs_path, "w") as f:
+        json.dump(fs, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        IndexReader(spark, idx)
+    with pytest.raises(ValueError, match="rebuild"):
+        compact(spark, idx, CFG)
 
 
 def test_dense_scorer_candidate_filter_narrows_fillin():
@@ -477,7 +539,7 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
 
     decoded = {}
     for k in (3, 10):
-        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, "varint",
+        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k,
                                      100001)
         decoded[k] = dict(Q._LAST_DENSE_STATS)["blocks_decoded"]
         brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
