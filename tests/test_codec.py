@@ -142,3 +142,79 @@ def test_arrow_builder_byte_identical_to_per_block(block_order):
         assert all(
             a >= b for mts in by_group.values() for a, b in zip(mts, mts[1:])
         )
+
+
+def _webpage_postings(spark, webpages_pdf):
+    """doc_terms of the webpage fixture as a pandas frame sorted by
+    (term, salt, doc_id), the layout apply_block_encoder feeds the builder."""
+    from pyspark.sql import functions as F
+
+    from knowledgeir_spark.functions.text import doc_terms
+
+    pdf_src = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    docs = spark.createDataFrame(pdf_src[["doc_id", "text"]])
+    return (
+        doc_terms(docs)
+        .withColumn("salt", (F.col("doc_id") / 64).cast("long"))
+        .orderBy("term", "salt", "doc_id")
+        .toPandas()
+    )
+
+
+def test_vectorized_builder_byte_identical_to_per_block(spark, webpages_pdf):
+    """The whole-partition vectorized varint encoder, given real doc_terms
+    output as one batch, must produce byte-identical block rows to the
+    per-block encode_block reference (same order, payloads and stats)."""
+    import pyarrow as pa
+
+    from knowledgeir_spark.index.build import _make_block_builder_arrow
+
+    pdf = _webpage_postings(spark, webpages_pdf)
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    out = pa.Table.from_batches(
+        list(_make_block_builder_arrow(16)(iter(tbl.to_batches())))
+    ).to_pylist()
+    cols = {c: pdf[c].to_numpy() for c in ("doc_id", "term", "tf", "doc_len", "salt")}
+    ref = _per_block_reference(cols, 16, "docid")
+    assert len(out) == len(ref) > 50
+    for got, want in zip(out, ref):
+        assert got == {c: want[c] for c in got}, (got["term"], got["block_id"])
+
+
+def test_arrow_builder_byte_identical_to_pandas(spark, webpages_pdf):
+    """The mapInArrow block builder, fed 257-row batches so (term, salt)
+    groups span batch boundaries, must produce byte-identical block rows to
+    a pandas groupby reference that encodes each group block by block."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from knowledgeir_spark.index.build import _make_block_builder_arrow
+
+    pdf = _webpage_postings(spark, webpages_pdf)
+    rows = []
+    for (term, salt), g in pdf.groupby(["term", "salt"], sort=False):
+        ids = g["doc_id"].to_numpy(np.int64).astype(np.uint64)
+        tfs = g["tf"].to_numpy(np.int64).astype(np.uint64)
+        dls = g["doc_len"].to_numpy(np.int64).astype(np.uint64)
+        for bi, start in enumerate(range(0, len(ids), 16)):
+            sl = slice(start, start + 16)
+            blk = encode_block(ids[sl], tfs[sl], dls[sl])
+            blk.update(term=term, salt=int(salt), block_id=bi,
+                       sum_tf=int(tfs[sl].sum()))
+            rows.append(blk)
+    ref = pd.DataFrame(rows)
+
+    batches = pa.Table.from_pandas(pdf, preserve_index=False).to_batches(
+        max_chunksize=257
+    )
+    assert len(batches) > 2
+    got = pa.Table.from_batches(
+        list(_make_block_builder_arrow(16)(iter(batches)))
+    ).to_pandas()
+    assert sorted(got.columns) == sorted(ref.columns)
+    assert len(got) == len(ref) > 50
+    for c in got.columns:
+        a, b = got[c].tolist(), ref[c].tolist()
+        if c in ("doc_id_deltas", "tfs", "doc_lens"):
+            a, b = [bytes(x) for x in a], [bytes(x) for x in b]
+        assert a == b, c
