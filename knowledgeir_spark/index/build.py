@@ -31,6 +31,7 @@ uses operators/ids.assign_doc_ids (deterministic dense ids).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -73,6 +74,13 @@ class IndexConfig:
 # layout fields a maintenance call must share with the index it writes into
 # (n_buckets is not one: compact re-buckets and defrag skips on a mismatch)
 _LAYOUT_FIELDS = ("tokenizer", "block_size", "salt_range", "block_order")
+
+# a term_stats table of at most this many rows is handled on the
+# coordinator: IndexReader collects it into a driver-side df dict (a few
+# MB), and compact(mode="append") merges delta stats into it with pyarrow.
+# Larger vocabularies stay in Spark (a filtered scan per search, a Spark
+# union/groupBy per fold).
+TERM_STATS_CACHE_MAX = 2_000_000
 
 
 def check_codec(field_stats: dict, index_dir: str) -> None:
@@ -269,6 +277,35 @@ def _make_block_builder_arrow(block_size: int, block_order: str = "docid"):
             yield encode_table(carry)
 
     return builder
+
+
+def block_term_stats(dirs: list[str]):
+    """(term string, df long, cf long) over the posting-block files under
+    dirs (``<dir>/bucket=*/*.parquet``), from block metadata alone: df =
+    sum(n_docs), cf = sum(sum_tf), since every doc-term posting lands in
+    exactly one block.  Read with pyarrow on the coordinator, so it is meant
+    for delta-sized dirs; nothing is decoded."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    files = sorted(
+        f for d in dirs
+        for f in glob.glob(os.path.join(d, "bucket=*", "*.parquet"))
+    )
+    blocks = (
+        ds.dataset(files, format="parquet").to_table(
+            columns=["term", "n_docs", "sum_tf"])
+        if files else
+        pa.table({"term": pa.array([], pa.string()),
+                  "n_docs": pa.array([], pa.int64()),
+                  "sum_tf": pa.array([], pa.int64())})
+    )
+    agg = blocks.group_by("term").aggregate([("n_docs", "sum"), ("sum_tf", "sum")])
+    return pa.table({
+        "term": agg["term"].cast(pa.string()),
+        "df": agg["n_docs_sum"].cast(pa.int64()),
+        "cf": agg["sum_tf_sum"].cast(pa.int64()),
+    })
 
 
 def apply_block_encoder(sorted_df: DataFrame, config: IndexConfig) -> DataFrame:

@@ -6,22 +6,30 @@ to (a) restore the one-dir-per-bucket file layout, (b) merge fragmented
 small blocks (a tail term touched by many deltas), and (c) refresh
 term_stats / field_stats to cover the delta docs.
 
-Implementation: PER-BUCKET incremental merge.  Deltas share the base's
-term-hash bucket partitioning, so only buckets with delta rows are decoded
-back to long form (the inverse mapInArrow of the builder; the base scan is
-partition-pruned to those buckets) and re-blocked; untouched bucket dirs
-carry over as hardlinks (an Iceberg partition-level replace on a real
-cluster), and term_stats rows for untouched buckets carry over via an
-anti-bucket filter union.  The stages re-run through the StageManager — the
-'postings' and 'term_stats' stage fingerprints include the delta list, so
-compaction itself is an idempotent, resumable commit.  field_stats scalars
-are updated EXACTLY from the per-delta stats JSONs (no re-tokenization).
+Two fold modes.  mode="merge" is a PER-BUCKET incremental merge: deltas
+share the base's term-hash bucket partitioning, so only buckets with delta
+rows are decoded back to long form (the inverse mapInArrow of the builder;
+the base scan is partition-pruned to those buckets) and re-blocked;
+untouched bucket dirs carry over as hardlinks (an Iceberg partition-level
+replace on a real cluster), and term_stats rows for untouched buckets carry
+over via an anti-bucket filter union.  mode="append" decodes nothing: the
+delta block files are linked into the postings snapshot, and term_stats is
+the live table plus the deltas' block-metadata aggregate (df = sum n_docs,
+cf = sum sum_tf), merged with pyarrow on the coordinator up to
+TERM_STATS_CACHE_MAX live rows and through Spark above it.  Either way the
+stages re-run through the StageManager — the 'postings' and 'term_stats'
+stage fingerprints include the delta list, so compaction itself is an
+idempotent, resumable commit.  field_stats scalars are updated EXACTLY from
+the per-delta stats JSONs (no re-tokenization).
 
-Idempotency protocol: field_stats.json carries "folded_deltas" (the list of
-delta basenames already folded AND stats-committed) and is rewritten
-atomically (tmp + rename) as the LAST step — it is the commit point.  Delta
-dirs themselves are left in place (an external janitor may remove folded
-ones); re-running compact() only processes deltas not in folded_deltas.
+Idempotency protocol: a delta's delta_stats.json is its commit marker — the
+delta writer writes it last, atomically — and a batch_* dir without it has
+not finished landing, so it is neither folded nor recorded.  field_stats.json
+carries "folded_deltas" (the list of delta basenames already folded AND
+stats-committed) and is rewritten atomically (tmp + rename) as the LAST
+step — it is the commit point.  Delta dirs themselves are left in place (an
+external janitor may remove folded ones); re-running compact() only
+processes deltas not in folded_deltas.
 The crash window between the postings swap and the stats commit is covered
 by the swapped postings manifest: its conf records which deltas the
 snapshot contains ("compact_of"), so a re-run detects base-already-contains
@@ -50,7 +58,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.lineage import StageManager
-from .build import IndexConfig, apply_block_encoder, check_layout, term_bucket_expr
+from .build import (
+    TERM_STATS_CACHE_MAX, IndexConfig, apply_block_encoder, block_term_stats,
+    check_layout, term_bucket_expr,
+)
 from .codec import decode_blocks_concat
 
 _LONG_FORM = "doc_id long, term string, tf long, doc_len long"
@@ -300,15 +311,22 @@ def compact(
       "merge"  (default) decode-and-re-block: delta-touched buckets are
                decoded together with the base and rebuilt into full blocks
                (defragments tail terms fragmented across many deltas).
-      "append" O(delta): doc_ids are append-only, so delta blocks are NEW
-               (term, salt-range) rows disjoint from every base block — the
-               merged postings table is literally base ∪ delta block rows.
-               The snapshot hardlinks every base file and copies the delta
-               files into their bucket dirs; term_stats = base stats ∪
-               delta-only aggregates summed per term (no doc overlap, so
-               df/cf add exactly); NOTHING of the base is decoded or
-               rewritten.  The Lucene-tiered-merge / Iceberg-style fast
-               path.
+      "append" O(delta) postings: doc_ids are append-only, so delta
+               blocks are NEW (term, salt-range) rows disjoint from every
+               base block — the merged postings table is literally base ∪
+               delta block rows.  The snapshot hardlinks every base file
+               and links the delta files into their bucket dirs; NOTHING is
+               decoded or rewritten.  term_stats = live stats + the deltas'
+               per-term block-metadata sums (df = Σ n_docs, cf = Σ sum_tf;
+               no doc overlap, so df/cf add exactly), read with pyarrow.
+               While the live term_stats has at most TERM_STATS_CACHE_MAX
+               rows (parquet footer count) the merge runs on the
+               coordinator with pyarrow, O(vocabulary) and no Spark job;
+               above it, a Spark union/groupBy does the same merge.  The
+               Lucene-tiered-merge / Iceberg-style fast path.
+
+    Only deltas whose delta_stats.json marker exists are folded; a delta
+    still landing is left pending for a later call.
 
     auto_defrag_files: after an "append" fold, any bucket whose parquet
     file count exceeds this threshold is automatically re-blocked via
@@ -341,7 +359,12 @@ def compact(
         fs = json.load(f)
     folded = set(fs.get("folded_deltas", []))
 
-    all_deltas = sorted(glob.glob(os.path.join(index_dir, "deltas", "batch_*")))
+    # delta_stats.json is a delta's commit marker (written last by the
+    # delta writer): a dir without it has not finished landing
+    all_deltas = sorted(
+        d for d in glob.glob(os.path.join(index_dir, "deltas", "batch_*"))
+        if os.path.exists(os.path.join(d, "delta_stats.json"))
+    )
     pending = [d for d in all_deltas if os.path.basename(d) not in folded]
     if not pending:
         return {}
@@ -404,19 +427,31 @@ def compact(
         )
 
         def write_term_stats_append(tmp: str):
-            parts = [
-                decode_postings_df(spark.read.parquet(d))
-                for d in to_compact
-            ]
-            dl = parts[0]
-            for p in parts[1:]:
-                dl = dl.unionByName(p)
-            delta_stats = dl.groupBy("term").agg(
-                F.count("*").alias("df"), F.sum("tf").alias("cf")
+            import pyarrow as pa
+            import pyarrow.dataset as ds
+            import pyarrow.parquet as pq
+
+            # the deltas' stats from their block metadata (never decoded)
+            delta = block_term_stats(to_compact)
+            live_dir = mgr.stage_path("term_stats")
+            live = ds.dataset(live_dir, format="parquet")
+            if live.count_rows() <= TERM_STATS_CACHE_MAX:
+                # coordinator merge, O(vocabulary): the reader holds a
+                # vocabulary this size in memory anyway
+                agg = pa.concat_tables([
+                    live.to_table(columns=["term", "df", "cf"]), delta,
+                ]).group_by("term").aggregate([("df", "sum"), ("cf", "sum")])
+                merged = pa.table({
+                    "term": agg["term"], "df": agg["df_sum"], "cf": agg["cf_sum"],
+                }).sort_by("term")
+                os.makedirs(tmp)
+                pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
+                return
+            delta_df = spark.createDataFrame(
+                delta.to_pandas(), "term string, df long, cf long"
             )
-            base_stats = spark.read.parquet(mgr.stage_path("term_stats"))
             (
-                base_stats.unionByName(delta_stats)
+                spark.read.parquet(live_dir).unionByName(delta_df)
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
                 .write.parquet(tmp)
@@ -520,12 +555,10 @@ def compact(
     # and the scalars commit together (atomic rename) so a re-run can never
     # double-count
     for d in pending:
-        sp = os.path.join(d, "delta_stats.json")
-        if os.path.exists(sp):
-            with open(sp) as f:
-                ds = json.load(f)
-            fs["n_docs"] += ds["n_docs"]
-            fs["total_len"] += ds["total_len"]
+        with open(os.path.join(d, "delta_stats.json")) as f:
+            ds = json.load(f)
+        fs["n_docs"] += ds["n_docs"]
+        fs["total_len"] += ds["total_len"]
         folded.add(os.path.basename(d))
     fs["avg_doc_len"] = fs["total_len"] / fs["n_docs"] if fs["n_docs"] else 0.0
     fs["folded_deltas"] = sorted(folded)

@@ -29,6 +29,7 @@ Scores are rank-identical to the full-scan DataFrame path and the oracle
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topk import topk_per_query
-from .build import check_codec, term_bucket_py
+from .build import TERM_STATS_CACHE_MAX, check_codec, term_bucket_py
 from .codec import decode_blocks_concat, decode_ids_concat
 from . import scoring_np as S
 
@@ -905,10 +906,10 @@ def _lev_le1(a: str, b: str) -> int | None:
 class IndexReader:
     """Reads a committed index (build.build_index layout)."""
 
-    # term_stats tables up to this row count are collected once into a
+    # term_stats tables up to this row count are read once into a
     # driver-side dict (a few MB); larger vocabularies fall back to a
-    # filtered scan per search.
-    _TERM_STATS_CACHE_MAX = 2_000_000
+    # filtered Spark scan per search.  Per-instance override hook.
+    _TERM_STATS_CACHE_MAX = TERM_STATS_CACHE_MAX
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -924,9 +925,9 @@ class IndexReader:
         # the doc tokenizer the index was built with (phrase verification
         # must tokenize identically); older indexes predate the key
         self.tokenizer = self.field_stats.get("tokenizer", "spec")
-        # build the scan DataFrames once (schema discovery is not free)
-        self._postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self._term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        # the Spark scan DataFrames (_postings, _term_stats) are built on
+        # first use: opening a reader and serving search_local run no Spark
+        # job; only search() and the oversized-vocabulary fallbacks need them
         self._df_cache: dict[str, float] | None = None
         self._df_cache_checked = False
         # serving hot-term cache (decoded postings; one index snapshot per
@@ -957,6 +958,14 @@ class IndexReader:
             )
         return self._nextword
 
+    @functools.cached_property
+    def _postings(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "postings"))
+
+    @functools.cached_property
+    def _term_stats(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
         buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
         return (
@@ -967,14 +976,20 @@ class IndexReader:
 
     def term_stats_for(self, terms: list[str]) -> dict[str, float]:
         if self._df_cache is None and not self._df_cache_checked:
-            # run the size check once per reader: oversized vocabularies must
-            # not pay a full count() on every search
+            # run the size check once per reader, from parquet footers; the
+            # dict is read with pyarrow, so this runs no Spark job
+            import pyarrow.dataset as ds
+
             self._df_cache_checked = True
-            n = self._term_stats.count()
-            if n <= self._TERM_STATS_CACHE_MAX:
-                self._df_cache = {
-                    r["term"]: float(r["df"]) for r in self._term_stats.collect()
-                }
+            dset = ds.dataset(
+                os.path.join(self.index_dir, "term_stats"), format="parquet"
+            )
+            if dset.count_rows() <= self._TERM_STATS_CACHE_MAX:
+                tbl = dset.to_table(columns=["term", "df"])
+                self._df_cache = dict(zip(
+                    tbl["term"].to_pylist(),
+                    tbl["df"].to_numpy().astype(np.float64).tolist(),
+                ))
         if self._df_cache is not None:
             return {t: self._df_cache[t] for t in terms if t in self._df_cache}
         rows = self._term_stats.filter(F.col("term").isin(list(terms))).collect()

@@ -3,7 +3,8 @@
 incremental_index: Structured Streaming over the input table directory with
 Trigger.AvailableNow — each micro-batch of new docs becomes an index DELTA
 (same posting-block layout as the full build) committed under
-<index_root>/deltas/batch_<id>/, with Spark's streaming checkpoint providing
+<index_root>/deltas/batch_<id>/ — its delta_stats.json, written last, marks
+the delta as landed for compact() — with Spark's streaming checkpoint providing
 exactly-once batch tracking (a re-run after a crash re-processes only
 unseen files).  Because build salts are contiguous doc_id ranges, delta
 blocks merge with base blocks by simple (term, first_doc_id) ordering at
@@ -23,17 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_terms
-from ..index.build import IndexConfig, apply_block_encoder, check_layout
+from ..index.build import (
+    IndexConfig, apply_block_encoder, block_term_stats, check_layout,
+)
+from ..index.compact import _atomic_write_json
 
 
 def _delta_writer(index_root: str, config: IndexConfig):
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-
         out = os.path.join(index_root, "deltas", f"batch_{batch_id}")
         dt = doc_terms(batch_df, simple=(config.tokenizer == "simple"))
-        n_docs = batch_df.count()
-        total_len = (dt.groupBy().sum("tf").collect()[0][0]) or 0
+        n_docs = batch_df.count()  # over the input: empty docs count too
         salted = dt.select(
             "doc_id", "term", "tf", "doc_len",
             (F.col("doc_id") / config.salt_range).cast("long").alias("salt"),
@@ -44,9 +45,16 @@ def _delta_writer(index_root: str, config: IndexConfig):
             .transform(lambda df: apply_block_encoder(df, config))
             .write.mode("overwrite").partitionBy("bucket").parquet(out)
         )
-        # per-delta corpus scalars so compaction can update field_stats exactly
-        with open(os.path.join(out, "delta_stats.json"), "w") as f:
-            json.dump({"n_docs": n_docs, "total_len": int(total_len)}, f)
+        # total_len = sum of the delta's own block sum_tf (each posting
+        # lands in exactly one block), read back with pyarrow: no Spark pass
+        total_len = int(block_term_stats([out])["cf"].to_numpy().sum())
+        # per-delta corpus scalars so compaction can update field_stats
+        # exactly.  Written LAST and atomically: the file is the delta's
+        # commit marker, and compact() skips a delta without it
+        _atomic_write_json(
+            os.path.join(out, "delta_stats.json"),
+            {"n_docs": n_docs, "total_len": total_len},
+        )
 
     return write_batch
 

@@ -558,3 +558,106 @@ def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
     assert compact(spark, idx_dir, CFG, mode="append")
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:80])
+
+
+def test_compact_skips_delta_without_marker(spark, webpages_pdf, tmp_path):
+    """delta_stats.json is a delta's commit marker: a delta whose writer
+    died before the marker landed is neither folded nor recorded as folded
+    (folding it would leave n_docs/avg_doc_len wrong for good); once the
+    marker exists the next fold takes it and matches the oracle."""
+    import json
+    import os
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "mk")
+    fs_path = os.path.join(idx_dir, "field_stats.json")
+    with open(fs_path) as f:
+        fs_before = json.load(f)
+    (delta,) = [os.path.join(idx_dir, "deltas", b)
+                for b in os.listdir(os.path.join(idx_dir, "deltas"))]
+    marker = os.path.join(delta, "delta_stats.json")
+    with open(marker) as f:
+        stats = json.load(f)
+    os.remove(marker)
+
+    assert compact(spark, idx_dir, CFG, mode="append") == {}
+    with open(fs_path) as f:
+        assert json.load(f) == fs_before  # not folded, not recorded
+
+    with open(marker, "w") as f:
+        json.dump(stats, f)
+    assert compact(spark, idx_dir, CFG, mode="append")
+    _assert_matches_oracle(spark, idx_dir, corpus)
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    with open(fs_path) as f:
+        fs = json.load(f)
+    assert fs["n_docs"] == 130
+    assert fs["folded_deltas"] == [os.path.basename(delta)]
+    assert fs["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
+
+
+def test_append_fold_term_stats_branches_agree(
+    spark, webpages_pdf, tmp_path, monkeypatch
+):
+    """compact(mode='append') merges the deltas' block-metadata stats into
+    term_stats on the coordinator (no Spark job) while the live table is at
+    most TERM_STATS_CACHE_MAX rows, and through Spark above it.  Both
+    branches give the same (term, df, cf) table, equal to the oracle's,
+    including a term new to the index, a delta holding an empty doc (which
+    counts in n_docs) and a delta of one empty doc (no block rows)."""
+    import json
+    import shutil
+
+    import pandas as pd
+
+    import knowledgeir_spark.index.compact as cm
+
+    idx_dir = str(tmp_path / "idx_br")
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    build_index(spark, spark.createDataFrame(pdf.iloc[:200][["doc_id", "text"]]),
+                idx_dir, CFG, input_token="base200br")
+    novel = pd.DataFrame({"doc_id": [900], "text": ["zqxjkvbn spark data"]})
+    empty = pd.DataFrame({"doc_id": [901], "text": [""]})
+    d1 = pd.concat([pdf.iloc[200:230][["doc_id", "text"]], novel])
+    d2 = pd.concat([pdf.iloc[230:250][["doc_id", "text"]], empty])
+    d3 = pd.DataFrame({"doc_id": [902], "text": [""]})
+    inp = str(tmp_path / "arr_br")
+    schema = "doc_id long, text string"
+    for d in (d1, d2, d3):
+        spark.createDataFrame(d, schema).write.mode("append").parquet(inp)
+        incremental_index(spark, inp, idx_dir, schema, CFG)
+    corpus = pd.concat([pdf.iloc[:200][["doc_id", "text"]], d1, d2, d3])
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    assert "zqxjkvbn" in oracle.postings
+
+    spark_dir = str(tmp_path / "idx_br_spark")
+    shutil.copytree(idx_dir, spark_dir)
+    sc = spark.sparkContext
+
+    def fold(path: str, group: str) -> dict:
+        sc.setJobGroup(group, "append fold")
+        try:
+            assert compact(spark, path, CFG, mode="append",
+                           auto_defrag_files=None)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return {
+            r["term"]: (r["df"], r["cf"])
+            for r in spark.read.parquet(f"{path}/term_stats").collect()
+        }
+
+    coord = fold(idx_dir, "fold-coordinator")
+    assert not sc.statusTracker().getJobIdsForGroup("fold-coordinator")
+    monkeypatch.setattr(cm, "TERM_STATS_CACHE_MAX", 0)
+    via_spark = fold(spark_dir, "fold-spark")
+    assert sc.statusTracker().getJobIdsForGroup("fold-spark")
+
+    assert coord == via_spark
+    assert coord == {t: (len(p), sum(tf for _, tf in p))
+                     for t, p in oracle.postings.items()}
+    for path in (idx_dir, spark_dir):
+        _assert_matches_oracle(spark, path, corpus)
+        with open(f"{path}/field_stats.json") as f:
+            fs = json.load(f)
+        assert fs["n_docs"] == len(corpus) == 253
+        assert len(fs["folded_deltas"]) == 3
+        assert fs["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)

@@ -387,6 +387,45 @@ def test_prewarm_cache_and_identical_results(spark, built, queries_pdf):
     assert again["terms_warmed"] == 0
 
 
+def test_reader_opens_and_serves_without_spark_job(spark, built, queries_pdf):
+    """Opening a reader, sizing and loading its df dict, prewarm and a
+    search_local run no Spark job (the scan DataFrames are lazy).  The df
+    dict equals term_stats collected through Spark, and search() — the
+    first user of the lazy postings DataFrame — still ranks identically
+    to the oracle."""
+    sc = spark.sparkContext
+    group = "reader-open-no-spark"
+    o = built["oracle"]
+    sc.setJobGroup(group, "reader open")
+    try:
+        rd = IndexReader(spark, built["idx_dir"])
+        dfs = rd.term_stats_for(sorted(o.df))
+        rd.prewarm(n_terms=16)
+        rows = rd.search_local([("1", "the data spark w0005")], k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+    want = {
+        r["term"]: float(r["df"])
+        for r in spark.read.parquet(f"{built['idx_dir']}/term_stats").collect()
+    }
+    assert dfs == want
+    assert all(type(v) is float for v in dfs.values())
+
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()][:5]
+    ranked = rd.search(queries, k=20).collect()
+    got: dict[str, list] = {}
+    for r in sorted(ranked, key=lambda r: (r["qid"], r["rank"])):
+        got.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
+    for qid, qtext in queries:
+        expected = o.topk(qtext, k=20)
+        assert [d for d, _ in got.get(qid, [])] == [d for d, _ in expected], qid
+        for (_, s), (_, es) in zip(got.get(qid, []), expected):
+            assert s == pytest.approx(es, abs=1e-6)
+
+
 @pytest.fixture(scope="module")
 def built_impact(spark, built, tmp_path_factory):
     """The `built` corpus under block_order='impact'."""
