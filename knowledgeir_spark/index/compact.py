@@ -437,9 +437,15 @@ def compact(
             live = ds.dataset(live_dir, format="parquet")
             if live.count_rows() <= TERM_STATS_CACHE_MAX:
                 # coordinator merge, O(vocabulary): the reader holds a
-                # vocabulary this size in memory anyway
+                # vocabulary this size in memory anyway.  One schema for
+                # both sides: a Spark-written live table may mark df/cf
+                # required, and concat_tables compares nullability too.
+                schema = pa.schema([
+                    ("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64()),
+                ])
                 agg = pa.concat_tables([
-                    live.to_table(columns=["term", "df", "cf"]), delta,
+                    live.to_table(columns=schema.names).cast(schema),
+                    delta.cast(schema),
                 ]).group_by("term").aggregate([("df", "sum"), ("cf", "sum")])
                 merged = pa.table({
                     "term": agg["term"], "df": agg["df_sum"], "cf": agg["cf_sum"],

@@ -26,13 +26,17 @@ import sys
 import numpy as np
 
 
-def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
-    """One trace-off perfbench run inside checkout; its last stdout line."""
+def run_one(checkout: str, workload: str, seed: int,
+            seconds: float | None) -> dict:
+    """One trace-off perfbench run inside checkout; its last stdout line.
+    The run length is perfbench's own default unless seconds is given."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--trace", "0"]
+    if seconds is not None:
+        cmd += ["--seconds", str(seconds)]
     proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
-        cwd=checkout, env=env, capture_output=True, text=True,
+        cmd, cwd=checkout, env=env, capture_output=True, text=True,
     )
     lines = proc.stdout.strip().splitlines()
     try:
@@ -100,7 +104,8 @@ def main(argv=None) -> int:
     ap.add_argument("--change", required=True, help="change checkout")
     ap.add_argument("--workload", help="perfbench workload to run")
     ap.add_argument("--seeds", type=int, nargs="*", default=[])
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=None,
+                    help="forwarded to perfbench/run.py (default: its own)")
     ap.add_argument("--out", required=True, help="JSONL file to append to")
     args = ap.parse_args(argv)
     if args.parent:

@@ -661,3 +661,37 @@ def test_append_fold_term_stats_branches_agree(
         assert fs["n_docs"] == len(corpus) == 253
         assert len(fs["folded_deltas"]) == 3
         assert fs["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
+
+
+def test_append_fold_after_full_rewrite_merge(spark, webpages_pdf, tmp_path):
+    """A full-rewrite merge (a text delta touches every bucket) writes
+    term_stats through Spark, which may store df/cf as required columns;
+    the next append fold merges that table with the nullable block-metadata
+    aggregate on the coordinator and must still match the oracle."""
+    from knowledgeir_spark.plans.lineage import StageManager
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "mr")
+    assert compact(spark, idx_dir, CFG, mode="merge")
+    m = StageManager(idx_dir).manifest("postings")
+    assert m["config"]["touched_buckets"] is None  # the full-rewrite path
+
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    inp = str(tmp_path / "arr_mr")  # the arrivals dir of _build_with_one_delta
+    spark.createDataFrame(pdf.iloc[130:160][["doc_id", "text"]]).write.mode(
+        "append").parquet(inp)
+    incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold-after-merge", "append fold")
+    try:
+        assert compact(spark, idx_dir, CFG, mode="append", auto_defrag_files=None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("fold-after-merge")
+
+    corpus = pdf.iloc[:160]
+    _assert_matches_oracle(spark, idx_dir, corpus)
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    reader = IndexReader(spark, idx_dir)
+    assert reader.field_stats["n_docs"] == 160
+    assert reader.field_stats["avg_doc_len"] == pytest.approx(
+        oracle.avg_doc_len, abs=1e-9)
