@@ -72,8 +72,11 @@ class IndexConfig:
 
 
 # layout fields a maintenance call must share with the index it writes into
-# (n_buckets is not one: compact re-buckets and defrag skips on a mismatch)
-_LAYOUT_FIELDS = ("tokenizer", "block_size", "salt_range", "block_order")
+# (a different n_buckets would make readers prune to the wrong buckets;
+# re-bucketing an index is a rebuild)
+_LAYOUT_FIELDS = (
+    "tokenizer", "block_size", "salt_range", "block_order", "n_buckets",
+)
 
 # a term_stats table of at most this many rows is handled on the
 # coordinator: IndexReader collects it into a driver-side df dict (a few
@@ -98,7 +101,8 @@ def check_layout(index_dir: str, config: IndexConfig) -> None:
     """Raise ValueError when `config` disagrees with the layout recorded in
     index_dir's field_stats.json (no base index yet: nothing to check).
     Deltas or re-blocked buckets written under another tokenizer, block
-    size, salt range or block order would silently mix two layouts."""
+    size, salt range, block order or bucket count would silently mix two
+    layouts."""
     path = os.path.join(index_dir, "field_stats.json")
     if not os.path.exists(path):
         return

@@ -6,21 +6,21 @@ to (a) restore the one-dir-per-bucket file layout, (b) merge fragmented
 small blocks (a tail term touched by many deltas), and (c) refresh
 term_stats / field_stats to cover the delta docs.
 
-Two fold modes.  mode="merge" is a PER-BUCKET incremental merge: deltas
-share the base's term-hash bucket partitioning, so only buckets with delta
-rows are decoded back to long form (the inverse mapInArrow of the builder;
-the base scan is partition-pruned to those buckets) and re-blocked;
-untouched bucket dirs carry over as hardlinks (an Iceberg partition-level
-replace on a real cluster), and term_stats rows for untouched buckets carry
-over via an anti-bucket filter union.  mode="append" decodes nothing: the
-delta block files are linked into the postings snapshot, and term_stats is
-the live table plus the deltas' block-metadata aggregate (df = sum n_docs,
-cf = sum sum_tf), merged with pyarrow on the coordinator up to
-TERM_STATS_CACHE_MAX live rows and through Spark above it.  Either way the
-stages re-run through the StageManager — the 'postings' and 'term_stats'
-stage fingerprints include the delta list, so compaction itself is an
-idempotent, resumable commit.  field_stats scalars are updated EXACTLY from
-the per-delta stats JSONs (no re-tokenization).
+One fold, two re-block policies.  The fold decodes nothing: doc_ids are
+append-only, so delta blocks are NEW (term, salt-range) rows disjoint from
+every base block; the delta block files are linked into the postings
+snapshot, and term_stats is the live table plus the deltas' block-metadata
+aggregate (df = sum n_docs, cf = sum sum_tf), merged with pyarrow on the
+coordinator up to TERM_STATS_CACHE_MAX live rows and through Spark above
+it.  After the fold commits, mode="merge" re-blocks (defrag) every bucket
+the folded deltas touched, which leaves the block rows a fresh build over
+the union corpus writes; mode="append" re-blocks only buckets whose file
+count crosses auto_defrag_files.  The stages re-run through the
+StageManager — the 'postings' and 'term_stats' stage fingerprints include
+the delta list, so compaction itself is an idempotent, resumable commit.
+field_stats scalars are updated EXACTLY from the per-delta stats JSONs (no
+re-tokenization).  n_buckets is part of the checked layout (check_layout):
+re-bucketing an index is a rebuild.
 
 Idempotency protocol: a delta's delta_stats.json is its commit marker — the
 delta writer writes it last, atomically — and a batch_* dir without it has
@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from ..plans.lineage import StageManager
 from .build import (
     TERM_STATS_CACHE_MAX, IndexConfig, apply_block_encoder, block_term_stats,
-    check_layout, term_bucket_expr,
+    check_layout,
 )
 from .codec import decode_blocks_concat
 
@@ -145,9 +145,9 @@ def _heal_interrupted_swap(mgr: StageManager) -> None:
             shutil.rmtree(bak, ignore_errors=True)
     # a committed term_stats_compacted whose postings half has FULLY swapped
     # (crash between the two stage swaps) must be installed before compact()
-    # reads live term_stats — the per-bucket merge unions the kept live
-    # stats with recomputed ones, so a stale live term_stats here would leak
-    # into the next snapshot if a new delta arrived before recovery
+    # reads live term_stats — the fold adds the deltas' stats to the live
+    # table, so a stale live term_stats here would leak into the next
+    # snapshot if a new delta arrived before recovery
     if (
         os.path.isdir(mgr.stage_path("term_stats_compacted"))
         and os.path.exists(mgr._manifest_path("term_stats_compacted"))
@@ -206,17 +206,6 @@ def _link_untouched_buckets(live: str, tmp: str, touched: set[int]) -> None:
                 shutil.copy2(os.path.join(bdir, fn), os.path.join(dst, fn))
 
 
-def _dir_bytes_local(path: str) -> int:
-    total = 0
-    for root, _d, files in os.walk(path):
-        for fn in files:
-            try:
-                total += os.path.getsize(os.path.join(root, fn))
-            except OSError:
-                pass
-    return total
-
-
 def _atomic_write_json(path: str, obj: dict) -> None:
     tmp = path + ".__tmp__"
     with open(tmp, "w") as f:
@@ -246,12 +235,12 @@ def defrag(
     decode just those buckets to long form, rebuild full blocks, and swap a
     snapshot where every untouched bucket dir is hardlinked.  term_stats and
     field_stats are untouched — defrag changes layout, not content.  This is
-    the automatic tier-merge behind compact(mode="append"): append stays
-    O(delta) per batch, and a bucket is defragmented only when its file
-    count crosses the threshold (Lucene's tiered-merge policy shape).
-    Crash-safe via the same stage-commit + swap + heal protocol as
-    compact().  Raises ValueError when `config` disagrees with the index's
-    layout (check_layout)."""
+    the re-block step of compact(): mode="merge" passes the buckets its
+    deltas touched; mode="append" stays O(delta) per batch, and a bucket is
+    defragmented only when its file count crosses the threshold (Lucene's
+    tiered-merge policy shape).  Crash-safe via the same stage-commit +
+    swap + heal protocol as compact().  Raises ValueError when `config`
+    disagrees with the index's layout (check_layout)."""
     check_layout(index_dir, config)
     mgr = StageManager(index_dir)
     _heal_interrupted_swap(mgr)
@@ -261,10 +250,6 @@ def defrag(
     if not buckets:
         return {}
     post_manifest = mgr.manifest("postings") or {}
-    base_n_buckets = post_manifest.get("config", {}).get("n_buckets")
-    if base_n_buckets is not None and base_n_buckets != config.n_buckets:
-        # re-bucketing is a full rewrite, not a per-bucket defrag
-        return {"skipped": "n_buckets mismatch; run compact(mode='merge')"}
     conf = {
         # carry the live snapshot's delta bookkeeping so the crash-window
         # detection (in_base) survives a defrag swap
@@ -302,51 +287,54 @@ def defrag(
 def compact(
     spark: SparkSession, index_dir: str, config: IndexConfig = IndexConfig(),
     mode: str = "merge", auto_defrag_files: int | None = 32,
-    min_pending_deltas: int = 1, min_pending_bytes: int = 0,
+    min_pending_deltas: int = 1,
 ) -> dict:
-    """Merge unfolded deltas/batch_* into the base index (postings + stats
+    """Fold unfolded deltas/batch_* into the base index (postings + stats
     stages).  Idempotent and crash-safe — see module docstring protocol.
 
-    mode:
-      "merge"  (default) decode-and-re-block: delta-touched buckets are
-               decoded together with the base and rebuilt into full blocks
-               (defragments tail terms fragmented across many deltas).
-      "append" O(delta) postings: doc_ids are append-only, so delta
-               blocks are NEW (term, salt-range) rows disjoint from every
-               base block — the merged postings table is literally base ∪
-               delta block rows.  The snapshot hardlinks every base file
-               and links the delta files into their bucket dirs; NOTHING is
-               decoded or rewritten.  term_stats = live stats + the deltas'
-               per-term block-metadata sums (df = Σ n_docs, cf = Σ sum_tf;
-               no doc overlap, so df/cf add exactly), read with pyarrow.
-               While the live term_stats has at most TERM_STATS_CACHE_MAX
-               rows (parquet footer count) the merge runs on the
-               coordinator with pyarrow, O(vocabulary) and no Spark job;
-               above it, a Spark union/groupBy does the same merge.  The
-               Lucene-tiered-merge / Iceberg-style fast path.
+    The fold is O(delta) and decodes nothing: doc_ids are append-only, so
+    delta blocks are NEW (term, salt-range) rows disjoint from every base
+    block — the folded postings table is literally base ∪ delta block rows.
+    The snapshot hardlinks every base file and links the delta files into
+    their bucket dirs.  term_stats = live stats + the deltas' per-term
+    block-metadata sums (df = Σ n_docs, cf = Σ sum_tf; no doc overlap, so
+    df/cf add exactly), read with pyarrow.  While the live term_stats has at
+    most TERM_STATS_CACHE_MAX rows (parquet footer count) the merge runs on
+    the coordinator with pyarrow, O(vocabulary) and no Spark job; above it,
+    a Spark union/groupBy does the same merge.  The Lucene-tiered-merge /
+    Iceberg-style fast path.
+
+    mode picks the re-block policy that runs after field_stats commits:
+      "merge"  (default) defrag() every bucket the folded deltas touched, so
+               tail terms fragmented across deltas end up in full blocks
+               (the block rows of a fresh build over the union corpus).
+               A crash between the fold and this re-block leaves a correct
+               index whose touched buckets are not re-blocked; the next
+               merge fold re-blocks the buckets its own deltas touch.
+      "append" any bucket whose parquet file count exceeds
+               auto_defrag_files is re-blocked via defrag() (untouched
+               buckets stay hardlinked), so the fast path does not rely on
+               an operator running "merge" occasionally.  None disables
+               the trigger.
 
     Only deltas whose delta_stats.json marker exists are folded; a delta
     still landing is left pending for a later call.
 
-    auto_defrag_files: after an "append" fold, any bucket whose parquet
-    file count exceeds this threshold is automatically re-blocked via
-    defrag() (untouched buckets stay hardlinked) — the fast path no longer
-    relies on an operator remembering to run "merge" occasionally.  None
-    disables the trigger.
-
     Fold-batching policy (round-5 verdict item 2 — the drill measured a
     fixed ~60 s cost per fold, so folding every tiny batch caps sustained
     ingest at ~130 docs/s): the fold is DEFERRED (no-op returning
-    {"deferred": ...}) while fewer than ``min_pending_deltas`` deltas AND
-    fewer than ``min_pending_bytes`` delta bytes are pending.  Defaults
-    fold on every call (prior behavior).  Trade-off: docs in a deferred
-    delta are not yet queryable, so time-to-queryable is bounded by
-    (min_pending_deltas x batch interval) — pick the knob from the
-    freshness SLA.  Crash-window deltas (swap committed, stats commit
-    lost) always heal immediately regardless of the policy.
+    {"deferred": ...}) while fewer than ``min_pending_deltas`` deltas are
+    pending.  The default folds on every call.  Trade-off: docs in a
+    deferred delta are not yet queryable, so time-to-queryable is bounded
+    by (min_pending_deltas x batch interval) — pick the knob from the
+    freshness SLA.  Crash-window deltas (swap committed, stats commit lost)
+    always heal immediately regardless of the policy.
 
-    Raises ValueError when `config` disagrees with the index's layout
-    (check_layout).
+    Returns the StageResults by stage ("postings_compacted",
+    "term_stats_compacted", and "postings_defragged" after a merge
+    re-block); an "append" fold that re-blocked adds defrag()'s result
+    under "defrag".  Raises ValueError when `config` disagrees with the
+    index's layout (check_layout).
     """
     if mode not in ("merge", "append"):
         raise ValueError(f"unknown compaction mode {mode!r}")
@@ -376,33 +364,20 @@ def compact(
         b for b in post_manifest.get("config", {}).get("compact_of", [])
         if b not in folded
     ]
-    if not in_base and (min_pending_deltas > 1 or min_pending_bytes > 0):
-        pending_bytes = sum(_dir_bytes_local(d) for d in pending)
-        # fold when EITHER enabled threshold is reached; defer otherwise
-        if (
-            len(pending) < min_pending_deltas
-            and (min_pending_bytes <= 0 or pending_bytes < min_pending_bytes)
-        ):
-            return {
-                "deferred": True,
-                "pending_deltas": len(pending),
-                "pending_bytes": pending_bytes,
-            }
+    if not in_base and len(pending) < min_pending_deltas:
+        return {"deferred": True, "pending_deltas": len(pending)}
     to_compact = [d for d in pending if os.path.basename(d) not in in_base]
     results: dict = {}
 
-    if to_compact and mode == "append":
-        # O(delta) append: hardlink the whole base, copy the delta block
-        # files into their bucket dirs (names prefixed by batch so repeated
-        # appends never collide), and sum per-term delta aggregates into
-        # term_stats.  Valid because doc_ids are append-only: delta blocks
-        # cover doc-id salt ranges disjoint from every base block, and a
-        # term's df/cf contributions add with no overlap.
+    if to_compact:
+        # hardlink the whole base, copy the delta block files into their
+        # bucket dirs (names prefixed by batch so repeated folds never
+        # collide), and sum per-term delta aggregates into term_stats
         snapshot_of = sorted(in_base + [os.path.basename(d) for d in to_compact])
-        conf = {"compact_of": snapshot_of, "mode": mode,
+        conf = {"compact_of": snapshot_of, "mode": "append",
                 **config.fingerprint_dict()}
 
-        def write_postings_append(tmp: str):
+        def write_postings(tmp: str):
             import shutil
 
             def link_into(src_dir: str, prefix: str = "") -> None:
@@ -422,11 +397,13 @@ def compact(
             for d in to_compact:
                 link_into(d, prefix=os.path.basename(d) + "_")
 
+        # write to a new stage name, then swap: the old postings stay
+        # readable until the compacted snapshot is committed (crash-safe)
         results["postings_compacted"] = mgr.run(
-            "postings_compacted", conf, write_postings_append
+            "postings_compacted", conf, write_postings
         )
 
-        def write_term_stats_append(tmp: str):
+        def write_term_stats(tmp: str):
             import pyarrow as pa
             import pyarrow.dataset as ds
             import pyarrow.parquet as pq
@@ -464,87 +441,8 @@ def compact(
             )
 
         results["term_stats_compacted"] = mgr.run(
-            "term_stats_compacted", conf, write_term_stats_append
+            "term_stats_compacted", conf, write_term_stats
         )
-
-    elif to_compact:
-        # this snapshot will contain every not-yet-stats-committed delta
-        snapshot_of = sorted(in_base + [os.path.basename(d) for d in to_compact])
-        conf = {"compact_of": snapshot_of, "mode": mode,
-                **config.fingerprint_dict()}
-
-        # PER-BUCKET incremental merge: deltas are bucket-partitioned with
-        # the same term-hash layout as the base, so only buckets that have
-        # delta rows are decoded and rewritten.  The base scan filters on
-        # the `bucket` partition column (Catalyst prunes the untouched dirs
-        # from the read entirely) and untouched bucket dirs transfer into
-        # the new snapshot as hardlinks — the local analogue of an Iceberg
-        # partition-level replace.  Honest scope note: a broad-vocabulary
-        # TEXT delta touches every term-hash bucket (any doc's terms hash
-        # everywhere), so the pruning pays off for bucket-local deltas
-        # (single-field, small-vocab, or very large n_buckets); the O(delta)
-        # path for ordinary deltas is mode="append".  Falls back to a full
-        # rebuild when the base was built with a different n_buckets.
-        touched_ids = sorted({
-            int(os.path.basename(p).split("=", 1)[1])
-            for d in to_compact
-            for p in glob.glob(os.path.join(d, "bucket=*"))
-        })
-        base_n_buckets = post_manifest.get("config", {}).get("n_buckets")
-        if base_n_buckets != config.n_buckets or len(touched_ids) >= config.n_buckets:
-            touched_ids = None  # rewrite everything
-        # recorded in the stage manifest for observability; deterministic
-        # given (compact_of, base manifest) so recovery re-derives the same
-        # fingerprint
-        conf["touched_buckets"] = touched_ids
-
-        base = spark.read.parquet(mgr.stage_path("postings"))
-        if touched_ids is not None:
-            base = base.filter(F.col("bucket").isin(touched_ids))
-        parts = [decode_postings_df(base)]
-        for d in to_compact:
-            parts.append(decode_postings_df(spark.read.parquet(d)))
-        long_form = parts[0]
-        for p in parts[1:]:
-            long_form = long_form.unionByName(p)
-
-        def write_postings(tmp: str):
-            salted = long_form.select(
-                "doc_id", "term", "tf", "doc_len",
-                (F.col("doc_id") / config.salt_range).cast("long").alias("salt"),
-            )
-            (
-                salted.repartition(config.n_buckets, "term", "salt")
-                .sortWithinPartitions("term", "salt", "doc_id")
-                .transform(lambda df: apply_block_encoder(df, config))
-                .repartition(config.n_buckets, "bucket")
-                .write.partitionBy("bucket").parquet(tmp)
-            )
-            if touched_ids is not None:
-                _link_untouched_buckets(
-                    mgr.stage_path("postings"), tmp, set(touched_ids)
-                )
-
-        # write to a new stage name, then swap: the old postings stay
-        # readable until the compacted snapshot is committed (crash-safe)
-        results["postings_compacted"] = mgr.run("postings_compacted", conf, write_postings)
-
-        def write_term_stats(tmp: str):
-            new_stats = long_form.groupBy("term").agg(
-                F.count("*").alias("df"), F.sum("tf").alias("cf")
-            )
-            if touched_ids is not None:
-                # terms hash to exactly one bucket, so stats for untouched
-                # buckets carry over verbatim from the live table
-                kept = spark.read.parquet(mgr.stage_path("term_stats")).filter(
-                    ~term_bucket_expr(F.col("term"), config.n_buckets).isin(
-                        touched_ids
-                    )
-                )
-                new_stats = kept.unionByName(new_stats)
-            new_stats.write.parquet(tmp)
-
-        results["term_stats_compacted"] = mgr.run("term_stats_compacted", conf, write_term_stats)
 
     # swap committed compacted stages into place; never a moment without a
     # live dir.  Runs UNCONDITIONALLY (not only when this run computed a
@@ -570,11 +468,22 @@ def compact(
     fs["folded_deltas"] = sorted(folded)
     _atomic_write_json(fs_path, fs)
 
-    # tiering policy: append keeps each fold O(delta) but accretes one file
-    # per (delta x base file) in touched buckets — re-block any bucket past
-    # the file-count threshold now, so tail-term fragmentation is bounded
-    # without a manual merge
-    if mode == "append" and auto_defrag_files is not None:
+    if mode == "merge":
+        # the buckets this run's deltas landed in — never the crash-window
+        # deltas of in_base, so a recovery run starts no new stage
+        touched = sorted({
+            int(os.path.basename(p).split("=", 1)[1])
+            for d in to_compact
+            for p in glob.glob(os.path.join(d, "bucket=*"))
+        })
+        if touched:
+            d = defrag(spark, index_dir, config, buckets=touched)
+            results["postings_defragged"] = d["postings_defragged"]
+    elif auto_defrag_files is not None:
+        # tiering policy: append keeps each fold O(delta) but accretes one
+        # file per (delta x base file) in touched buckets — re-block any
+        # bucket past the file-count threshold now, so tail-term
+        # fragmentation is bounded without a manual merge
         d = defrag(
             spark, index_dir, config, max_files_per_bucket=auto_defrag_files
         )

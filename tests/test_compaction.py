@@ -527,9 +527,9 @@ def test_append_fold_batching_policy(spark, webpages_pdf, tmp_path):
 
 def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
     """incremental_index, compact and defrag write blocks under the caller's
-    IndexConfig, so one whose tokenizer, block_size, salt_range or
-    block_order disagrees with the index's field_stats.json is refused
-    before anything is written."""
+    IndexConfig, so one whose tokenizer, block_size, salt_range,
+    block_order or n_buckets disagrees with the index's field_stats.json is
+    refused before anything is written."""
     import glob
 
     from knowledgeir_spark.index.compact import defrag
@@ -554,6 +554,17 @@ def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
         compact(spark, idx_dir, other(block_size=32))
     with pytest.raises(ValueError, match="salt_range"):
         compact(spark, idx_dir, other(salt_range=128), mode="append")
+    # a different bucket count would make readers prune to the wrong buckets
+    with pytest.raises(ValueError, match="n_buckets"):
+        incremental_index(spark, inp, idx_dir, "doc_id long, text string",
+                          other(n_buckets=8))
+    for mode in ("merge", "append"):
+        with pytest.raises(ValueError, match="n_buckets"):
+            compact(spark, idx_dir, other(n_buckets=8), mode=mode)
+    with pytest.raises(ValueError, match="n_buckets"):
+        defrag(spark, idx_dir, other(n_buckets=8), buckets=[0])
+    assert not glob.glob(f"{idx_dir}/deltas/batch_*")
+    assert not glob.glob(f"{idx_dir}/postings_compacted*")
     # the matching config still folds
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
     assert compact(spark, idx_dir, CFG, mode="append")
@@ -664,16 +675,17 @@ def test_append_fold_term_stats_branches_agree(
 
 
 def test_append_fold_after_full_rewrite_merge(spark, webpages_pdf, tmp_path):
-    """A full-rewrite merge (a text delta touches every bucket) writes
-    term_stats through Spark, which may store df/cf as required columns;
-    the next append fold merges that table with the nullable block-metadata
-    aggregate on the coordinator and must still match the oracle."""
+    """A merge fold whose text delta touches every bucket re-blocks every
+    bucket; the next append fold merges term_stats with the nullable
+    block-metadata aggregate on the coordinator and must still match the
+    oracle."""
     from knowledgeir_spark.plans.lineage import StageManager
 
     idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "mr")
     assert compact(spark, idx_dir, CFG, mode="merge")
     m = StageManager(idx_dir).manifest("postings")
-    assert m["config"]["touched_buckets"] is None  # the full-rewrite path
+    # every bucket re-blocked
+    assert m["config"]["touched_buckets"] == list(range(CFG.n_buckets))
 
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     inp = str(tmp_path / "arr_mr")  # the arrivals dir of _build_with_one_delta
@@ -695,3 +707,104 @@ def test_append_fold_after_full_rewrite_merge(spark, webpages_pdf, tmp_path):
     assert reader.field_stats["n_docs"] == 160
     assert reader.field_stats["avg_doc_len"] == pytest.approx(
         oracle.avg_doc_len, abs=1e-9)
+
+
+@pytest.mark.parametrize("block_order", ["docid", "impact"])
+def test_merge_fold_equals_fresh_build(spark, webpages_pdf, tmp_path, block_order):
+    """compact(mode='merge') folds two deltas and re-blocks the buckets they
+    touched: the postings block rows (payload bytes included), term_stats
+    and field_stats scalars are those of a fresh build_index over the union
+    corpus with the same config."""
+    import json
+
+    cfg = IndexConfig(**{**CFG.fingerprint_dict(), "block_order": block_order})
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    idx_dir = str(tmp_path / f"idx_mf_{block_order}")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:200][["doc_id", "text"]]),
+                idx_dir, cfg, input_token=f"base200mf_{block_order}")
+    inp = str(tmp_path / f"arr_mf_{block_order}")
+    schema = "doc_id long, text string"
+    for lo, hi in ((200, 250), (250, 300)):
+        spark.createDataFrame(pdf.iloc[lo:hi][["doc_id", "text"]]).write.mode(
+            "append").parquet(inp)
+        incremental_index(spark, inp, idx_dir, schema, cfg)
+    res = compact(spark, idx_dir, cfg, mode="merge")
+    assert res and not any(r.skipped for r in res.values())
+
+    fresh_dir = str(tmp_path / f"idx_fresh_{block_order}")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:300][["doc_id", "text"]]),
+                fresh_dir, cfg, input_token=f"fresh300_{block_order}")
+
+    def postings(path):
+        return spark.read.parquet(f"{path}/postings").orderBy(
+            "bucket", "term", "salt", "block_id").collect()
+
+    def term_stats(path):
+        return [tuple(r) for r in spark.read.parquet(f"{path}/term_stats")
+                .select("term", "df", "cf").orderBy("term").collect()]
+
+    def scalars(path):
+        with open(f"{path}/field_stats.json") as f:
+            fs = json.load(f)
+        return fs["n_docs"], fs["total_len"]
+
+    got, want = postings(idx_dir), postings(fresh_dir)
+    assert len(got) == len(want)
+    assert got == want
+    assert term_stats(idx_dir) == term_stats(fresh_dir)
+    assert scalars(idx_dir) == scalars(fresh_dir)
+    assert scalars(idx_dir)[0] == 300
+
+
+def test_merge_crash_before_reblock_leaves_folded_index(
+    spark, webpages_pdf, tmp_path, monkeypatch
+):
+    """A crash after the merge fold commits field_stats but before its
+    re-block leaves a correct index whose touched buckets are not
+    re-blocked: it matches the oracle, counts the delta once, and a re-run
+    has nothing to do.  A later merge fold re-blocks the buckets its own
+    delta touched and still matches the oracle."""
+    import glob
+    import json
+    import os
+
+    import knowledgeir_spark.index.compact as cm
+    from knowledgeir_spark.plans.lineage import StageManager
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "rb")
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before re-block")
+
+    monkeypatch.setattr(cm, "defrag", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact(spark, idx_dir, CFG, mode="merge")
+    monkeypatch.undo()
+
+    _assert_matches_oracle(spark, idx_dir, corpus)
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    fs_path = os.path.join(idx_dir, "field_stats.json")
+    with open(fs_path) as f:
+        fs = json.load(f)
+    assert fs["n_docs"] == 130 and len(fs["folded_deltas"]) == 1
+    assert fs["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
+    n_rows = spark.read.parquet(f"{idx_dir}/postings").count()
+    assert compact(spark, idx_dir, CFG, mode="merge") == {}
+    assert spark.read.parquet(f"{idx_dir}/postings").count() == n_rows
+
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    inp = str(tmp_path / "arr_rb")  # the arrivals dir of _build_with_one_delta
+    spark.createDataFrame(pdf.iloc[130:160][["doc_id", "text"]]).write.mode(
+        "append").parquet(inp)
+    incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
+    (batch,) = set(os.listdir(f"{idx_dir}/deltas")) - set(fs["folded_deltas"])
+    touched = sorted(
+        int(p.rsplit("=", 1)[1])
+        for p in glob.glob(f"{idx_dir}/deltas/{batch}/bucket=*")
+    )
+    res = compact(spark, idx_dir, CFG, mode="merge")
+    assert not res["postings_defragged"].skipped
+    m = StageManager(idx_dir).manifest("postings")
+    assert m["config"]["mode"] == "defrag"
+    assert m["config"]["touched_buckets"] == touched
+    _assert_matches_oracle(spark, idx_dir, pdf.iloc[:160])
