@@ -372,16 +372,48 @@ def phrase_probe_once(cpus: int, n_docs: int, fp: str) -> dict:
     return out
 
 
+def crash_fold_drill(spark, root: str, stream_in: str, pdf, cfg, **compact_kw) -> bool:
+    """Land pdf as one more delta, crash its fold just before the
+    field_stats.json replace (the commit point), then re-run compact.  True
+    when the crash left the whole pre-fold field_stats.json and the re-run
+    counted the delta exactly once."""
+    import knowledgeir_spark.index.compact as cm
+    from knowledgeir_spark.streaming.incremental import incremental_index
+
+    spark.createDataFrame(pdf[["doc_id", "text"]]).coalesce(4).write.mode(
+        "append").parquet(stream_in)
+    incremental_index(spark, stream_in, root, "doc_id long, text string", cfg)
+    fs_path = os.path.join(root, "field_stats.json")
+    with open(fs_path) as f:
+        before = f.read()
+    commit = cm._atomic_write_json
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("crash at the commit point")
+
+    cm._atomic_write_json = crash
+    try:
+        cm.compact(spark, root, cfg, **compact_kw)
+    except RuntimeError:
+        pass
+    finally:
+        cm._atomic_write_json = commit
+    with open(fs_path) as f:
+        old_ok = f.read() == before
+    cm.compact(spark, root, cfg, **compact_kw)
+    with open(fs_path) as f:
+        healed = json.load(f)
+    return old_ok and healed["n_docs"] == json.loads(before)["n_docs"] + len(pdf)
+
+
 def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
     """Subprocess entry: streaming ingest -> append compaction -> serving
     freshness (verdict item 6).  1M-doc base + rolling 1% delta batches;
     per batch: time-to-queryable (streamed delta build + O(delta) append
     fold + reader open + planted-term hit) and sustained delta docs/sec.
     Crash-replay assertions run mid-drill: (a) re-invoking the stream is a
-    no-op (checkpoint dedupe), (b) a simulated stats-commit crash heals on
-    the next compact (the lineage protocol, under the streaming path)."""
-    import json as _json
-
+    no-op (checkpoint dedupe), (b) a fold that crashes at its commit point
+    heals on the next compact (crash_fold_drill)."""
     from pyspark.sql import functions as F
 
     from knowledgeir_spark.fixtures.webpages import gen_webpages
@@ -464,33 +496,14 @@ def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
          if d.startswith("batch_")]
     )
     out["stream_replay_is_noop"] = n_deltas_after == n_deltas
-    # (b) simulated stats-commit crash (postings swapped, field_stats not):
-    # roll field_stats back as if the process died between the two commits,
-    # then re-run compact — the heal path must restore exact counts
-    fs_path = os.path.join(root, "field_stats.json")
-    with open(fs_path) as f:
-        fs_good = _json.load(f)
-    fs_crash = dict(fs_good)
-    last = sorted(fs_good.get("folded_deltas", []))[-1]
-    with open(os.path.join(root, "deltas", last, "delta_stats.json")) as f:
-        ds = _json.load(f)
-    fs_crash["folded_deltas"] = [
-        b for b in fs_good["folded_deltas"] if b != last
-    ]
-    fs_crash["n_docs"] -= ds["n_docs"]
-    fs_crash["total_len"] -= ds["total_len"]
-    with open(fs_path, "w") as f:
-        _json.dump(fs_crash, f)
-    compact(spark, root, cfg, mode="append")
-    with open(fs_path) as f:
-        fs_healed = _json.load(f)
-    rd = IndexReader(spark, root)
-    still = rd.search_local([("1", f"freshterm{n_batches - 1}")], k=5)
-    out["crash_heal_restores_stats"] = (
-        fs_healed["n_docs"] == fs_good["n_docs"]
-        and fs_healed["total_len"] == fs_good["total_len"]
-        and bool(still)
-    )
+    # (b) a fold that crashes at its commit point heals on the next compact
+    pdf = gen_webpages(n_docs=batch_docs, seed=1000 + n_batches, with_html=False)
+    pdf = pdf.reset_index().rename(columns={"index": "doc_id"})
+    pdf["doc_id"] += n_docs + n_batches * batch_docs
+    out["crash_heal_restores_stats"] = crash_fold_drill(
+        spark, root, stream_in, pdf, cfg, mode="append"
+    ) and bool(IndexReader(spark, root).search_local(
+        [("1", f"freshterm{n_batches - 1}")], k=5))
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)
     shutil.rmtree(stream_in, ignore_errors=True)

@@ -145,7 +145,8 @@ def leg_freshness_batched() -> dict:
     rolling 1% deltas under compact(min_pending_deltas=N) for N in
     {1, 4, 8}.  Reports sustained delta docs/s and time-to-queryable per
     batch (deferred batches become queryable at the fold that lands them);
-    the crash-heal assertion re-runs under the batched policy."""
+    the crash-heal assertion (crash_fold_drill) runs after each policy's
+    drill."""
     import shutil
 
     from pyspark.sql import functions as F  # noqa: F401
@@ -160,7 +161,7 @@ def leg_freshness_batched() -> dict:
     from knowledgeir_spark.streaming.incremental import incremental_index
 
     sys.path.insert(0, REPO)
-    from bench import ensure_webtext
+    from bench import crash_fold_drill, ensure_webtext
 
     n_docs = int(os.environ.get("KIR_EXTRA_FRESH_DOCS", str(N_DOCS)))
     ensure_webtext(n_docs)
@@ -223,29 +224,14 @@ def leg_freshness_batched() -> dict:
             for j in list(ingest_done):
                 ttq[j] = round(t_fold - ingest_done[j], 1)
         drill_sec = time.time() - t_drill
-        # crash-heal under the batched policy: roll field_stats back one
-        # delta as if the process died between the two commits
-        fs_path = os.path.join(root, "field_stats.json")
-        with open(fs_path) as f:
-            fs_good = json.load(f)
-        last = sorted(fs_good["folded_deltas"])[-1]
-        with open(os.path.join(root, "deltas", last, "delta_stats.json")) as f:
-            ds_ = json.load(f)
-        fs_crash = dict(fs_good)
-        fs_crash["folded_deltas"] = [
-            b for b in fs_good["folded_deltas"] if b != last
-        ]
-        fs_crash["n_docs"] -= ds_["n_docs"]
-        fs_crash["total_len"] -= ds_["total_len"]
-        with open(fs_path, "w") as f:
-            json.dump(fs_crash, f)
-        compact(spark, root, cfg, mode="append", min_pending_deltas=policy_n)
-        with open(fs_path) as f:
-            fs_healed = json.load(f)
-        heal_ok = (
-            fs_healed["n_docs"] == fs_good["n_docs"]
-            and fs_healed["total_len"] == fs_good["total_len"]
-        )
+        # crash-heal: after the policy's drill, a fold that crashes at its
+        # commit point heals on the next compact
+        pdf = gen_webpages(n_docs=batch_docs, seed=2000 + n_batches,
+                           with_html=False)
+        pdf = pdf.reset_index().rename(columns={"index": "doc_id"})
+        pdf["doc_id"] += n_docs + n_batches * batch_docs
+        heal_ok = crash_fold_drill(spark, root, stream_in, pdf, cfg,
+                                   mode="append", min_pending_deltas=1)
         ttq_vals = sorted(ttq.values())
         out["policies"][str(policy_n)] = {
             "base_build_sec": base_build,

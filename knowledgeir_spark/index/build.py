@@ -10,7 +10,13 @@ Pipeline (each stage an idempotent lineage-tracked commit, plans/lineage.py):
        mapInArrow block encoder]-->
   postings(bucket=*/...)                                     [stage 2]
   term_stats(term, df, cf)                                   [stage 3]
-  field_stats.json {n_docs, total_len, avg_doc_len}          [stage 4]
+  field_stats.json {n_docs, total_len, avg_doc_len,
+                    generation: 1, postings: [...], term_stats: [...]}
+                                                             [stage 4]
+
+field_stats.json is the index's commit point: it lists the files of the
+live generation (live_files), and postings/ and term_stats/ are pools that
+later folds and defrags add files to (index/compact.py).
 
 Skew strategy: the salt is a CONTIGUOUS doc_id range bucket, not a random
 hash — so (a) a Zipf head term (df ~ n_docs) is split across ~n_docs/salt_range
@@ -88,7 +94,13 @@ TERM_STATS_CACHE_MAX = 2_000_000
 
 def check_codec(field_stats: dict, index_dir: str) -> None:
     """Refuse an index whose posting payloads are not varint (an index
-    written before the format went varint-only)."""
+    written before the format went varint-only), or whose field_stats.json
+    lists no generation files (written before the generation commit)."""
+    if "generation" not in field_stats:
+        raise ValueError(
+            f"index {index_dir} has no generation file lists; rebuild it "
+            "with build_index"
+        )
     codec = field_stats.get("codec", "varint")
     if codec != "varint":
         raise ValueError(
@@ -97,17 +109,42 @@ def check_codec(field_stats: dict, index_dir: str) -> None:
         )
 
 
+def read_field_stats(index_dir: str) -> dict:
+    with open(os.path.join(index_dir, "field_stats.json")) as f:
+        return json.load(f)
+
+
+def live_files(index_dir: str, table: str, fs: dict | None = None) -> list[str]:
+    """Paths of the parquet files of `table` ("postings" or "term_stats")
+    in the generation field_stats.json commits, or in `fs`, a field_stats
+    dict read earlier (which pins that generation) or any dict holding
+    `table`'s list.  Every reader of the tables resolves them here: the
+    table directories are pools that also hold files of other
+    generations."""
+    if fs is None:
+        fs = read_field_stats(index_dir)
+    return [os.path.join(index_dir, p) for p in fs[table]]
+
+
+def read_live(
+    spark: SparkSession, index_dir: str, table: str, fs: dict | None = None
+) -> DataFrame:
+    """Spark scan of live_files(index_dir, table, fs); the postings'
+    `bucket` partition column comes from the paths below the pool."""
+    return spark.read.option(
+        "basePath", os.path.join(index_dir, table)
+    ).parquet(*live_files(index_dir, table, fs))
+
+
 def check_layout(index_dir: str, config: IndexConfig) -> None:
     """Raise ValueError when `config` disagrees with the layout recorded in
     index_dir's field_stats.json (no base index yet: nothing to check).
     Deltas or re-blocked buckets written under another tokenizer, block
     size, salt range, block order or bucket count would silently mix two
     layouts."""
-    path = os.path.join(index_dir, "field_stats.json")
-    if not os.path.exists(path):
+    if not os.path.exists(os.path.join(index_dir, "field_stats.json")):
         return
-    with open(path) as f:
-        fs = json.load(f)
+    fs = read_field_stats(index_dir)
     check_codec(fs, index_dir)
     diff = [
         f"{k}: index has {fs[k]!r}, config has {getattr(config, k)!r}"
@@ -338,10 +375,11 @@ def build_index(
     """Build (or resume) the full index at index_dir.  Returns stage results
     (each .skipped tells whether the committed snapshot was reused)."""
     mgr = StageManager(index_dir)
-    # format 2 = sum_tf block column; format 3 = varint-only payloads.
-    # Bumping the fingerprint keeps resume from ever pairing new code with
-    # an old snapshot
-    conf = {"input": input_token, "format": 3, **config.fingerprint_dict()}
+    # format 2 = sum_tf block column; format 3 = varint-only payloads;
+    # format 4 = generation file lists in field_stats.json.  Bumping the
+    # fingerprint keeps resume from ever pairing new code with an old
+    # snapshot
+    conf = {"input": input_token, "format": 4, **config.fingerprint_dict()}
     results: dict[str, StageResult] = {}
 
     # stage 1: long-form doc terms (map-only tokenize+TF)
@@ -395,13 +433,17 @@ def build_index(
 
     results["postings"] = mgr.run("postings", conf, write_postings)
 
+    def gen_files(stage: str) -> list[str]:
+        """The stage's files, relative to index_dir: generation 1 lists."""
+        return [os.path.join(stage, f["file"]) for f in results[stage].files]
+
     # stage 3: term stats (df = distinct docs, cf = collection tf).
     # Aggregated from the block METADATA (sum of per-block n_docs / sum_tf)
     # instead of the long form: ~1/25 the rows for identical values (every
     # doc-term posting lands in exactly one block).
-    blocks = spark.read.parquet(mgr.stage_path("postings"))
-
     def write_term_stats(tmp: str):
+        blocks = read_live(spark, index_dir, "postings",
+                           {"postings": gen_files("postings")})
         (
             blocks.groupBy("term")
             .agg(
@@ -415,10 +457,15 @@ def build_index(
 
     # stage 4: field-level scalars (computed over ALL docs incl. empty);
     # total_len = sum of collection tf = sum(cf) over the (small) term_stats
-    # table — the long form is never re-scanned
-    if not mgr.is_json_committed("field_stats", conf):
+    # table — the long form is never re-scanned.  Re-committed whenever a
+    # stage above was recomputed, so the file lists never name a file the
+    # recompute removed
+    if not mgr.is_json_committed("field_stats", conf) or not all(
+        r.skipped for r in results.values()
+    ):
         n_docs = docs_df.count()
-        ts = spark.read.parquet(mgr.stage_path("term_stats"))
+        ts = read_live(spark, index_dir, "term_stats",
+                       {"term_stats": gen_files("term_stats")})
         row = ts.agg(F.sum("cf").alias("total_len")).collect()[0]
         total_len = int(row["total_len"] or 0)
         mgr.put_json(
@@ -433,6 +480,9 @@ def build_index(
                 "codec": "varint",
                 "block_order": config.block_order,
                 "tokenizer": config.tokenizer,
+                "generation": 1,
+                "postings": gen_files("postings"),
+                "term_stats": gen_files("term_stats"),
             },
         )
     return results

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_expr, tokenize_simple_expr
-from .build import term_bucket_expr, term_bucket_py
+from .build import read_live, term_bucket_expr, term_bucket_py
 
 
 def write_nextword_store(
@@ -81,7 +81,7 @@ def write_nextword_store(
         head_min_df = max(16, n_docs // 100)
 
     spark = docs.sparkSession
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+    ts = read_live(spark, index_dir, "term_stats")
     heads = sorted(
         r["term"] for r in ts.filter(F.col("df") >= head_min_df)
         .select("term").collect()

@@ -30,7 +30,6 @@ Scores are rank-identical to the full-scan DataFrame path and the oracle
 from __future__ import annotations
 
 import functools
-import json
 import math
 import os
 import time
@@ -41,7 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topk import topk_per_query
-from .build import TERM_STATS_CACHE_MAX, check_codec, term_bucket_py
+from .build import (
+    TERM_STATS_CACHE_MAX, check_codec, live_files, read_field_stats, read_live,
+    term_bucket_py,
+)
 from .codec import decode_blocks_concat, decode_ids_concat
 from . import scoring_np as S
 
@@ -904,7 +906,13 @@ def _lev_le1(a: str, b: str) -> int | None:
 
 
 class IndexReader:
-    """Reads a committed index (build.build_index layout)."""
+    """Reads a committed index (build.build_index layout), pinned to the
+    generation field_stats.json commits when the reader opens: every scan
+    touches only that generation's files, and its term_stats is read at
+    open.  Maintenance deletes a file only at the second commit that does
+    not list it, so a reader survives at least one later commit, and any
+    number of append folds (which drop no postings file).  Open a new
+    reader to see later commits."""
 
     # term_stats tables up to this row count are read once into a
     # driver-side dict (a few MB); larger vocabularies fall back to a
@@ -914,8 +922,7 @@ class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "field_stats.json")) as f:
-            self.field_stats = json.load(f)
+        self.field_stats = read_field_stats(index_dir)
         self.n_buckets = int(self.field_stats["n_buckets"])
         check_codec(self.field_stats, index_dir)
         # "impact" layouts have overlapping per-block doc-id ranges, which
@@ -930,6 +937,19 @@ class IndexReader:
         # job; only search() and the oversized-vocabulary fallbacks need them
         self._df_cache: dict[str, float] | None = None
         self._df_cache_checked = False
+        # the generation's term_stats, read with pyarrow (no Spark job) so
+        # the reader keeps it after a commit deletes its file; an
+        # oversized vocabulary stays on disk for the Spark fallbacks
+        import pyarrow.dataset as ds
+
+        dset = ds.dataset(
+            live_files(index_dir, "term_stats", self.field_stats),
+            format="parquet",
+        )
+        self._term_stats_table = (
+            dset.to_table(columns=["term", "df"])
+            if dset.count_rows() <= self._TERM_STATS_CACHE_MAX else None
+        )
         # serving hot-term cache (decoded postings; one index snapshot per
         # reader, so no invalidation concern).  Budget scales with the
         # corpus: a fixed 10M-posting cap starves large indexes (at 2M docs
@@ -960,11 +980,12 @@ class IndexReader:
 
     @functools.cached_property
     def _postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "postings"))
+        return read_live(self.spark, self.index_dir, "postings", self.field_stats)
 
     @functools.cached_property
     def _term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+        return read_live(self.spark, self.index_dir, "term_stats",
+                         self.field_stats)
 
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
         buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
@@ -976,16 +997,10 @@ class IndexReader:
 
     def term_stats_for(self, terms: list[str]) -> dict[str, float]:
         if self._df_cache is None and not self._df_cache_checked:
-            # run the size check once per reader, from parquet footers; the
-            # dict is read with pyarrow, so this runs no Spark job
-            import pyarrow.dataset as ds
-
+            # build the dict once per reader from the table read at open
             self._df_cache_checked = True
-            dset = ds.dataset(
-                os.path.join(self.index_dir, "term_stats"), format="parquet"
-            )
-            if dset.count_rows() <= self._TERM_STATS_CACHE_MAX:
-                tbl = dset.to_table(columns=["term", "df"])
+            tbl, self._term_stats_table = self._term_stats_table, None
+            if tbl is not None and tbl.num_rows <= self._TERM_STATS_CACHE_MAX:
                 self._df_cache = dict(zip(
                     tbl["term"].to_pylist(),
                     tbl["df"].to_numpy().astype(np.float64).tolist(),
@@ -1176,7 +1191,9 @@ class IndexReader:
             import pyarrow.dataset as ds
 
             self._pa_dataset = ds.dataset(
-                os.path.join(self.index_dir, "postings"), partitioning="hive"
+                live_files(self.index_dir, "postings", self.field_stats),
+                format="parquet", partitioning="hive",
+                partition_base_dir=os.path.join(self.index_dir, "postings"),
             )
         return self._pa_dataset
 

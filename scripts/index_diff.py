@@ -3,12 +3,18 @@
 
   python scripts/index_diff.py IDX_A IDX_B
 
-Compared, in this order:
+Compared, in this order, over each index's live generation only (the
+files field_stats.json lists; other files in the postings/ and term_stats/
+pools are not read):
   - postings block rows, every column (payload bytes included), sorted by
     (bucket, term, salt, block_id) — file names and file counts are not;
   - the term_stats (term, df, cf) rows, sorted by term;
-  - field_stats.json, without "folded_deltas" (delta batch names differ
-    between two runs of the same ingest).
+  - field_stats.json, without the generation bookkeeping: "generation",
+    the "postings" and "term_stats" file lists, and "folded_deltas" (delta
+    batch names differ between two runs of the same ingest).
+
+An index written before field_stats.json listed its files (no
+"generation") is read whole from its table directories.
 
 Exit status 0 when the indexes are identical, 1 otherwise.  Reads with
 pyarrow only; no Spark session is started.
@@ -24,13 +30,19 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 
 POSTINGS_KEY = ["bucket", "term", "salt", "block_id"]
+BOOKKEEPING = ("generation", "postings", "term_stats", "folded_deltas")
 
 
-def _read(path: str, key: list[str], columns: list[str] | None = None) -> pa.Table:
-    table = ds.dataset(path, format="parquet", partitioning="hive").to_table(
-        columns=columns
-    )
-    return table.sort_by([(c, "ascending") for c in key])
+def _read(index_dir: str, table: str, key: list[str],
+          columns: list[str] | None = None) -> pa.Table:
+    pool = os.path.join(index_dir, table)
+    with open(os.path.join(index_dir, "field_stats.json")) as f:
+        fs = json.load(f)
+    files = [os.path.join(index_dir, p) for p in fs[table]] \
+        if "generation" in fs else pool
+    rows = ds.dataset(files, format="parquet", partitioning="hive",
+                      partition_base_dir=pool).to_table(columns=columns)
+    return rows.sort_by([(c, "ascending") for c in key])
 
 
 def table_diff(a: pa.Table, b: pa.Table, key: list[str], label: str) -> str | None:
@@ -64,23 +76,22 @@ def table_diff(a: pa.Table, b: pa.Table, key: list[str], label: str) -> str | No
 def field_stats(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "field_stats.json")) as f:
         fs = json.load(f)
-    fs.pop("folded_deltas", None)
-    return fs
+    return {k: v for k, v in fs.items() if k not in BOOKKEEPING}
 
 
 def index_diff(a: str, b: str) -> str | None:
     """The first difference between index dirs a and b, or None."""
     diff = table_diff(
-        _read(os.path.join(a, "postings"), POSTINGS_KEY),
-        _read(os.path.join(b, "postings"), POSTINGS_KEY),
+        _read(a, "postings", POSTINGS_KEY),
+        _read(b, "postings", POSTINGS_KEY),
         POSTINGS_KEY, "postings",
     )
     if diff:
         return diff
     cols = ["term", "df", "cf"]
     diff = table_diff(
-        _read(os.path.join(a, "term_stats"), ["term"], cols),
-        _read(os.path.join(b, "term_stats"), ["term"], cols),
+        _read(a, "term_stats", ["term"], cols),
+        _read(b, "term_stats", ["term"], cols),
         ["term"], "term_stats",
     )
     if diff:

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from knowledgeir_spark.index.build import IndexConfig, build_index
+from knowledgeir_spark.index.build import (
+    IndexConfig, build_index, live_files, read_field_stats, read_live,
+)
 from knowledgeir_spark.index.compact import compact, decode_postings_df
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
@@ -41,7 +43,7 @@ def test_compacted_index_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
     assert reader.field_stats["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
 
     long_form = decode_postings_df(
-        spark.read.parquet(f"{idx_dir}/postings")
+        read_live(spark, idx_dir, "postings")
     ).collect()
     got: dict[str, list] = {}
     for r in long_form:
@@ -106,7 +108,7 @@ def test_compact_rerun_and_new_delta(spark, webpages_pdf, tmp_path):
     assert fs2["n_docs"] == 170 and len(fs2["folded_deltas"]) == 2
 
     oracle = OracleIndex(list(zip(pdf.iloc[:170]["doc_id"], pdf.iloc[:170]["text"])))
-    long_form = decode_postings_df(spark.read.parquet(f"{idx_dir}/postings")).collect()
+    long_form = decode_postings_df(read_live(spark, idx_dir, "postings")).collect()
     got: dict[str, list] = {}
     for r in long_form:
         got.setdefault(r["term"], []).append((r["doc_id"], r["tf"]))
@@ -115,47 +117,50 @@ def test_compact_rerun_and_new_delta(spark, webpages_pdf, tmp_path):
         assert sorted(got[t]) == sorted(oracle.postings[t]), t
 
 
-def test_compact_recovers_stats_commit_crash(spark, webpages_pdf, tmp_path):
-    """Crash window between the postings swap and the stats commit: the
-    postings manifest already records the folded delta, so a re-run must
-    complete the stats commit WITHOUT unioning the delta into the (already
-    compacted) base again."""
+def test_compact_recovers_stats_commit_crash(
+    spark, webpages_pdf, tmp_path, monkeypatch
+):
+    """Crash just before the commit point (the field_stats.json replace):
+    the pool already holds the fold's files, but field_stats.json is the
+    whole pre-fold file, so the index reads exactly as before the fold.  A
+    re-run folds the delta once and equals an uninterrupted fold."""
     import json
     import os
+    import shutil
 
-    idx_dir = str(tmp_path / "idx4")
-    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
-    docs = spark.createDataFrame(pdf.iloc[:100][["doc_id", "text"]])
-    build_index(spark, docs, idx_dir, CFG, input_token="base100")
-    inp = str(tmp_path / "arr4")
-    spark.createDataFrame(pdf.iloc[100:130][["doc_id", "text"]]).write.mode(
-        "append").parquet(inp)
-    incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
-    assert compact(spark, idx_dir, CFG)
+    import knowledgeir_spark.index.compact as cm
 
-    n_rows = spark.read.parquet(f"{idx_dir}/postings").count()
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "sc")
+    pre, ref = str(tmp_path / "sc_pre"), str(tmp_path / "sc_ref")
+    shutil.copytree(idx_dir, pre)
+    shutil.copytree(idx_dir, ref)
+    assert compact(spark, ref, CFG, mode="append")
     fs_path = os.path.join(idx_dir, "field_stats.json")
     with open(fs_path) as f:
-        fs_good = json.load(f)
-    # simulate the crash: stats commit rolled back to pre-compact state
-    batch = fs_good["folded_deltas"][0]
-    with open(os.path.join(idx_dir, "deltas", batch, "delta_stats.json")) as f:
-        ds = json.load(f)
-    fs_crash = dict(fs_good)
-    fs_crash["folded_deltas"] = []
-    fs_crash["n_docs"] -= ds["n_docs"]
-    fs_crash["total_len"] -= ds["total_len"]
-    with open(fs_path, "w") as f:
-        json.dump(fs_crash, f)
+        fs_pre = f.read()
 
-    compact(spark, idx_dir, CFG)  # recovery run
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before the stats commit")
+
+    monkeypatch.setattr(cm, "_atomic_write_json", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact(spark, idx_dir, CFG, mode="append")
+    monkeypatch.undo()
+
+    with open(fs_path) as f:
+        assert f.read() == fs_pre
+    assert _index_diff(idx_dir, pre) is None
+    assert IndexReader(spark, idx_dir).field_stats["n_docs"] == 100
+
+    compact(spark, idx_dir, CFG, mode="append")  # recovery run
+    assert _index_diff(idx_dir, ref) is None
     with open(fs_path) as f:
         fs_after = json.load(f)
-    assert fs_after["n_docs"] == fs_good["n_docs"]
-    assert fs_after["total_len"] == fs_good["total_len"]
-    assert fs_after["folded_deltas"] == fs_good["folded_deltas"]
-    # postings were NOT re-unioned: same physical row count
-    assert spark.read.parquet(f"{idx_dir}/postings").count() == n_rows
+    assert fs_after["n_docs"] == 130 and len(fs_after["folded_deltas"]) == 1
+    # postings were NOT unioned twice: same physical row count
+    assert read_live(spark, idx_dir, "postings").count() == \
+        read_live(spark, ref, "postings").count()
+    _assert_matches_oracle(spark, idx_dir, corpus)
 
 
 def _build_with_one_delta(spark, webpages_pdf, tmp_path, tag):
@@ -175,7 +180,7 @@ def _assert_matches_oracle(spark, idx_dir, corpus_pdf):
     """Postings AND term_stats exactly match a from-scratch oracle over the
     union corpus (catches both duplicated postings and stale df/cf)."""
     oracle = OracleIndex(list(zip(corpus_pdf["doc_id"], corpus_pdf["text"])))
-    long_form = decode_postings_df(spark.read.parquet(f"{idx_dir}/postings")).collect()
+    long_form = decode_postings_df(read_live(spark, idx_dir, "postings")).collect()
     got: dict[str, list] = {}
     for r in long_form:
         got.setdefault(r["term"], []).append((r["doc_id"], r["tf"]))
@@ -184,87 +189,202 @@ def _assert_matches_oracle(spark, idx_dir, corpus_pdf):
         assert sorted(got[t]) == sorted(oracle.postings[t]), t
     stats = {
         r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(f"{idx_dir}/term_stats").collect()
+        for r in read_live(spark, idx_dir, "term_stats").collect()
     }
     for t, plist in oracle.postings.items():
         assert stats[t] == (len(plist), sum(tf for _, tf in plist)), t
 
 
-def test_compact_recovers_crash_between_stage_swaps(
+def _index_diff(a: str, b: str):
+    """scripts/index_diff.py's first difference between two indexes' live
+    generations, or None."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).parents[1] / "scripts" / "index_diff.py"
+    spec = importlib.util.spec_from_file_location("index_diff", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.index_diff(a, b)
+
+
+def _defragged_buckets(idx_dir: str) -> list[int]:
+    """Buckets holding files the live generation's own defrag wrote (named
+    g<generation>_*)."""
+    import os
+
+    prefix = f"g{read_field_stats(idx_dir)['generation']}_"
+    return sorted({
+        int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
+        for p in live_files(idx_dir, "postings")
+        if os.path.basename(p).startswith(prefix)
+    })
+
+
+def test_compact_recovers_crash_before_term_stats_write(
     spark, webpages_pdf, tmp_path, monkeypatch
 ):
-    """Crash AFTER the postings swap but BEFORE the term_stats swap: on
-    recovery the live postings manifest already records the delta (so
-    to_compact is empty) — the orphaned term_stats_compacted snapshot must
-    still be installed, or df/cf stay permanently stale."""
+    """Crash after the delta files are linked into the postings pool but
+    before the folded term_stats is written: nothing lists the linked
+    files, so the index reads exactly as before; the recovery run relinks
+    them, and equals an uninterrupted fold."""
+    import os
+    import shutil
+
     import knowledgeir_spark.index.compact as cm
 
     idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "c1")
+    pre, ref = str(tmp_path / "c1_pre"), str(tmp_path / "c1_ref")
+    shutil.copytree(idx_dir, pre)
+    shutil.copytree(idx_dir, ref)
+    compact(spark, ref, CFG)
 
-    def swap_postings_then_crash(mgr):
-        cm._swap_one(mgr, "postings")
-        raise RuntimeError("simulated crash between stage swaps")
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before the term_stats write")
 
-    monkeypatch.setattr(cm, "_swap_compacted_stages", swap_postings_then_crash)
+    monkeypatch.setattr(cm, "_fold_term_stats", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact(spark, idx_dir, CFG)
     monkeypatch.undo()
 
-    # stale state is real: term_stats_compacted exists, live term_stats old
-    import os
-
-    assert os.path.isdir(f"{idx_dir}/term_stats_compacted")
+    # the linked files are really in the pool, and listed by nothing
+    linked = [p for p in os.listdir(f"{idx_dir}/postings/bucket=0")
+              if p.startswith("batch_")]
+    assert linked
+    assert _index_diff(idx_dir, pre) is None
     res = compact(spark, idx_dir, CFG)  # recovery run
-    assert not os.path.isdir(f"{idx_dir}/term_stats_compacted")
+    assert res and not any(r.skipped for r in res.values())
     _assert_matches_oracle(spark, idx_dir, corpus)
-    # and the recovery did NOT recompute/union anything (no new stage runs)
-    assert not any(not r.skipped for r in res.values())
+    assert _index_diff(idx_dir, ref) is None
 
 
-def test_compact_recovers_crash_before_manifest_replace(
+def test_compact_recovers_crash_before_cleanup(
     spark, webpages_pdf, tmp_path, monkeypatch
 ):
-    """Crash between the swap's data rename and its manifest replace: live
-    postings already contain the delta but the live manifest does not record
-    it.  Recovery must finish the manifest commit — NOT re-union the delta
-    into the already-compacted base (which would double df/cf)."""
+    """Crash right after the field_stats.json replace, before the files no
+    generation needs are deleted: the index reads as the new generation, a
+    re-run has nothing to fold, and the next commit deletes the leftovers."""
+    import json
     import os
 
     import knowledgeir_spark.index.compact as cm
 
     idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "c2")
+    real = cm._atomic_write_json
 
-    def swap_without_manifest_then_crash(mgr, stage):
-        import shutil
+    def commit_then_crash(path, obj):
+        real(path, obj)
+        raise RuntimeError("simulated crash before cleanup")
 
-        old, new = mgr.stage_path(stage), mgr.stage_path(stage + "_compacted")
-        bak = old + ".bak"
-        os.rename(old, bak)
-        os.rename(new, old)
-        shutil.rmtree(bak, ignore_errors=True)
-        raise RuntimeError("simulated crash before manifest replace")
-
-    monkeypatch.setattr(cm, "_swap_one", swap_without_manifest_then_crash)
+    monkeypatch.setattr(cm, "_atomic_write_json", commit_then_crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        compact(spark, idx_dir, CFG)
+        compact(spark, idx_dir, CFG, mode="append")
     monkeypatch.undo()
 
-    # the dangerous state: compacted manifest present, its dir gone, live
-    # manifest still pre-compact
-    assert os.path.exists(f"{idx_dir}/_lineage/postings_compacted.json")
-    assert not os.path.isdir(f"{idx_dir}/postings_compacted")
-
-    compact(spark, idx_dir, CFG)  # recovery run
-    assert not os.path.exists(f"{idx_dir}/_lineage/postings_compacted.json")
     _assert_matches_oracle(spark, idx_dir, corpus)
-
-    import json
-
     with open(f"{idx_dir}/field_stats.json") as f:
         fs = json.load(f)
     assert fs["n_docs"] == 130 and len(fs["folded_deltas"]) == 1
+    assert fs["generation"] == 2
     # idempotent afterwards
-    assert compact(spark, idx_dir, CFG) == {}
+    assert compact(spark, idx_dir, CFG, mode="append") == {}
+    # the build's _SUCCESS marker is listed by no generation: it stays
+    # until the next commit's cleanup
+    assert os.path.exists(f"{idx_dir}/postings/_SUCCESS")
+    from knowledgeir_spark.index.compact import defrag
+
+    defrag(spark, idx_dir, CFG, buckets=[0])
+    assert not os.path.exists(f"{idx_dir}/postings/_SUCCESS")
+    _assert_matches_oracle(spark, idx_dir, corpus)
+
+
+class _Crash(Exception):
+    pass
+
+
+class _CrashingOs:
+    """Stands in for the os module inside index/compact.py: counts the
+    calls that change the index directory (link, replace, remove) and
+    raises _Crash instead of making call number `at`."""
+
+    WRITES = ("link", "replace", "remove")
+
+    def __init__(self, at: int | None):
+        import os
+
+        self._os, self.at, self.calls = os, at, []
+
+    def __getattr__(self, name):
+        real = getattr(self._os, name)
+        if name not in self.WRITES:
+            return real
+
+        def step(*a, **kw):
+            self.calls.append(name)
+            if len(self.calls) == self.at:
+                raise _Crash(f"crash before {name} #{self.at}")
+            return real(*a, **kw)
+
+        return step
+
+
+@pytest.mark.parametrize("op", ["fold", "defrag"])
+def test_crash_at_every_write_step_reads_old_or_new(
+    spark, webpages_pdf, tmp_path, monkeypatch, op
+):
+    """Inject a crash before each write step of an append fold and of a
+    defrag (every link and replace, and the first delete of the cleanup):
+    after each, a fresh reader sees exactly the old or exactly the new
+    index, and a re-run converges to an uninterrupted run (index_diff)."""
+    import shutil
+
+    import knowledgeir_spark.index.compact as cm
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, op)
+    if op == "defrag":  # re-block two buckets of the folded index
+        compact(spark, idx_dir, CFG, mode="append")
+        corpus_old = corpus_new = corpus
+    else:
+        corpus_old, corpus_new = corpus.iloc[:100], corpus
+
+    def run(path):
+        if op == "fold":
+            return compact(spark, path, CFG, mode="append",
+                           auto_defrag_files=None)
+        return cm.defrag(spark, path, CFG, buckets=[0, 1])
+
+    old = str(tmp_path / f"{op}_old")
+    shutil.copytree(idx_dir, old)
+    new = str(tmp_path / f"{op}_new")
+    shutil.copytree(idx_dir, new)
+    rec = _CrashingOs(None)
+    monkeypatch.setattr(cm, "os", rec)
+    assert run(new)
+    monkeypatch.undo()
+    # every link and replace, then the cleanup's first delete
+    steps = [i + 1 for i, n in enumerate(rec.calls) if n != "remove"]
+    steps += [rec.calls.index("remove") + 1] if "remove" in rec.calls else []
+    assert len(steps) >= 3, rec.calls
+
+    oracle_old = OracleIndex(list(zip(corpus_old["doc_id"], corpus_old["text"])))
+    oracle_new = OracleIndex(list(zip(corpus_new["doc_id"], corpus_new["text"])))
+    for at in steps:
+        path = str(tmp_path / f"{op}_crash_{at}")
+        shutil.copytree(old, path)
+        monkeypatch.setattr(cm, "os", _CrashingOs(at))
+        with pytest.raises(_Crash):
+            run(path)
+        monkeypatch.undo()
+        as_old, as_new = _index_diff(path, old), _index_diff(path, new)
+        assert as_old is None or as_new is None, (at, as_old, as_new)
+        reader = IndexReader(spark, path)
+        oracle = oracle_old if as_old is None else oracle_new
+        for q in ("the data spark w0005", "w0100 w0200"):
+            got = reader.search_local([("1", q)], k=10)
+            assert [r[1] for r in got] == [d for d, _ in oracle.topk(q, k=10)]
+        run(path)  # re-run after the crash
+        assert _index_diff(path, new) is None, at
+        shutil.rmtree(path)
 
 
 def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
@@ -275,7 +395,6 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
     import os
 
     from knowledgeir_spark.index.build import term_bucket_py
-    from knowledgeir_spark.plans.lineage import StageManager
 
     idx_dir = str(tmp_path / "idx_pb")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
@@ -292,11 +411,9 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
 
     def bucket_inodes(bucket: int) -> set[int]:
-        d = os.path.join(idx_dir, "postings", f"bucket={bucket}")
         return {
-            os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+            os.stat(p).st_ino for p in live_files(idx_dir, "postings")
+            if os.path.dirname(p).endswith(f"bucket={bucket}")
         }
 
     pre = {b: bucket_inodes(b) for b in range(CFG.n_buckets) if b != tb}
@@ -304,8 +421,7 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
 
     assert compact(spark, idx_dir, CFG)
 
-    m = StageManager(idx_dir).manifest("postings")
-    assert m["config"]["touched_buckets"] == [tb]
+    assert _defragged_buckets(idx_dir) == [tb]
     for b, inodes in pre.items():
         assert bucket_inodes(b) == inodes, f"bucket {b} was rewritten"
 
@@ -342,18 +458,13 @@ def test_append_compaction_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, CFG)
 
-    def inodes(root):
-        out = set()
-        for dp, _dn, fns in os.walk(root):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    out.add(os.stat(os.path.join(dp, fn)).st_ino)
-        return out
+    def inodes(idx_dir):
+        return {os.stat(p).st_ino for p in live_files(idx_dir, "postings")}
 
-    base_inodes = inodes(os.path.join(idx_dir, "postings"))
+    base_inodes = inodes(idx_dir)
     res = compact(spark, idx_dir, CFG, mode="append")
     assert res and not any(r.skipped for r in res.values())
-    after = inodes(os.path.join(idx_dir, "postings"))
+    after = inodes(idx_dir)
     assert base_inodes <= after  # every base file carried over untouched
 
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:300])
@@ -403,7 +514,6 @@ def test_append_auto_defrag_rewrites_only_fragmented_buckets(
 
     from knowledgeir_spark.index.build import term_bucket_py
     from knowledgeir_spark.index.compact import fragmented_buckets
-    from knowledgeir_spark.plans.lineage import StageManager
 
     idx_dir = str(tmp_path / "idx_defrag")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
@@ -416,9 +526,9 @@ def test_append_auto_defrag_rewrites_only_fragmented_buckets(
     tb = term_bucket_py(term, CFG.n_buckets)
 
     def bucket_files(b):
-        d = os.path.join(idx_dir, "postings", f"bucket={b}")
-        return {f: os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d) if f.endswith(".parquet")}
+        return {os.path.basename(p): os.stat(p).st_ino
+                for p in live_files(idx_dir, "postings")
+                if os.path.dirname(p).endswith(f"bucket={b}")}
 
     for i in range(5):
         spark.createDataFrame(
@@ -443,8 +553,7 @@ def test_append_auto_defrag_rewrites_only_fragmented_buckets(
                   auto_defrag_files=others_max)
     assert "defrag" in res, res
     assert res["defrag"]["defragged_buckets"] == [tb]
-    m = StageManager(idx_dir).manifest("postings")
-    assert m["config"]["mode"] == "defrag"
+    assert _defragged_buckets(idx_dir) == [tb]
     assert len(bucket_files(tb)) <= others_max  # re-blocked, fewer files
     for b, files in keep.items():
         now = bucket_files(b)
@@ -540,6 +649,8 @@ def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
                 idx_dir, CFG, input_token="base60")
     inp = str(tmp_path / "arr_layout")
     spark.createDataFrame(pdf.iloc[60:80][["doc_id", "text"]]).write.parquet(inp)
+    fs_before = read_field_stats(idx_dir)
+    pool_before = sorted(glob.glob(f"{idx_dir}/*/**", recursive=True))
 
     def other(**kw):
         return IndexConfig(**{**CFG.fingerprint_dict(), **kw})
@@ -564,7 +675,9 @@ def test_maintenance_refuses_layout_mismatch(spark, webpages_pdf, tmp_path):
     with pytest.raises(ValueError, match="n_buckets"):
         defrag(spark, idx_dir, other(n_buckets=8), buckets=[0])
     assert not glob.glob(f"{idx_dir}/deltas/batch_*")
-    assert not glob.glob(f"{idx_dir}/postings_compacted*")
+    # nothing committed, and no file written
+    assert read_field_stats(idx_dir) == fs_before
+    assert sorted(glob.glob(f"{idx_dir}/*/**", recursive=True)) == pool_before
     # the matching config still folds
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
     assert compact(spark, idx_dir, CFG, mode="append")
@@ -653,7 +766,7 @@ def test_append_fold_term_stats_branches_agree(
             sc.setLocalProperty("spark.jobGroup.id", None)
         return {
             r["term"]: (r["df"], r["cf"])
-            for r in spark.read.parquet(f"{path}/term_stats").collect()
+            for r in read_live(spark, path, "term_stats").collect()
         }
 
     coord = fold(idx_dir, "fold-coordinator")
@@ -679,13 +792,10 @@ def test_append_fold_after_full_rewrite_merge(spark, webpages_pdf, tmp_path):
     bucket; the next append fold merges term_stats with the nullable
     block-metadata aggregate on the coordinator and must still match the
     oracle."""
-    from knowledgeir_spark.plans.lineage import StageManager
-
     idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "mr")
     assert compact(spark, idx_dir, CFG, mode="merge")
-    m = StageManager(idx_dir).manifest("postings")
     # every bucket re-blocked
-    assert m["config"]["touched_buckets"] == list(range(CFG.n_buckets))
+    assert _defragged_buckets(idx_dir) == list(range(CFG.n_buckets))
 
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     inp = str(tmp_path / "arr_mr")  # the arrivals dir of _build_with_one_delta
@@ -736,11 +846,11 @@ def test_merge_fold_equals_fresh_build(spark, webpages_pdf, tmp_path, block_orde
                 fresh_dir, cfg, input_token=f"fresh300_{block_order}")
 
     def postings(path):
-        return spark.read.parquet(f"{path}/postings").orderBy(
+        return read_live(spark, path, "postings").orderBy(
             "bucket", "term", "salt", "block_id").collect()
 
     def term_stats(path):
-        return [tuple(r) for r in spark.read.parquet(f"{path}/term_stats")
+        return [tuple(r) for r in read_live(spark, path, "term_stats")
                 .select("term", "df", "cf").orderBy("term").collect()]
 
     def scalars(path):
@@ -769,7 +879,6 @@ def test_merge_crash_before_reblock_leaves_folded_index(
     import os
 
     import knowledgeir_spark.index.compact as cm
-    from knowledgeir_spark.plans.lineage import StageManager
 
     idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "rb")
 
@@ -788,9 +897,11 @@ def test_merge_crash_before_reblock_leaves_folded_index(
         fs = json.load(f)
     assert fs["n_docs"] == 130 and len(fs["folded_deltas"]) == 1
     assert fs["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
-    n_rows = spark.read.parquet(f"{idx_dir}/postings").count()
+    # the fold's generation committed; no bucket re-blocked
+    assert fs["generation"] == 2 and _defragged_buckets(idx_dir) == []
+    n_rows = read_live(spark, idx_dir, "postings").count()
     assert compact(spark, idx_dir, CFG, mode="merge") == {}
-    assert spark.read.parquet(f"{idx_dir}/postings").count() == n_rows
+    assert read_live(spark, idx_dir, "postings").count() == n_rows
 
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     inp = str(tmp_path / "arr_rb")  # the arrivals dir of _build_with_one_delta
@@ -804,7 +915,139 @@ def test_merge_crash_before_reblock_leaves_folded_index(
     )
     res = compact(spark, idx_dir, CFG, mode="merge")
     assert not res["postings_defragged"].skipped
-    m = StageManager(idx_dir).manifest("postings")
-    assert m["config"]["mode"] == "defrag"
-    assert m["config"]["touched_buckets"] == touched
+    assert _defragged_buckets(idx_dir) == touched
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:160])
+
+
+def _topk_all(reader, queries, k=10):
+    """(search_local rows per query, search() rows) of one reader."""
+    local = [reader.search_local([q], k=k) for q in queries]
+    dist = sorted(map(tuple, reader.search(queries, k=k).collect()))
+    return local, dist
+
+
+@pytest.mark.parametrize("op", ["append", "merge", "defrag"])
+def test_reader_pinned_to_its_generation(
+    spark, webpages_pdf, queries_pdf, tmp_path, op
+):
+    """A reader opened before an append fold, a merge fold or a defrag —
+    cold (never searched) or warm — keeps answering exactly as a reader
+    over a copy of the pre-fold index, through search_local and search().
+    A reader opened afterwards sees the new docs."""
+    import shutil
+
+    from knowledgeir_spark.index.compact import defrag
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, op)
+    if op == "defrag":  # fold first, so the defrag re-blocks fragments
+        compact(spark, idx_dir, CFG, mode="append")
+    pre = str(tmp_path / f"pre_{op}")
+    shutil.copytree(idx_dir, pre)
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()][:10]
+
+    cold = IndexReader(spark, idx_dir)
+    warm = IndexReader(spark, idx_dir)
+    _topk_all(warm, queries)
+    if op == "defrag":
+        assert defrag(spark, idx_dir, CFG, buckets=list(range(CFG.n_buckets)))
+    else:
+        assert compact(spark, idx_dir, CFG, mode=op)
+
+    want = _topk_all(IndexReader(spark, pre), queries)
+    for reader in (cold, warm):
+        assert _topk_all(reader, queries) == want
+    fresh = IndexReader(spark, idx_dir)
+    assert fresh.field_stats["n_docs"] == 130
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    for q in queries:
+        assert [r[1] for r in fresh.search_local([q], k=10)] == \
+            [d for d, _ in oracle.topk(q[1], k=10)], q
+
+
+def test_reader_survives_two_append_folds(
+    spark, webpages_pdf, queries_pdf, tmp_path
+):
+    """An append fold drops no postings file and a reader holds its
+    term_stats from open, so cold and warm readers survive any number of
+    append folds (here two, past the cleanup of their own generation)."""
+    import shutil
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "a2")
+    pre = str(tmp_path / "pre_a2")
+    shutil.copytree(idx_dir, pre)
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()][:10]
+    cold = IndexReader(spark, idx_dir)
+    warm = IndexReader(spark, idx_dir)
+    _topk_all(warm, queries)
+
+    assert compact(spark, idx_dir, CFG, mode="append")
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    spark.createDataFrame(pdf.iloc[130:160][["doc_id", "text"]]).write.mode(
+        "append").parquet(str(tmp_path / "arr_a2"))
+    incremental_index(spark, str(tmp_path / "arr_a2"), idx_dir,
+                      "doc_id long, text string", CFG)
+    assert compact(spark, idx_dir, CFG, mode="append")
+    assert read_field_stats(idx_dir)["generation"] == 3
+
+    want = _topk_all(IndexReader(spark, pre), queries)
+    for reader in (cold, warm):
+        assert _topk_all(reader, queries) == want
+    assert IndexReader(spark, idx_dir).field_stats["n_docs"] == 160
+
+
+def test_zero_row_delta_changes_nothing(spark, webpages_pdf, queries_pdf, tmp_path):
+    """An empty parquet input goes through incremental_index, then compact
+    in either mode: n_docs is unchanged and a fresh reader answers exactly
+    as over the pre-delta index."""
+    import shutil
+
+    idx_dir = str(tmp_path / "idx_zero")
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    build_index(spark, spark.createDataFrame(pdf.iloc[:100][["doc_id", "text"]]),
+                idx_dir, CFG, input_token="base100zero")
+    pre = str(tmp_path / "pre_zero")
+    shutil.copytree(idx_dir, pre)
+    inp = str(tmp_path / "arr_zero")
+    schema = "doc_id long, text string"
+    spark.createDataFrame([], schema).write.parquet(inp)
+    incremental_index(spark, inp, idx_dir, schema, CFG)
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()][:10]
+    want = [IndexReader(spark, pre).search_local([q], k=10) for q in queries]
+    for mode in ("append", "merge"):
+        path = str(tmp_path / f"zero_{mode}")
+        shutil.copytree(idx_dir, path)
+        compact(spark, path, CFG, mode=mode)
+        reader = IndexReader(spark, path)
+        # the empty delta landed and was folded, adding nothing
+        assert len(reader.field_stats["folded_deltas"]) == 1
+        assert reader.field_stats["n_docs"] == 100
+        assert [reader.search_local([q], k=10) for q in queries] == want
+        assert _index_diff(path, pre) is None
+
+
+def test_index_diff_compares_live_generations(spark, webpages_pdf, tmp_path):
+    """index_diff reads only the files each field_stats.json lists: pool
+    files no generation lists do not count, a changed block does."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    idx_dir, _ = _build_with_one_delta(spark, webpages_pdf, tmp_path, "diff")
+    compact(spark, idx_dir, CFG, mode="append")
+    other = str(tmp_path / "diff_other")
+    shutil.copytree(idx_dir, other)
+    post = live_files(other, "postings")
+    shutil.copy(post[0], f"{other}/postings/bucket=0/stray.parquet")
+    (ts,) = live_files(other, "term_stats")
+    shutil.copy(ts, f"{other}/term_stats/stray.parquet")
+    assert _index_diff(idx_dir, other) is None
+
+    t = pq.read_table(post[0])
+    max_tf = t["max_tf"].to_numpy().copy()
+    max_tf[0] += 1
+    t = t.set_column(t.column_names.index("max_tf"), "max_tf",
+                     pc.cast(max_tf, t.schema.field("max_tf").type))
+    pq.write_table(t, post[0])
+    diff = _index_diff(idx_dir, other)
+    assert diff and diff.startswith("postings") and "max_tf" in diff

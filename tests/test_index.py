@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import pytest
 
-from knowledgeir_spark.index.build import IndexConfig, build_index, term_bucket_py
+from knowledgeir_spark.index.build import (
+    IndexConfig, build_index, read_live, term_bucket_py,
+)
 from knowledgeir_spark.index.codec import decode_block
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
@@ -39,7 +41,7 @@ def test_stages_committed(built):
 
 
 def test_postings_decode_to_oracle(spark, built):
-    rows = spark.read.parquet(f"{built['idx_dir']}/postings").collect()
+    rows = read_live(spark, built['idx_dir'], "postings").collect()
     got: dict[str, list] = {}
     for r in rows:
         assert r["bucket"] == term_bucket_py(r["term"], CFG.n_buckets)
@@ -61,7 +63,7 @@ def test_postings_decode_to_oracle(spark, built):
 
 
 def test_term_stats_match_oracle(spark, built):
-    rows = spark.read.parquet(f"{built['idx_dir']}/term_stats").collect()
+    rows = read_live(spark, built['idx_dir'], "term_stats").collect()
     o = built["oracle"]
     assert {r["term"]: r["df"] for r in rows} == {t: int(v) for t, v in o.df.items()}
     cf = {r["term"]: r["cf"] for r in rows}
@@ -113,6 +115,10 @@ def test_crashed_stage_recomputed(spark, built):
     assert res["doc_terms"].skipped and res["postings"].skipped
     assert not res["term_stats"].skipped
     assert res["term_stats"].rows > 0
+    # field_stats.json re-committed: it lists the recomputed files
+    o = built["oracle"]
+    assert IndexReader(spark, built["idx_dir"]).term_stats_for(sorted(o.df)) \
+        == {t: float(v) for t, v in o.df.items()}
 
 
 def test_config_change_recomputes(spark, built, tmp_path_factory):
@@ -409,7 +415,7 @@ def test_reader_opens_and_serves_without_spark_job(spark, built, queries_pdf):
 
     want = {
         r["term"]: float(r["df"])
-        for r in spark.read.parquet(f"{built['idx_dir']}/term_stats").collect()
+        for r in read_live(spark, built['idx_dir'], "term_stats").collect()
     }
     assert dfs == want
     assert all(type(v) is float for v in dfs.values())
@@ -457,7 +463,7 @@ def test_impact_layout_rank_identical_and_discriminative(
     # with block_id under impact order but not under docid order
     from pyspark.sql import functions as F
 
-    post = spark.read.parquet(f"{idx_dir}/postings")
+    post = read_live(spark, idx_dir, "postings")
     head_term = (
         post.groupBy("term").count().orderBy(F.desc("count"), "term")
         .first()["term"]
@@ -599,7 +605,7 @@ def test_reader_suggest_matches_spark_operator(spark, built):
     from knowledgeir_spark.operators.spell import spell_correct
 
     rd = IndexReader(spark, built["idx_dir"])
-    vocab = spark.read.parquet(f"{built['idx_dir']}/term_stats").select("term", "df")
+    vocab = read_live(spark, built['idx_dir'], "term_stats").select("term", "df")
     # derive typo inputs from real vocab terms (drop 3rd char) + controls
     terms = [r["term"] for r in vocab.orderBy(F.col("df").desc()).limit(8).collect()]
     inputs = [t[:2] + t[3:] for t in terms if len(t) >= 5] + ["zzzzqq", terms[0]]
@@ -705,7 +711,7 @@ def test_sharded_suggest_sums_global_df(spark, built, tmp_path_factory):
     mono = IndexReader(spark, built["idx_dir"])
     # pick a real vocab term, misspell it, and require the same correction
     # with the same (global) df the monolith reports
-    stats = spark.read.parquet(f"{built['idx_dir']}/term_stats").orderBy(
+    stats = read_live(spark, built['idx_dir'], "term_stats").orderBy(
         "df", ascending=False).limit(1).collect()[0]
     term, df = stats["term"], float(stats["df"])
     typo = term[:2] + term[3:] if len(term) >= 5 else term + "x"
