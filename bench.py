@@ -203,7 +203,6 @@ def serving_probe_once(
     from pyspark.sql import functions as F
 
     from knowledgeir_spark.fixtures.webpages import gen_queries
-    from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.build import (
         IndexConfig,
         build_index,
@@ -250,11 +249,10 @@ def serving_probe_once(
     s_dec = s_tot = s_n = 0
     lat0 = []
     for q in queries:
-        Q._LAST_DENSE_STATS.clear()
         tq = time.time()
         rd.search_local([q], k=K)
         lat0.append(time.time() - tq)
-        st = Q._LAST_DENSE_STATS
+        st = rd.last_query_stats()
         d, t = st.get("blocks_decoded", 0), st.get("blocks_total", 0)
         dec += d
         tot += t

@@ -5,8 +5,8 @@ Plan shape (SURVEY.md §3.2 "Spark shape"):
   postings scan [bucket partition-pruned to <= |q| buckets,
                  term predicate pushed to parquet row groups]
     ⋈ broadcast(query terms)
-    → groupBy(qid, salt).applyInPandas(block-max pruned scorer)   [local top-k]
-    → window top-k merge                                          [global]
+    → groupBy(qid, salt).applyInPandas(pruned bm25 kernel)    [local top-k]
+    → window or driver top-k merge                             [global]
 
 Each (qid, salt) group holds the query's posting blocks for ONE contiguous
 doc_id range (the build's range salt), so groups are disjoint in docs: local
@@ -14,14 +14,15 @@ top-k lists merge into the exact global top-k.  Executors therefore process
 doc ranges in parallel per query — the WAND analog of doc-partitioned
 sharding in Lucene/Indri.
 
-Pruning inside a group ("block-max sort + chunked rescore", exact):
-  1. decode blocks, accumulate per-doc UPPER BOUND from block-max metadata
-     (bound = contrib(max_tf, min_doc_len) per block — no scoring yet);
-  2. sort candidates by bound desc; exact-score in chunks, keep a running
-     top-k threshold θ; STOP when the next chunk's max bound quantized below
-     θ quantized (floor(x*1e9), the engine-wide ranking key).  Monotonicity
-     (exact <= bound) makes the early exit exact, including doc_id
-     tie-breaks, which is asserted against the unpruned path in tests.
+One pruned bm25 kernel, _score_group_dense, serves both search() (per
+(qid, salt) group) and the coordinator's search_local (one group over the
+whole slice, with a decoded-postings cache): flat score/seen arrays over
+the group's own doc-id span (doc_id - base), MaxScore term selection from
+block-max metadata, and block-range fill-in for the non-essential terms.
+Every skip compares one quantum below the engine-wide ranking key
+floor(score*1e9), so the result is exact, doc_id tie-breaks included;
+tests assert it against the unpruned _score_group, which also serves the
+other models and prune=False.
 
 Scores are rank-identical to the full-scan DataFrame path and the oracle
 (same ordered summation + quantized ranking key).
@@ -48,12 +49,6 @@ from .codec import decode_blocks_concat, decode_ids_concat
 from . import scoring_np as S
 
 _RANK_Q = 1e9
-_CHUNK = 1024
-# engage decode-level WAND only when there is enough to skip
-_BMW_MIN_BLOCKS = 32
-# introspection: the last dense-scorer run's skip statistics (tests assert
-# the MaxScore path actually engages; bench reads it for reporting)
-_LAST_DENSE_STATS: dict = {}
 
 
 def _score_group(
@@ -63,18 +58,18 @@ def _score_group(
     avgdl: float,
     model: str,
     k: int,
-    prune: bool,
 ) -> pd.DataFrame:
-    """One (qid, salt) group -> local top-k (qid, doc_id, score)."""
+    """One (qid, salt) group -> local top-k (qid, doc_id, score), unpruned:
+    every block is decoded and every candidate scored.  The kernel for
+    non-bm25 models and prune=False, and the reference the pruned kernel
+    is tested against."""
     qid = pdf["qid"].iat[0]
     terms = q_terms[qid]
     # decode all blocks per term in three vectorized passes (segmented
     # cumsum over concatenated varint streams — see codec.decode_blocks_concat)
-    df_by_term = {t["term"]: float(t["df"]) for t in terms}
     id_by: dict[str, np.ndarray] = {}
     tf_raw: dict[str, np.ndarray] = {}
     dl_raw: dict[str, np.ndarray] = {}
-    bound_by: dict[str, np.ndarray] = {}
     for term, g in pdf.groupby("term", sort=False):
         ids, tfs, dls = decode_blocks_concat(
             [bytes(x) for x in g["doc_id_deltas"]],
@@ -85,259 +80,36 @@ def _score_group(
         id_by[term] = ids.astype(np.int64)
         tf_raw[term] = tfs.astype(np.float64)
         dl_raw[term] = dls.astype(np.float64)
-        if prune and model == "bm25":
-            mt = g["max_tf"].to_numpy(np.float64)
-            mdl = g["min_doc_len"].to_numpy(np.float64)
-            df = df_by_term[term]
-            tf_part = mt * (S.BM25_K1 + 1) / (
-                mt + S.BM25_K1 * (1 - S.BM25_B + S.BM25_B * mdl / avgdl)
-            )
-            ratio = max((n - df + 0.5) / (df + 0.5), 1.0)
-            idf = max(math.log(ratio), 0.0)
-            bound_by[term] = np.repeat(
-                ratio * tf_part * idf, g["n_docs"].to_numpy(np.int64)
-            )
     if not id_by:
         return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
     all_ids = np.unique(np.concatenate(list(id_by.values())))
     n_cand = len(all_ids)
     dl = np.zeros(n_cand, dtype=np.float64)
     tf_by_term: dict[str, np.ndarray] = {}
-    pos_by: dict[str, np.ndarray] = {}
     for term, ids in id_by.items():
         pos = np.searchsorted(all_ids, ids)
-        pos_by[term] = pos
         v = np.zeros(n_cand, dtype=np.float64)
         v[pos] = tf_raw[term]
         tf_by_term[term] = v
         dl[pos] = dl_raw[term]
-
-    if prune and model == "bm25" and n_cand > 4 * k:
-        # per-doc upper bound = sum over terms of that doc's block bound
-        ub = np.zeros(n_cand, dtype=np.float64)
-        for term, bounds in bound_by.items():
-            ub[pos_by[term]] += bounds
-        ub = np.log(np.maximum(ub, 1.0))  # same finalize as bm25 (monotone)
-        order = np.argsort(-ub, kind="stable")
-        theta_q = -np.inf
-        kept_ids: list[np.ndarray] = []
-        kept_scores: list[np.ndarray] = []
-        n_scored = 0
-        for start in range(0, n_cand, _CHUNK):
-            sel = order[start : start + _CHUNK]
-            if math.floor(ub[sel[0]] * _RANK_Q) < theta_q:
-                break  # no remaining doc can beat the current k-th (exact<=ub)
-            sub_tf = {t: v[sel] for t, v in tf_by_term.items()}
-            sc = S.score_terms(model, terms, sub_tf, dl[sel], n, avgdl)
-            kept_ids.append(all_ids[sel])
-            kept_scores.append(sc)
-            n_scored += len(sel)
-            flat_s = np.concatenate(kept_scores)
-            if len(flat_s) >= k:
-                qkeys = np.floor(flat_s * _RANK_Q)
-                theta_q = np.partition(qkeys, len(qkeys) - k)[len(qkeys) - k]
-        ids_out = np.concatenate(kept_ids)
-        scores_out = np.concatenate(kept_scores)
-    else:
-        ids_out = all_ids
-        scores_out = S.score_terms(model, terms, tf_by_term, dl, n, avgdl)
+    scores = S.score_terms(model, terms, tf_by_term, dl, n, avgdl)
 
     # local top-k with the engine ranking key (quantized desc, doc_id asc)
-    qkeys = np.floor(scores_out * _RANK_Q).astype(np.int64)
-    order = np.lexsort((ids_out, -qkeys))[: k]
+    qkeys = np.floor(scores * _RANK_Q).astype(np.int64)
+    order = np.lexsort((all_ids, -qkeys))[: k]
     return pd.DataFrame(
-        {"qid": qid, "doc_id": ids_out[order], "score": scores_out[order]}
+        {"qid": qid, "doc_id": all_ids[order], "score": scores[order]}
     )
 
 
-def _score_group_bmw(
-    pdf: pd.DataFrame,
-    q_terms: dict[str, list[dict]],
-    n: float,
-    avgdl: float,
-    k: int,
-    init_batch: int = 256,
-) -> pd.DataFrame:
-    """Cursor-style Block-Max WAND at DECODE granularity (bm25 only) — the
-    head-term serving lever: blocks whose doc-id range lies entirely in
-    segments bounded below the running top-k threshold are never decoded.
-
-    _score_group prunes at the SCORING stage (it decodes every posting block
-    first, so a Zipf head term costs ~df decode work regardless of k).  Here
-    the doc-id axis is split into segments at block boundaries; each
-    segment's upper bound is the sum of its covering blocks' block-max
-    bounds (valid because a term's blocks are disjoint in doc_id: at most
-    one block per term covers a segment, and block-max >= any member's
-    contribution).  Segments are visited in bound-descending batches, each
-    batch scored in ONE vectorized union (no per-doc Python), theta updated,
-    and all remaining segments with quantized finalized bound < theta
-    dropped.  Exact, including doc_id tie-breaks: ties (== theta) are always
-    scored, and the quantized ranking key floor(score*1e9) matches the
-    engine-wide contract.
-    """
-    qid = str(pdf["qid"].iat[0])
-    terms = q_terms[qid]
-    df_by_term = {t["term"]: float(t["df"]) for t in terms}
-
-    # per-term block tables sorted by first_doc_id; bounds need NO decode
-    tg: dict[str, dict] = {}
-    total_blocks = 0
-    for term, g in pdf.groupby("term", sort=False):
-        first = g["first_doc_id"].to_numpy(np.int64)
-        order = np.argsort(first, kind="stable")
-        g = g.iloc[order]
-        first = first[order]
-        mt = g["max_tf"].to_numpy(np.float64)
-        mdl = g["min_doc_len"].to_numpy(np.float64)
-        df = df_by_term[term]
-        tf_part = mt * (S.BM25_K1 + 1) / (
-            mt + S.BM25_K1 * (1 - S.BM25_B + S.BM25_B * mdl / avgdl)
-        )
-        ratio = max((n - df + 0.5) / (df + 0.5), 1.0)
-        idf = max(math.log(ratio), 0.0)
-        tg[term] = {
-            "first": first,
-            "last": g["max_doc_id"].to_numpy(np.int64),
-            "ub": ratio * tf_part * idf,
-            "deltas": g["doc_id_deltas"].tolist(),
-            "tfs": g["tfs"].tolist(),
-            "dls": g["doc_lens"].tolist(),
-            "nd": g["n_docs"].to_numpy(np.int64),
-            "cache": {},
-        }
-        total_blocks += len(first)
-    if not tg:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-
-    def decode_into_cache(d: dict, jj: int):
-        c = d["cache"]
-        if jj not in c:
-            ids, tfs, dls = decode_blocks_concat(
-                [d["deltas"][jj]], [d["tfs"][jj]], [d["dls"][jj]],
-                [d["nd"][jj]],
-            )
-            c[jj] = (
-                ids.astype(np.int64), tfs.astype(np.float64),
-                dls.astype(np.float64),
-            )
-        return c[jj]
-
-    # selective ("driving") terms — few blocks relative to the head terms —
-    # are decoded EAGERLY: a sparse block can span a huge doc-id range, and
-    # its span-wide block-max would otherwise keep every underlying head-term
-    # block alive.  With exact postings in hand, such a term contributes to a
-    # segment's bound only where it actually has a posting.
-    cheap_cap = max(4, total_blocks // 16)
-    cheap = {t for t, d in tg.items() if len(d["first"]) <= cheap_cap}
-    if len(cheap) == len(tg):
-        cheap = set()  # all-cheap degenerates to decode-all; skip the work
-
-    # segment sweep: boundaries at block starts/ends.  Expensive terms add
-    # their block-max over the block's whole span (difference array — a
-    # term's blocks are disjoint); cheap terms add an exact per-segment max
-    # of their per-doc contribution sums.
-    bnds = np.unique(
-        np.concatenate(
-            [t["first"] for t in tg.values()] + [t["last"] + 1 for t in tg.values()]
-        )
-    )
-    nseg = len(bnds) - 1
-    diff = np.zeros(nseg + 1, dtype=np.float64)
-    for term, t in tg.items():
-        if term in cheap:
-            continue
-        np.add.at(diff, np.searchsorted(bnds, t["first"], "left"), t["ub"])
-        np.add.at(diff, np.searchsorted(bnds, t["last"] + 1, "left"), -t["ub"])
-    seg_ub = np.cumsum(diff[:nseg])
-    if cheap:
-        # exact per-doc sums across all cheap terms (union-aligned)
-        cheap_parts = {}
-        for term in cheap:
-            d = tg[term]
-            blks = [decode_into_cache(d, jj) for jj in range(len(d["first"]))]
-            cheap_parts[term] = (
-                np.concatenate([b[0] for b in blks]),
-                np.concatenate([b[1] for b in blks]),
-                np.concatenate([b[2] for b in blks]),
-            )
-        cu = np.unique(np.concatenate([v[0] for v in cheap_parts.values()]))
-        csum = np.zeros(len(cu), dtype=np.float64)
-        for term, (ids, tfs, dls) in cheap_parts.items():
-            pos = np.searchsorted(cu, ids)
-            contrib = S.bm25_term_contrib(tfs, df_by_term[term], dls, n, avgdl)
-            np.add.at(csum, pos, contrib)
-        seg_of_cheap = np.searchsorted(bnds, cu, "right") - 1
-        np.maximum.at(seg_ub, seg_of_cheap, seg_ub[seg_of_cheap] + csum)
-    # finalized quantized bound (log is monotone; same key as the ranking)
-    seg_fin = np.floor(np.log(np.maximum(seg_ub, 1.0)) * _RANK_Q)
-    remaining = np.argsort(-seg_ub, kind="stable")
-
-    def term_batch_slice(t: str, d: dict, batch_segs: np.ndarray):
-        """Term t's postings falling in any batch segment (vectorized)."""
-        starts = bnds[batch_segs]
-        j = np.searchsorted(d["first"], starts, "right") - 1
-        ok = (j >= 0) & (d["last"][np.maximum(j, 0)] >= starts)
-        need = np.unique(j[ok])
-        if not len(need):
-            return None
-        parts = [decode_into_cache(d, int(jj)) for jj in need]
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        # keep postings whose segment is in the batch (batch_segs sorted)
-        seg_of = np.searchsorted(bnds, ids, "right") - 1
-        pos = np.searchsorted(batch_segs, seg_of)
-        pos = np.minimum(pos, len(batch_segs) - 1)
-        mask = batch_segs[pos] == seg_of
-        return ids[mask], tfs[mask], dls[mask]
-
-    theta_q = -np.inf
-    kept_ids: list[np.ndarray] = []
-    kept_scores: list[np.ndarray] = []
-    kept_n = 0
-    batch_sz = init_batch
-    while len(remaining):
-        # drop every segment that can no longer reach the top-k (ties kept)
-        if theta_q > -np.inf:
-            remaining = remaining[seg_fin[remaining] >= theta_q]
-            if not len(remaining):
-                break
-        batch = np.sort(remaining[:batch_sz])
-        remaining = remaining[batch_sz:]
-        per_term = {}
-        for t, d in tg.items():
-            sl = term_batch_slice(t, d, batch)
-            if sl is not None and len(sl[0]):
-                per_term[t] = sl
-        if per_term:
-            u = np.unique(np.concatenate([v[0] for v in per_term.values()]))
-            dl = np.zeros(len(u), dtype=np.float64)
-            tf_by = {}
-            for t, (ids, tfs, dls) in per_term.items():
-                pos = np.searchsorted(u, ids)
-                v = np.zeros(len(u), dtype=np.float64)
-                v[pos] = tfs
-                tf_by[t] = v
-                dl[pos] = dls
-            sc = S.score_terms("bm25", terms, tf_by, dl, n, avgdl)
-            kept_ids.append(u)
-            kept_scores.append(sc)
-            kept_n += len(u)
-            if kept_n >= k:
-                flat = np.concatenate(kept_scores)
-                qk = np.floor(flat * _RANK_Q)
-                theta_q = np.partition(qk, len(qk) - k)[len(qk) - k]
-        batch_sz = min(batch_sz * 2, 8192)
-
-    if not kept_ids:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-    ids_out = np.concatenate(kept_ids)
-    scores_out = np.concatenate(kept_scores)
-    qkeys = np.floor(scores_out * _RANK_Q).astype(np.int64)
-    order = np.lexsort((ids_out, -qkeys))[:k]
-    return pd.DataFrame(
-        {"qid": qid, "doc_id": ids_out[order], "score": scores_out[order]}
-    )
+def _merge_topk(
+    cands: list[tuple[int, float]], k: int
+) -> list[tuple[int, float]]:
+    """Top-k of (doc_id, score) pairs under the engine ranking key
+    (floor(score*1e9) desc, doc_id asc).  Merging the local top-k lists of
+    doc-disjoint groups (salt ranges, shards) this way gives the exact
+    global top-k."""
+    return sorted(cands, key=lambda ds: (-math.floor(ds[1] * _RANK_Q), ds[0]))[:k]
 
 
 class DecodedTermCache:
@@ -386,12 +158,14 @@ def _score_group_dense(
     n: float,
     avgdl: float,
     k: int,
-    id_space: int,
     cache: DecodedTermCache | None = None,
-) -> pd.DataFrame:
-    """Dense-accumulator bm25 scorer for the serving coordinator — the fast
-    path when the doc-id space fits a flat array (engine doc_ids are dense
-    ints by construction).
+) -> tuple[pd.DataFrame, dict]:
+    """The pruned bm25 kernel, on both query paths: one (qid[, salt]) group
+    -> (local top-k (qid, doc_id, score), skip statistics).
+
+    Accumulators are flat arrays over the group's own doc-id span,
+    indexed by doc_id - base (base = the group's smallest first_doc_id),
+    so memory is ~9 bytes x span: at most salt_range for a search() group.
 
     Three levers over the union-based _score_group:
     - accumulate score[doc_id] += contrib per term (one fancy-index add over
@@ -410,10 +184,18 @@ def _score_group_dense(
       and a final re-accumulation in term_idx order (the same per-doc
       left-to-right fold as ordered_sum/the oracle) keeps candidate scores
       bit-identical to the unpruned paths.
+
+    cache: the reader's decoded-postings cache.  Its arrays hold whole
+    posting lists, so pass it only when the group holds every block of
+    its terms (search_local's one group over the slice).
     """
     qid = str(pdf["qid"].iat[0])
     terms = sorted(q_terms[qid], key=lambda t: t["term_idx"])
     groups = {term: g for term, g in pdf.groupby("term", sort=False)}
+    # block first/max doc ids are the block's min/max id under both block
+    # orders (impact blocks are re-sorted by doc id at build)
+    base = int(pdf["first_doc_id"].min())
+    span = int(pdf["max_doc_id"].max()) - base + 1
 
     def decode(g) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         ids, tfs, dls = decode_blocks_concat(
@@ -453,8 +235,8 @@ def _score_group_dense(
         return math.floor(math.log(max(x, 1.0)) * _RANK_Q)
 
     by_bound = sorted(scored_terms, key=lambda d: -d["bound"])
-    score_sel = np.zeros(id_space, dtype=np.float64)
-    seen = np.zeros(id_space, dtype=bool)
+    score_sel = np.zeros(span, dtype=np.float64)
+    seen = np.zeros(span, dtype=bool)
     decoded: dict[str, tuple] = {}
 
     if len(by_bound) == 1:
@@ -471,8 +253,9 @@ def _score_group_dense(
         cache_hit = hit is not None
         if hit is not None:
             ids, tfs, dls = hit
-            seen[ids] = True
-            score_sel[ids] += S.bm25_term_contrib(
+            rel = ids - base
+            seen[rel] = True
+            score_sel[rel] += S.bm25_term_contrib(
                 tfs.astype(np.float64), d["df"], dls.astype(np.float64),
                 n, avgdl,
             )
@@ -490,8 +273,9 @@ def _score_group_dense(
                 take = order[pos:pos + batch]
                 ids, tfs, dls = decode(g.iloc[take])
                 parts.append((ids, tfs, dls))
-                seen[ids] = True
-                score_sel[ids] += S.bm25_term_contrib(
+                rel = ids - base
+                seen[rel] = True
+                score_sel[rel] += S.bm25_term_contrib(
                     tfs.astype(np.float64), d["df"], dls.astype(np.float64),
                     n, avgdl,
                 )
@@ -512,13 +296,11 @@ def _score_group_dense(
                 cache.put(d["t"]["term"], tuple(
                     np.concatenate([p[i] for p in parts]) for i in range(3)
                 ))
-        score = score_sel
-        _LAST_DENSE_STATS.clear()
-        _LAST_DENSE_STATS.update(
+        stats = dict(
             qid=qid, n_scored_terms=1, n_essential=1,
             blocks_total=len(g), blocks_decoded=pos, cache_hit=cache_hit,
         )
-        return _dense_topk(qid, score, seen, deferred, k)
+        return _dense_topk(qid, score_sel, seen, deferred, k, base), stats
 
     # SELECTION (MaxScore at block-metadata granularity — the mid-idf
     # head-term lever): decode terms in descending bound order; once the
@@ -552,8 +334,9 @@ def _score_group_dense(
                 cache.put(term, hit)
         ids, tfs, dls = hit
         decoded[term] = hit
-        seen[ids] = True
-        score_sel[ids] += S.bm25_term_contrib(
+        rel = ids - base
+        seen[rel] = True
+        score_sel[rel] += S.bm25_term_contrib(
             tfs.astype(np.float64), d["df"], dls.astype(np.float64), n, avgdl
         )
         n_ess += 1
@@ -588,7 +371,7 @@ def _score_group_dense(
             drop = ub_q < qf(theta) - 1
             if drop.any():
                 seen[cand_idx[drop]] = False
-        cum = np.zeros(id_space + 1, dtype=np.int64)
+        cum = np.zeros(span + 1, dtype=np.int64)
         np.cumsum(seen, out=cum[1:])
         for d in by_bound[n_ess:]:
             term = d["t"]["term"]
@@ -600,8 +383,8 @@ def _score_group_dense(
                 decoded[term] = hit
                 continue
             g = d["g"]
-            lo = g["first_doc_id"].to_numpy(np.int64)
-            hi = g["max_doc_id"].to_numpy(np.int64)
+            lo = g["first_doc_id"].to_numpy(np.int64) - base
+            hi = g["max_doc_id"].to_numpy(np.int64) - base
             keep = (cum[hi + 1] - cum[lo]) > 0
             if cache is not None and cache.max_postings > 0 and keep.mean() > 0.5:
                 # candidates blanket most of this term's block ranges (the
@@ -615,8 +398,7 @@ def _score_group_dense(
             elif keep.any():
                 decoded[term] = decode(g[keep])
                 blocks_decoded += int(keep.sum())
-    _LAST_DENSE_STATS.clear()
-    _LAST_DENSE_STATS.update(
+    stats = dict(
         qid=qid, n_scored_terms=len(by_bound), n_essential=n_ess,
         blocks_total=sum(len(d["g"]) for d in by_bound),
         blocks_decoded=blocks_decoded,
@@ -626,17 +408,48 @@ def _score_group_dense(
     # same per-doc left-to-right fold as ordered_sum/the oracle (a doc
     # appears in at most one block per term), so candidate scores are
     # bit-identical to the unpruned paths
-    score = np.zeros(id_space, dtype=np.float64)
+    score = np.zeros(span, dtype=np.float64)
     for t in terms:
         dec = decoded.get(t["term"])
         if dec is None:
             continue
         ids, tfs, dls = dec
-        score[ids] += S.bm25_term_contrib(
+        score[ids - base] += S.bm25_term_contrib(
             tfs.astype(np.float64), float(t["df"]), dls.astype(np.float64),
             n, avgdl,
         )
-    return _dense_topk(qid, score, seen, deferred, k)
+    return _dense_topk(qid, score, seen, deferred, k, base), stats
+
+
+def _score_by_salt(
+    pdf: pd.DataFrame,
+    q_terms: dict[str, list[dict]],
+    n: float,
+    avgdl: float,
+    k: int,
+    salt_range: int,
+) -> tuple[pd.DataFrame, dict]:
+    """The pruned kernel over each salt range of one query's slice (doc-
+    disjoint groups of <= salt_range ids, as search() groups them), merged
+    into the exact top-k; counters are summed over the groups.  No decode
+    cache: its arrays hold whole posting lists, which fall outside a
+    group's doc-id base."""
+    parts = [
+        _score_group_dense(g, q_terms, n, avgdl, k)
+        for _, g in pdf.groupby(pdf["first_doc_id"] // salt_range, sort=False)
+    ]
+    top = _merge_topk([
+        (d, s) for res, _ in parts for d, s in zip(res["doc_id"], res["score"])
+    ], k)
+    stats = {
+        key: sum(st[key] for _, st in parts)
+        for key in ("n_scored_terms", "n_essential", "blocks_total",
+                    "blocks_decoded")
+    }
+    qid = str(pdf["qid"].iat[0])
+    return pd.DataFrame({
+        "qid": qid, "doc_id": [d for d, _ in top], "score": [s for _, s in top],
+    }), {"qid": qid, **stats}
 
 
 def _dense_topk(
@@ -645,9 +458,11 @@ def _dense_topk(
     seen: np.ndarray,
     deferred: list,
     k: int,
+    base: int,
 ) -> pd.DataFrame:
     """Shared dense-scorer tail: zero-idf candidacy fill, bm25 finalize,
-    quantized-key pre-selection, top-k."""
+    quantized-key pre-selection, top-k.  score/seen are indexed by
+    doc_id - base."""
     cand = np.flatnonzero(seen)
     # a zero-idf term's docs all score exactly 0: they can only reach the
     # top-k when fewer than k positive-quantized scores exist, so their
@@ -662,7 +477,7 @@ def _dense_topk(
                 ids = decode_ids_concat(
                     [bytes(x) for x in g["doc_id_deltas"]], g["n_docs"].tolist(),
                 ).astype(np.int64)
-                seen[ids] = True
+                seen[ids - base] = True
             cand = np.flatnonzero(seen)
     if not len(cand):
         return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
@@ -676,10 +491,9 @@ def _dense_topk(
         keep = qkeys >= kth
         cand, sc, qkeys = cand[keep], sc[keep], qkeys[keep]
     order = np.lexsort((cand, -qkeys))[:k]
-    return pd.DataFrame({"qid": qid, "doc_id": cand[order], "score": sc[order]})
-
-
-_LAST_BOOL_STATS: dict = {}
+    return pd.DataFrame(
+        {"qid": qid, "doc_id": cand[order] + base, "score": sc[order]}
+    )
 
 
 def _score_group_bool(
@@ -693,8 +507,9 @@ def _score_group_bool(
     cache: "DecodedTermCache | None" = None,
     return_all: bool = False,
     cand_init: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Conjunctive (AND / AND-NOT) retrieval over one (qid[, salt]) group:
+) -> tuple[pd.DataFrame, dict]:
+    """Conjunctive (AND / AND-NOT) retrieval over one (qid[, salt]) group
+    -> (top-k (qid, doc_id, score), skip statistics):
     only docs containing EVERY query term and NONE of the excluded terms
     are scored (same model kernels and quantized rank key as the OR path,
     so AND of a single term is rank-identical to OR).
@@ -708,7 +523,8 @@ def _score_group_bool(
     smallest-list-first conjunctive plan, done at block granularity with
     the metadata the index already carries.  Works under both block
     layouts (ids are re-sorted after decode, so impact-ordered blocks are
-    fine).  Skip counters land in _LAST_BOOL_STATS.
+    fine).  The skip counters are bool_blocks_total, bool_blocks_decoded
+    and bool_candidates.
 
     return_all=True yields every matching doc (no top-k cut) — the phrase
     path filters by adjacency before cutting.
@@ -721,20 +537,17 @@ def _score_group_bool(
     qid = pdf["qid"].iat[0]
     excl = (excl_terms or {}).get(qid, set())
     terms = [t for t in q_terms[qid] if t["term"] not in excl]
+    empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
     if not terms:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return empty, {}
     groups = {t: g for t, g in pdf.groupby("term", sort=False)}
     blocks_total = int(sum(len(g) for g in groups.values()))
     blocks_decoded = 0
 
     # a required term with no postings -> AND can match nothing
     if any(t["term"] not in groups for t in terms):
-        _LAST_BOOL_STATS.clear()
-        _LAST_BOOL_STATS.update(
-            {"bool_blocks_total": blocks_total, "bool_blocks_decoded": 0,
-             "bool_candidates": 0}
-        )
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return empty, {"bool_blocks_total": blocks_total,
+                       "bool_blocks_decoded": 0, "bool_candidates": 0}
 
     def decode_rows(g: pd.DataFrame):
         ids, tfs, dls = decode_blocks_concat(
@@ -794,14 +607,11 @@ def _score_group_bool(
             cand = cand[~np.isin(cand, x_ids, assume_unique=True)]
             if not len(cand):
                 break
-    _LAST_BOOL_STATS.clear()
-    _LAST_BOOL_STATS.update(
-        {"bool_blocks_total": blocks_total,
-         "bool_blocks_decoded": blocks_decoded,
-         "bool_candidates": int(len(cand) if cand is not None else 0)}
-    )
+    stats = {"bool_blocks_total": blocks_total,
+             "bool_blocks_decoded": blocks_decoded,
+             "bool_candidates": int(len(cand) if cand is not None else 0)}
     if cand is None or not len(cand):
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return empty, stats
 
     tf_by_term: dict[str, np.ndarray] = {}
     dl = None
@@ -817,7 +627,12 @@ def _score_group_bool(
         order = order[:k]
     return pd.DataFrame(
         {"qid": qid, "doc_id": cand[order], "score": scores[order]}
-    )
+    ), stats
+
+
+def _check_choice(name: str, value: str, allowed: tuple[str, ...]) -> None:
+    if value not in allowed:
+        raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
 
 
 def _query_term_dicts(queries: list[tuple[str, str]]):
@@ -925,9 +740,6 @@ class IndexReader:
         self.field_stats = read_field_stats(index_dir)
         self.n_buckets = int(self.field_stats["n_buckets"])
         check_codec(self.field_stats, index_dir)
-        # "impact" layouts have overlapping per-block doc-id ranges, which
-        # invalidates the decode-level WAND's disjointness assumption — the
-        # reader gates that path on the recorded layout
         self.block_order = self.field_stats.get("block_order", "docid")
         # the doc tokenizer the index was built with (phrase verification
         # must tokenize identically); older indexes predate the key
@@ -967,6 +779,8 @@ class IndexReader:
         self._facet_store = None
         # lazy nextword (head-head bigram) store reader, None if absent
         self._nextword = False  # False = not yet probed
+        # the last search_local call's skip counters (last_query_stats)
+        self._last_stats: dict = {}
 
     def _nextword_store(self):
         if self._nextword is False:
@@ -1049,6 +863,9 @@ class IndexReader:
         postings of its doc range, so per-group intersection composes to
         the global one with no extra shuffle.
         """
+        _check_choice("model", model, S.MODELS)
+        _check_choice("mode", mode, ("or", "and"))
+        _check_choice("merge", merge, ("auto", "spark", "driver"))
         if isinstance(queries, DataFrame):
             queries = [(r["qid"], r["query"]) for r in queries.collect()]
         excl_map = {str(q): set(ts) for q, ts in (exclude or {}).items()}
@@ -1110,8 +927,10 @@ class IndexReader:
             if mode == "and":
                 return _score_group_bool(
                     pdf, q_terms, n, avgdl, model, k, excl_terms=excl_map,
-                )
-            return _score_group(pdf, q_terms, n, avgdl, model, k, prune)
+                )[0]
+            if prune and model == "bm25":
+                return _score_group_dense(pdf, q_terms, n, avgdl, k)[0]
+            return _score_group(pdf, q_terms, n, avgdl, model, k)
 
         local = joined.groupBy("qid", "salt").applyInPandas(
             apply_fn, "qid string, doc_id long, score double"
@@ -1129,24 +948,17 @@ class IndexReader:
             return topk_per_query(
                 local, k=k, single_partition_sort=(k * len(q_terms) <= 100_000)
             )
-        if merge == "local":
-            raise ValueError("use search_local() for the serving path")
         # driver-side scatter-gather merge (rows collected: <= k * n_ranges)
-        import math as _math
-
-        rows = local.collect()
         by_q: dict[str, list] = {}
-        for r in rows:
+        for r in local.collect():
             by_q.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
         out = []
         for qid in sorted(by_q, key=lambda q: int(q) if q.isdigit() else 0):
-            cand = sorted(
-                by_q[qid],
-                key=lambda ds: (-_math.floor(ds[1] * 1e9), ds[0]),
-            )[:k]
             out.extend(
-                (qid, doc_id, float(score), rank + 1)
-                for rank, (doc_id, score) in enumerate(cand)
+                (qid, doc_id, float(score), rank)
+                for rank, (doc_id, score) in enumerate(
+                    _merge_topk(by_q[qid], k), start=1
+                )
             )
         return self._rows_df(out)
 
@@ -1167,8 +979,9 @@ class IndexReader:
     # if the queries' pruned slice exceeds this many postings, search_auto
     # routes to the distributed path instead of the coordinator
     _LOCAL_MAX_POSTINGS = 20_000_000
-    # dense-accumulator scorer ceiling: one float64 + one bool per doc id
-    # (~9 bytes/doc -> ~450 MB at the cap, coordinator-sized)
+    # ceiling on the doc-id span search_local scores as ONE group: the
+    # pruned kernel keeps ~9 bytes per doc id of the span (~450 MB at the
+    # cap, coordinator-sized); a wider slice is scored per salt range
     _DENSE_MAX_DOCS = 50_000_000
 
     def search_auto(
@@ -1342,21 +1155,22 @@ class IndexReader:
         return out
 
     def last_query_stats(self) -> dict:
-        """Serving introspection after a search_local call: the last dense
-        scorer's skip statistics (blocks decoded vs total, MaxScore
-        essential-term count, cache_hit) plus the decode cache's hit/miss
-        counters and fill level.  For operators watching whether pruning
-        and caching actually engage on their workload — the same numbers
-        the bench and the skip-rate tests read.
+        """Serving introspection after a search_local call on THIS reader:
+        the skip statistics of its last query's kernel — the pruned bm25
+        kernel's blocks_decoded/blocks_total, n_essential/n_scored_terms
+        (MaxScore essential-term count) and cache_hit, or the AND kernel's
+        bool_* counters — plus the decode cache's hit/miss counters and
+        fill level.  For operators watching whether pruning and caching
+        actually engage on their workload — the same numbers the bench and
+        the skip-rate tests read.
 
-        Both stat dicts are cleared at the start of each search_local call,
-        so the numbers always describe the most recent local search only.
-        The distributed search() path does NOT populate them — its scoring
-        runs on executors, where these module globals are invisible to the
-        driver."""
+        Each search_local call starts a fresh stats dict on its reader, so
+        the numbers describe that reader's most recent local search only,
+        whatever other readers or threads do meanwhile.  A slice scored per
+        salt range sums the counters over its groups.  The distributed
+        search() path does not report them: its scoring runs on executors."""
         return {
-            **dict(_LAST_DENSE_STATS),
-            **dict(_LAST_BOOL_STATS),
+            **self._last_stats,
             "cache_hits": self.decode_cache.hits,
             "cache_misses": self.decode_cache.misses,
             "cache_postings": self.decode_cache._total,
@@ -1422,14 +1236,21 @@ class IndexReader:
         mode="and": conjunctive retrieval — only docs containing EVERY
         query term (block-skip intersection, _score_group_bool).
         exclude={qid: [terms]} drops docs containing any excluded term
-        (AND-NOT; requires mode="and")."""
+        (AND-NOT; requires mode="and").
+
+        bm25 with prune=True runs the pruned kernel (_score_group_dense) on
+        one group over the whole slice, with the reader's decode cache.  A
+        slice whose doc-id span exceeds _DENSE_MAX_DOCS is scored per salt
+        range instead (doc-disjoint groups, no cache) and merged.  Other
+        models and prune=False run the unpruned _score_group."""
         import pyarrow.dataset as ds
 
-        # reset both introspection dicts so last_query_stats() reflects
-        # THIS call only — an OR query must not report a previous AND
-        # query's bool_* counters (and vice versa)
-        _LAST_DENSE_STATS.clear()
-        _LAST_BOOL_STATS.clear()
+        _check_choice("model", model, S.MODELS)
+        _check_choice("mode", mode, ("or", "and"))
+        # a fresh dict per call: last_query_stats() reflects THIS call only
+        # (an OR query must not report a previous AND query's bool_*
+        # counters), and a concurrent call swaps in its own dict
+        stats = self._last_stats = {}
         excl_map = {str(q): set(ts) for q, ts in (exclude or {}).items()}
         if excl_map and mode != "and":
             raise ValueError("exclude requires mode='and'")
@@ -1474,36 +1295,36 @@ class IndexReader:
             if not len(sub):
                 continue
             sub = sub.assign(qid=qid)
+            st = None
+            span = (int(sub["max_doc_id"].max())
+                    - int(sub["first_doc_id"].min()) + 1)
             if mode == "and":
-                res = _score_group_bool(
+                res, st = _score_group_bool(
                     sub, q_terms, n, avgdl, model, k,
                     excl_terms=excl_map, cache=self.decode_cache,
                     return_all=_all_matches,
                     cand_init=(cand_init or {}).get(qid),
                 )
-                for rank, row in enumerate(res.itertuples(), start=1):
-                    out.append((qid, int(row.doc_id), float(row.score), rank))
-                continue
-            # one group == all doc ranges -> the local top-k IS the global
-            # one.  bm25 routing: dense-accumulator scorer when the doc-id
-            # space fits a flat array (the head-term lever); decode-level
-            # WAND when it doesn't but the query spans many blocks; the
-            # union scorer otherwise / for other models.
-            id_space = int(sub["max_doc_id"].max()) + 1
-            if prune and model == "bm25" and id_space <= self._DENSE_MAX_DOCS:
-                res = _score_group_dense(
-                    sub, q_terms, n, avgdl, k, id_space,
-                    cache=self.decode_cache,
+            elif not (prune and model == "bm25"):
+                res = _score_group(sub, q_terms, n, avgdl, model, k)
+            elif span <= self._DENSE_MAX_DOCS:
+                # one group == all doc ranges -> its local top-k IS the
+                # global one
+                res, st = _score_group_dense(
+                    sub, q_terms, n, avgdl, k, cache=self.decode_cache,
                 )
-            elif (
-                prune and model == "bm25" and len(sub) >= _BMW_MIN_BLOCKS
-                and self.block_order == "docid"
-            ):
-                res = _score_group_bmw(sub, q_terms, n, avgdl, k)
             else:
-                res = _score_group(sub, q_terms, n, avgdl, model, k, prune)
-            for rank, row in enumerate(res.itertuples(), start=1):
-                out.append((qid, int(row.doc_id), float(row.score), rank))
+                res, st = _score_by_salt(
+                    sub, q_terms, n, avgdl, k,
+                    int(self.field_stats["salt_range"]),
+                )
+            if st is not None:
+                stats.clear()
+                stats.update(st)
+            for rank, (doc_id, score) in enumerate(
+                zip(res["doc_id"], res["score"]), start=1
+            ):
+                out.append((qid, int(doc_id), float(score), rank))
         return out
 
     def search_phrase(
@@ -1633,10 +1454,11 @@ class IndexReader:
                 for doc_id, score in by_q[qid]
                 if qid in nw_exact or matches(qid, doc_id)
             ]
-            kept.sort(key=lambda ds: (-math.floor(ds[1] * _RANK_Q), ds[0]))
             out.extend(
                 (qid, int(doc_id), float(score), rank)
-                for rank, (doc_id, score) in enumerate(kept[:k], start=1)
+                for rank, (doc_id, score) in enumerate(
+                    _merge_topk(kept, k), start=1
+                )
             )
         return out
 
@@ -1725,8 +1547,6 @@ class ShardedReader:
         model: str = "bm25",
         prune: bool = True,
     ) -> list[tuple[str, int, float, int]]:
-        import math as _m
-
         _, all_terms = _query_term_dicts(queries)
         dfs = self.global_stats_for(sorted(all_terms))
         override = (self.n_docs, self.avg_doc_len, dfs)
@@ -1740,8 +1560,8 @@ class ShardedReader:
         out: list[tuple[str, int, float, int]] = []
         for qid, _qtext in queries:
             qid = str(qid)
-            cands = per_q.get(qid, [])
-            cands.sort(key=lambda ds: (-_m.floor(ds[1] * 1e9), ds[0]))
-            for rank, (doc_id, score) in enumerate(cands[:k], start=1):
+            for rank, (doc_id, score) in enumerate(
+                _merge_topk(per_q.get(qid, []), k), start=1
+            ):
                 out.append((qid, doc_id, score, rank))
         return out

@@ -78,6 +78,10 @@ def lm_twoway_term_contrib(
     return np.log(np.maximum(v, MIN_LM_SCORE)) * q_tf
 
 
+MODELS = ("bm25", "tf_idf", "coordinate", "lm", "lm_dir", "lm_jm",
+          "lm_twoway", "bool_or", "bool_and", "cosine")
+
+
 def score_terms(
     model: str,
     terms: list[dict],

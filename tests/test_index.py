@@ -130,16 +130,13 @@ def test_config_change_recomputes(spark, built, tmp_path_factory):
 
 
 def test_bmw_serving_rank_identical(spark, built, queries_pdf):
-    """Decode-level block-max WAND (serving path) == oracle == the
-    decode-everything scorer, including exact quantized-score ties, and it
-    actually skips decode work on head-term queries."""
-    from knowledgeir_spark.index.query import _score_group_bmw
-
+    """The serving path's pruned bm25 kernel (block-max MaxScore over one
+    group spanning the whole slice) == oracle, including exact
+    quantized-score ties."""
     rd = IndexReader(spark, built["idx_dir"])
     o = built["oracle"]
     queries = [(r.qid, r.query) for r in queries_pdf.itertuples()]
-    # block_size=16 over 300 docs -> head terms span many blocks, so the
-    # _BMW_MIN_BLOCKS gate engages for every multi-term query here
+    # block_size=16 over 300 docs -> head terms span many blocks
     rows = rd.search_local(queries, k=20, model="bm25", prune=True)
     got: dict[str, list] = {}
     for qid, doc_id, score, rank in rows:
@@ -154,9 +151,11 @@ def test_bmw_serving_rank_identical(spark, built, queries_pdf):
 
 
 def test_bmw_skips_block_decodes():
-    """The WAND path must decode only a small fraction of a head term's
+    """The pruned kernel must decode only a small fraction of a head term's
     blocks once a selective term sets the threshold — and still return
-    exactly what the decode-everything scorer returns."""
+    exactly what the decode-everything scorer returns.  Doc ids start at
+    5e9, so the kernel's doc-id base (not the id itself) indexes its
+    accumulators."""
     import numpy as np
     import pandas as pd
 
@@ -165,14 +164,15 @@ def test_bmw_skips_block_decodes():
 
     rows = []
     # head term "mid": 20k postings (tf=1, dl=20) in 128-posting blocks
-    mid_docs = np.arange(0, 40000, 2, dtype=np.uint64)
+    shift = 5_000_000_000
+    mid_docs = np.arange(0, 40000, 2, dtype=np.uint64) + shift
     for bi, s in enumerate(range(0, len(mid_docs), 128)):
         ids = mid_docs[s:s + 128]
         blk = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 20))
         blk.update(term="mid", qid="1")
         rows.append(blk)
     # selective term "rare": 10 high-tf short docs (rare-only, no overlap)
-    rare_docs = np.arange(1, 20001, 2000, dtype=np.uint64)
+    rare_docs = np.arange(1, 20001, 2000, dtype=np.uint64) + shift
     blk = encode_block(rare_docs, np.full(10, 5), np.full(10, 10))
     blk.update(term="rare", qid="1")
     rows.append(blk)
@@ -193,14 +193,15 @@ def test_bmw_skips_block_decodes():
 
     Q.decode_blocks_concat = counting
     try:
-        res = Q._score_group_bmw(pdf, q_terms, n, avgdl, k, init_batch=16)
+        res, _ = Q._score_group_dense(pdf, q_terms, n, avgdl, k, cache=None)
     finally:
         Q.decode_blocks_concat = orig
     decoded_blocks = n_decoded["n"]
     assert decoded_blocks < len(pdf) * 0.2, (decoded_blocks, len(pdf))
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
     assert list(res["doc_id"]) == list(brute["doc_id"])
+    assert min(res["doc_id"]) >= shift
     assert np.allclose(res["score"], brute["score"])
 
 
@@ -237,8 +238,8 @@ def test_dense_scorer_matches_union_scorer():
     ]}
     n, avgdl = 1000.0, 18.0
     for k in (5, 7, 50):  # 50 > positive-score docs -> zero-tie fallback
-        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 1000)
-        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+        dense, _ = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
         assert list(dense["doc_id"]) == list(brute["doc_id"]), k
         assert np.allclose(dense["score"], brute["score"]), k
 
@@ -275,12 +276,11 @@ def test_dense_scorer_maxscore_skips_blocks():
     ]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 100001)
-    stats = dict(Q._LAST_DENSE_STATS)
+    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
     assert stats["n_essential"] == 1, stats
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.2, stats
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
     assert list(dense["doc_id"]) == list(brute["doc_id"])
     assert list(dense["score"]) == list(brute["score"])  # bit-identical
 
@@ -309,10 +309,9 @@ def test_dense_scorer_maxscore_no_skip_when_unsafe():
         {"term": "gamma", "term_idx": 2, "q_tf": 1, "df": 1000.0},
     ]}
     n, avgdl, k = 10000.0, 12.0, 10
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 3000)
-    stats = dict(Q._LAST_DENSE_STATS)
+    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
     assert stats["blocks_decoded"] == stats["blocks_total"], stats
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
     assert list(dense["doc_id"]) == list(brute["doc_id"])
     assert list(dense["score"]) == list(brute["score"])
 
@@ -344,11 +343,10 @@ def test_dense_scorer_single_term_block_cut():
     q_terms = {"1": [{"term": "solo", "term_idx": 0, "q_tf": 1, "df": 20000.0}]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k, 40000)
-    stats = dict(Q._LAST_DENSE_STATS)
+    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.5, stats
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
     assert list(dense["doc_id"]) == list(brute["doc_id"])
     assert list(dense["score"]) == list(brute["score"])
 
@@ -584,13 +582,12 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
 
     decoded = {}
     for k in (3, 10):
-        dense = Q._score_group_dense(pdf, q_terms, n, avgdl, k,
-                                     100001)
-        decoded[k] = dict(Q._LAST_DENSE_STATS)["blocks_decoded"]
-        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k, prune=False)
+        dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+        decoded[k] = stats["blocks_decoded"]
+        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
         assert list(dense["doc_id"]) == list(brute["doc_id"]), k
         assert list(dense["score"]) == list(brute["score"]), k
-    total = dict(Q._LAST_DENSE_STATS)["blocks_total"]
+    total = stats["blocks_total"]
     # k=3 keeps only the top-tf anchor docs (all in the mid-free id half):
     # the fill-in decodes nothing beyond the anchor block
     assert decoded[3] < decoded[10] <= total * 0.1, (decoded, total)
@@ -729,3 +726,47 @@ def test_last_query_stats_surface(spark, built, queries_pdf):
     assert st["cache_budget"] > 0
     assert st["cache_hits"] + st["cache_misses"] >= 0
     assert {"cache_postings", "cache_terms"} <= set(st)
+
+
+def test_last_query_stats_per_reader_across_threads(spark, built):
+    """Query stats belong to the reader that ran the query: reader B's
+    1-term query on another thread must not overwrite what reader A's
+    3-term query reported."""
+    import threading
+
+    o = built["oracle"]
+    n = o.total_df
+    # positive-idf terms (df < N/2), so every one is a scored term
+    pos = sorted((t for t, df in o.df.items() if 2 <= df < n / 3),
+                 key=lambda t: (-o.df[t], t))
+    a = IndexReader(spark, built["idx_dir"])
+    b = IndexReader(spark, built["idx_dir"])
+
+    def run(reader, query):
+        th = threading.Thread(
+            target=reader.search_local, args=([("1", query)],), kwargs={"k": 5}
+        )
+        th.start()
+        th.join()
+
+    run(a, " ".join(pos[:3]))
+    assert a.last_query_stats()["n_scored_terms"] == 3
+    run(b, pos[3])
+    assert b.last_query_stats()["n_scored_terms"] == 1
+    assert a.last_query_stats()["n_scored_terms"] == 3
+
+
+@pytest.mark.parametrize("kw", [
+    {"mode": "xor"}, {"merge": "foo"}, {"model": "bm99"},
+])
+def test_search_rejects_unknown_choices(spark, built, kw):
+    """An unknown mode, merge or model raises ValueError up front instead
+    of silently running OR / the driver merge, returning [] or failing
+    inside a Spark task."""
+    rd = IndexReader(spark, built["idx_dir"])
+    queries = [("1", "zzznope")]  # OOV: nothing to score, no task to fail
+    with pytest.raises(ValueError, match=next(iter(kw))):
+        rd.search(queries, k=5, **kw)
+    if "merge" not in kw:
+        with pytest.raises(ValueError, match=next(iter(kw))):
+            rd.search_local(queries, k=5, **kw)

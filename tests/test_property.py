@@ -117,11 +117,11 @@ def test_pruned_index_on_tie_heavy_corpus(spark, tmp_path):
 @settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.integers(0, 2**31 - 1))
 def test_serving_scorers_match_oracle_random(spark, tmp_path_factory, seed):
-    """Random corpora: BOTH serving scorers (dense accumulator and
-    decode-level BMW) == oracle on every query, including tie-heavy and
-    zero-idf-term cases (vocab of 12 over 120 docs makes df > N/2 common)."""
+    """Random corpora: the serving path's pruned kernel == oracle on every
+    query, both over one group spanning the slice and over the per-salt
+    split, including tie-heavy and zero-idf-term cases (vocab of 12 over
+    120 docs makes df > N/2 common)."""
     from knowledgeir_spark.index.build import IndexConfig, build_index
-    from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.query import IndexReader
 
     rng = np.random.default_rng(seed)
@@ -155,12 +155,9 @@ def test_serving_scorers_match_oracle_random(spark, tmp_path_factory, seed):
             for (_, d, s), (_, es) in zip(have, expected):
                 assert s == pytest.approx(es, abs=1e-6), (tag, seed, qtext, d)
 
-    # dense path (default routing at this id-space size)
+    # one group over the whole slice (default routing at this span)
     check(reader.search_local(queries, k=15), "dense")
-    # force the BMW path by shrinking the dense ceiling
-    old = IndexReader._DENSE_MAX_DOCS, Q._BMW_MIN_BLOCKS
-    IndexReader._DENSE_MAX_DOCS, Q._BMW_MIN_BLOCKS = 0, 1
-    try:
-        check(reader.search_local(queries, k=15), "bmw")
-    finally:
-        IndexReader._DENSE_MAX_DOCS, Q._BMW_MIN_BLOCKS = old
+    # force the per-salt split by shrinking the one-group ceiling:
+    # salt_range=32 over 120 docs gives 4 salt groups
+    reader._DENSE_MAX_DOCS = 0
+    check(reader.search_local(queries, k=15), "per-salt")
