@@ -33,10 +33,15 @@ from __future__ import annotations
 import functools
 import math
 import os
+import sys
+import threading
 import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +54,13 @@ from .codec import decode_blocks_concat, decode_ids_concat
 from . import scoring_np as S
 
 _RANK_Q = 1e9
+
+# the posting-block columns the serving kernels read (search_local's
+# scorers; prewarm and facet_counts_local read subsets)
+_BLOCK_COLUMNS = [
+    "term", "n_docs", "first_doc_id", "max_doc_id", "max_tf", "min_doc_len",
+    "doc_id_deltas", "tfs", "doc_lens",
+]
 
 
 def _score_group(
@@ -119,7 +131,9 @@ class DecodedTermCache:
     (ids, tfs, dls) per term, bounded by total postings; LRU eviction
     (get() refreshes recency).
     Correctness-neutral: cached arrays are exactly what decode produces,
-    and the cache lives inside one IndexReader (one index snapshot)."""
+    and the cache lives inside one IndexReader (one index snapshot).
+    get/put hold a lock, so threads sharing a reader keep the counters
+    and the postings total exact."""
 
     def __init__(self, max_postings: int = 10_000_000):
         from collections import OrderedDict
@@ -129,27 +143,30 @@ class DecodedTermCache:
         self._total = 0
         self.hits = 0
         self.misses = 0
+        self._lock = threading.Lock()
 
     def get(self, term: str):
-        hit = self._d.get(term)
-        if hit is None:
-            self.misses += 1
-        else:
-            self.hits += 1
-            self._d.move_to_end(term)
-        return hit
+        with self._lock:
+            hit = self._d.get(term)
+            if hit is None:
+                self.misses += 1
+            else:
+                self.hits += 1
+                self._d.move_to_end(term)
+            return hit
 
     def put(self, term: str, arrays: tuple) -> None:
-        if term in self._d:
-            return
         size = len(arrays[0])
         if size > self.max_postings:
             return
-        while self._total + size > self.max_postings and self._d:
-            _, old = self._d.popitem(last=False)
-            self._total -= len(old[0])
-        self._d[term] = arrays
-        self._total += size
+        with self._lock:
+            if term in self._d:
+                return
+            while self._total + size > self.max_postings and self._d:
+                _, old = self._d.popitem(last=False)
+                self._total -= len(old[0])
+            self._d[term] = arrays
+            self._total += size
 
 
 def _score_group_dense(
@@ -727,12 +744,36 @@ class IndexReader:
     open.  Maintenance deletes a file only at the second commit that does
     not list it, so a reader survives at least one later commit, and any
     number of append folds (which drop no postings file).  Open a new
-    reader to see later commits."""
+    reader to see later commits.
+
+    Serving (search_local, prewarm, facet_counts_local) reads posting
+    blocks from a resident term directory: the first call that touches
+    bucket b reads b's live files once into an Arrow table sorted by term,
+    plus a sorted unique-term array with int32 row offsets; later calls
+    look terms up with np.searchsorted and take zero-copy slices, so a
+    query runs no parquet scan.  A bucket whose live files exceed
+    _RESIDENT_MAX_BYTES is never loaded and is read with a filtered scan
+    on every call instead; both branches give the same rows in the same
+    order.
+
+    Thread safety: search_local, prewarm, facet_counts_local and
+    term_stats_for may run concurrently on one reader.  Bucket loads and
+    the df dict are built under the reader's lock (each bucket is loaded
+    exactly once), and the decode cache locks its own state.
+    last_query_stats() then reports whichever search_local call started
+    last."""
 
     # term_stats tables up to this row count are read once into a
     # driver-side dict (a few MB); larger vocabularies fall back to a
     # filtered Spark scan per search.  Per-instance override hook.
     _TERM_STATS_CACHE_MAX = TERM_STATS_CACHE_MAX
+    # a bucket whose live postings files hold more bytes than this is not
+    # loaded into the resident term directory: each serving call scans
+    # it with a bucket and term filter instead.  Resident memory is
+    # 1.4-1.9x the files' bytes plus ~68 bytes per distinct term (measured
+    # at 100k and 3k docs), so the ceiling bounds one bucket at ~120 MB
+    # plus its directory.  Per-instance override hook.
+    _RESIDENT_MAX_BYTES = 64 << 20
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -752,8 +793,6 @@ class IndexReader:
         # the generation's term_stats, read with pyarrow (no Spark job) so
         # the reader keeps it after a commit deletes its file; an
         # oversized vocabulary stays on disk for the Spark fallbacks
-        import pyarrow.dataset as ds
-
         dset = ds.dataset(
             live_files(index_dir, "term_stats", self.field_stats),
             format="parquet",
@@ -781,6 +820,13 @@ class IndexReader:
         self._nextword = False  # False = not yet probed
         # the last search_local call's skip counters (last_query_stats)
         self._last_stats: dict = {}
+        # resident term directory: bucket -> (block table sorted by term,
+        # sorted unique terms, int32 row offsets, bytes held), or None for
+        # a bucket over _RESIDENT_MAX_BYTES (scanned per call)
+        self._resident: dict[int, tuple | None] = {}
+        self._bucket_loads = 0
+        # guards the lazy one-time loads (buckets, df dict)
+        self._lock = threading.Lock()
 
     def _nextword_store(self):
         if self._nextword is False:
@@ -810,15 +856,20 @@ class IndexReader:
         )
 
     def term_stats_for(self, terms: list[str]) -> dict[str, float]:
-        if self._df_cache is None and not self._df_cache_checked:
-            # build the dict once per reader from the table read at open
-            self._df_cache_checked = True
-            tbl, self._term_stats_table = self._term_stats_table, None
-            if tbl is not None and tbl.num_rows <= self._TERM_STATS_CACHE_MAX:
-                self._df_cache = dict(zip(
-                    tbl["term"].to_pylist(),
-                    tbl["df"].to_numpy().astype(np.float64).tolist(),
-                ))
+        if not self._df_cache_checked:
+            # build the dict once per reader from the table read at open;
+            # the flag is set after the dict, so a concurrent caller waits
+            # for it instead of taking the Spark fallback
+            with self._lock:
+                if not self._df_cache_checked:
+                    tbl, self._term_stats_table = self._term_stats_table, None
+                    if (tbl is not None
+                            and tbl.num_rows <= self._TERM_STATS_CACHE_MAX):
+                        self._df_cache = dict(zip(
+                            tbl["term"].to_pylist(),
+                            tbl["df"].to_numpy().astype(np.float64).tolist(),
+                        ))
+                    self._df_cache_checked = True
         if self._df_cache is not None:
             return {t: self._df_cache[t] for t in terms if t in self._df_cache}
         rows = self._term_stats.filter(F.col("term").isin(list(terms))).collect()
@@ -999,31 +1050,115 @@ class IndexReader:
             return self._rows_df(rows)
         return self.search(queries, k=k, model=model, prune=prune)
 
-    def _local_dataset(self):
-        if not hasattr(self, "_pa_dataset"):
-            import pyarrow.dataset as ds
+    @functools.cached_property
+    def _local_dataset(self) -> ds.Dataset:
+        """The pinned generation's postings files as one pyarrow dataset,
+        `bucket` read from the paths (a filter on it opens only that
+        bucket's files)."""
+        return ds.dataset(
+            live_files(self.index_dir, "postings", self.field_stats),
+            format="parquet", partitioning="hive",
+            partition_base_dir=os.path.join(self.index_dir, "postings"),
+        )
 
-            self._pa_dataset = ds.dataset(
-                live_files(self.index_dir, "postings", self.field_stats),
-                format="parquet", partitioning="hive",
-                partition_base_dir=os.path.join(self.index_dir, "postings"),
-            )
-        return self._pa_dataset
+    @functools.cached_property
+    def _bucket_bytes(self) -> dict[int, int]:
+        """bucket -> bytes of its live postings files (file sizes only)."""
+        out: dict[int, int] = {}
+        for p in live_files(self.index_dir, "postings", self.field_stats):
+            b = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
+            out[b] = out.get(b, 0) + os.path.getsize(p)
+        return out
+
+    def _scan_bucket(self, b: int, terms: list[str] | None) -> pa.Table:
+        """Bucket b's block rows (of `terms`, or all), stably sorted by
+        term: each term's rows keep the live files' order."""
+        filt = ds.field("bucket") == b
+        if terms is not None:
+            filt = filt & ds.field("term").isin(terms)
+        tbl = self._local_dataset.to_table(filter=filt, columns=_BLOCK_COLUMNS)
+        return tbl.take(pc.sort_indices(tbl, [("term", "ascending")]))
+
+    def _load_bucket(self, b: int) -> tuple | None:
+        """Bucket b's resident entry: (block table sorted by term, sorted
+        unique terms, int32 row offsets with a final end, bytes held), or
+        None when its files exceed _RESIDENT_MAX_BYTES."""
+        if self._bucket_bytes.get(b, 0) > self._RESIDENT_MAX_BYTES:
+            return None
+        tbl = self._scan_bucket(b, None).combine_chunks()
+        col = tbl["term"].chunk(0) if tbl.num_rows else pa.array([], pa.string())
+        starts = np.flatnonzero(np.concatenate([
+            [tbl.num_rows > 0],
+            pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False),
+        ]))
+        terms = col.take(starts).to_numpy(zero_copy_only=False)
+        offs = np.append(starts, tbl.num_rows).astype(np.int32)
+        held = (tbl.nbytes + terms.nbytes + offs.nbytes
+                + sum(map(sys.getsizeof, terms)))
+        return tbl, terms, offs, held
+
+    def _bucket(self, b: int) -> tuple | None:
+        """Bucket b's resident entry, loaded by the first call to touch b
+        (under the reader's lock: once per bucket, however many threads
+        race to it)."""
+        try:
+            return self._resident[b]
+        except KeyError:
+            pass
+        with self._lock:
+            if b not in self._resident:
+                entry = self._load_bucket(b)
+                self._bucket_loads += entry is not None
+                self._resident[b] = entry
+            return self._resident[b]
+
+    def _blocks(
+        self, terms, columns: list[str] = _BLOCK_COLUMNS,
+    ) -> tuple[pa.Table, int]:
+        """The one block source of the serving path: (the posting-block
+        rows of `terms` with `columns`, the number of buckets read by the
+        scan fallback).  Rows come in (bucket, term) order, each term's
+        rows in the live files' order, whether the bucket is resident
+        (zero-copy slices of its table) or over the ceiling (a filtered
+        scan)."""
+        by_bucket: dict[int, list[str]] = {}
+        for t in sorted(set(terms)):
+            by_bucket.setdefault(term_bucket_py(t, self.n_buckets), []).append(t)
+        parts: list[pa.Table] = []
+        n_scanned = 0
+        empty = None
+        for b in sorted(by_bucket):
+            ts = by_bucket[b]
+            entry = self._bucket(b)
+            if entry is None:
+                n_scanned += 1
+                parts.append(self._scan_bucket(b, ts))
+                continue
+            tbl, dir_terms, offs, _ = entry
+            empty = tbl.slice(0, 0)
+            pos = np.searchsorted(dir_terms, ts)
+            for t, i in zip(ts, pos.tolist()):
+                if i < len(dir_terms) and dir_terms[i] == t:
+                    start, stop = int(offs[i]), int(offs[i + 1])
+                    parts.append(tbl.slice(start, stop - start))
+        if not parts:  # no term has blocks
+            parts = [self._local_dataset.schema.empty_table()
+                     if empty is None else empty]
+        return pa.concat_tables(parts).select(columns), n_scanned
 
     def prewarm(self, n_terms: int = 256) -> dict:
         """Serving cold-start prewarm: populate the driver-side term_stats
-        dict, open the pyarrow dataset, and pre-decode the highest-df
-        POSITIVE-idf terms into the DecodedTermCache (zero-idf Zipf-head
-        terms contribute 0 to every score and are decoded lazily by the
-        scorer only in the rare under-k case, so caching them would spend
-        the postings budget on dead weight).  Fill stops at the cache's
-        postings budget — prewarm never evicts what it just decoded.
+        dict, and pre-decode the highest-df POSITIVE-idf terms into the
+        DecodedTermCache (zero-idf Zipf-head terms contribute 0 to every
+        score and are decoded lazily by the scorer only in the rare
+        under-k case, so caching them would spend the postings budget on
+        dead weight).  Fill stops at the cache's postings budget — prewarm
+        never evicts what it just decoded.
         Returns {terms_warmed, postings_cached, sec} for observability.
-        Cost is one sequential pruned read of the head row groups —
-        amortizing exactly the ~seconds of first-touch latency a cold
-        coordinator otherwise pays on its first head-term queries."""
-        import pyarrow.dataset as ds
-
+        The head terms' blocks come from the resident term directory, so
+        prewarm also loads every bucket they touch — amortizing exactly
+        the first-touch latency a cold coordinator otherwise pays on its
+        first head-term queries."""
         t0 = time.time()
         n = float(self.field_stats["n_docs"])
         self.term_stats_for([])  # populate / size-check the df dict once
@@ -1053,14 +1188,9 @@ class IndexReader:
         if not picked:
             return {"terms_warmed": 0, "postings_cached": 0,
                     "sec": round(time.time() - t0, 3)}
-        buckets = sorted({term_bucket_py(t, self.n_buckets) for t in picked})
-        filt = ds.field("bucket").isin(buckets) & ds.field("term").isin(
-            sorted(picked)
-        )
-        pdf = self._local_dataset().to_table(
-            filter=filt,
-            columns=["term", "n_docs", "doc_id_deltas", "tfs", "doc_lens"],
-        ).to_pandas()
+        pdf = self._blocks(
+            picked, ["term", "n_docs", "doc_id_deltas", "tfs", "doc_lens"],
+        )[0].to_pandas()
         warmed = cached = 0
         for term, g in pdf.groupby("term", sort=False):
             if self.decode_cache.get(term) is not None:
@@ -1090,14 +1220,13 @@ class IndexReader:
         (per-term id-stream decode, sorted-array intersection); a query
         with any out-of-vocabulary term has an empty AND set.
 
-        Cost per query: the pruned columnar read + id-only decode of the
-        |q| terms' doc-id streams (tf/doc_len never decoded — same lever
-        as the zero-idf candidacy path) and one np.bincount over the dense
-        code array; independent of corpus size given the match set.
+        Cost per query: the |q| terms' block slices from the resident term
+        directory + id-only decode of their doc-id streams (tf/doc_len
+        never decoded — same lever as the zero-idf candidacy path) and one
+        np.bincount over the dense code array; independent of corpus size
+        given the match set.
         Returns [(qid, facet_value, n_docs)], zero-count values omitted.
         """
-        import pyarrow.dataset as ds
-
         from .facetstore import FacetStore
 
         if mode not in ("or", "and"):
@@ -1105,14 +1234,9 @@ class IndexReader:
         if self._facet_store is None:
             self._facet_store = FacetStore(self.index_dir)
         q_terms, all_terms = _query_term_dicts(queries)
-        buckets = sorted({term_bucket_py(t, self.n_buckets) for t in all_terms})
-        filt = ds.field("bucket").isin(buckets) & ds.field("term").isin(
-            sorted(all_terms)
-        )
-        tbl = self._local_dataset().to_table(
-            filter=filt, columns=["term", "n_docs", "doc_id_deltas"]
-        )
-        pdf = tbl.to_pandas()
+        pdf = self._blocks(
+            all_terms, ["term", "n_docs", "doc_id_deltas"]
+        )[0].to_pandas()
         out: list[tuple[str, str, int]] = []
         for qid, _qtext in queries:
             qid = str(qid)
@@ -1168,7 +1292,15 @@ class IndexReader:
         the numbers describe that reader's most recent local search only,
         whatever other readers or threads do meanwhile.  A slice scored per
         salt range sums the counters over its groups.  The distributed
-        search() path does not report them: its scoring runs on executors."""
+        search() path does not report them: its scoring runs on executors.
+
+        The resident term directory reports on the reader as a whole:
+        resident_buckets (buckets loaded), resident_bytes (their Arrow
+        tables plus directories), bucket_loads (loads so far: each bucket
+        loads at most once per reader); scan_fallback_buckets is the
+        number of buckets the last search_local call read with the scan
+        fallback (over _RESIDENT_MAX_BYTES)."""
+        resident = [e for e in list(self._resident.values()) if e is not None]
         return {
             **self._last_stats,
             "cache_hits": self.decode_cache.hits,
@@ -1176,6 +1308,9 @@ class IndexReader:
             "cache_postings": self.decode_cache._total,
             "cache_budget": self.decode_cache.max_postings,
             "cache_terms": len(self.decode_cache._d),
+            "resident_buckets": len(resident),
+            "resident_bytes": sum(e[3] for e in resident),
+            "bucket_loads": self._bucket_loads,
         }
 
     def suggest(
@@ -1224,13 +1359,16 @@ class IndexReader:
         _all_matches: bool = False,
         cand_init: dict[str, np.ndarray] | None = None,
     ) -> list[tuple[str, int, float, int]]:
-        """Coordinator-local point-query path: the SAME pruned slice a Spark
-        job would scan (bucket dirs + term row groups) is read directly with
-        pyarrow on the driver and scored with the same numpy kernels — no
-        job scheduling, millisecond latency.  Exactly the scatter-gather a
-        dedicated query node performs; correct whenever the pruned slice of
-        |q| terms fits driver memory (it is the index slice, ~bytes/doc —
-        at larger fan-in fall back to search()).  Returns
+        """Coordinator-local point-query path: the SAME block rows a Spark
+        job would scan for the |q| terms are sliced from the reader's
+        resident term directory (each touched bucket's live files are read
+        once per reader, then looked up by term — no parquet scan per
+        query; buckets over _RESIDENT_MAX_BYTES are scanned with a bucket
+        and term filter instead) and scored on the driver with the same
+        numpy kernels — no job scheduling, millisecond latency.  Exactly
+        the scatter-gather a dedicated query node performs; correct
+        whenever the slice of |q| terms fits driver memory (at larger
+        fan-in fall back to search()).  Returns
         [(qid, doc_id, score, rank)] rank-identical to search()/oracle.
 
         mode="and": conjunctive retrieval — only docs containing EVERY
@@ -1243,8 +1381,6 @@ class IndexReader:
         slice whose doc-id span exceeds _DENSE_MAX_DOCS is scored per salt
         range instead (doc-disjoint groups, no cache) and merged.  Other
         models and prune=False run the unpruned _score_group."""
-        import pyarrow.dataset as ds
-
         _check_choice("model", model, S.MODELS)
         _check_choice("mode", mode, ("or", "and"))
         # a fresh dict per call: last_query_stats() reflects THIS call only
@@ -1275,17 +1411,7 @@ class IndexReader:
         for terms in q_terms.values():
             for t in terms:
                 t["df"] = dfs.get(t["term"], 0.0)
-        buckets = sorted({term_bucket_py(t, self.n_buckets) for t in all_terms})
-        filt = ds.field("bucket").isin(buckets) & ds.field("term").isin(
-            sorted(all_terms)
-        )
-        tbl = self._local_dataset().to_table(
-            filter=filt,
-            columns=[
-                "term", "n_docs", "first_doc_id", "max_doc_id", "max_tf",
-                "min_doc_len", "doc_id_deltas", "tfs", "doc_lens",
-            ],
-        )
+        tbl, n_scanned = self._blocks(all_terms)
         pdf = tbl.to_pandas()
         out: list[tuple[str, int, float, int]] = []
         for qid, _qtext in queries:
@@ -1325,6 +1451,7 @@ class IndexReader:
                 zip(res["doc_id"], res["score"]), start=1
             ):
                 out.append((qid, int(doc_id), float(score), rank))
+        stats["scan_fallback_buckets"] = n_scanned
         return out
 
     def search_phrase(

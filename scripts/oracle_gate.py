@@ -10,11 +10,17 @@ Usage: python scripts/oracle_gate.py [sf_dir] [query ...]
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+# the checkout this script lives in: its package is the one under test, in
+# the driver and (through PYTHONPATH) in Spark's Python workers
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
