@@ -15,13 +15,14 @@ O(total_bytes) numpy work, no per-posting Python.
 Varint is the only payload codec (PForDelta measured no better: larger
 postings at 3,000 docs, 10% smaller at 1M docs for 2.36x the build time).
 The build encodes a whole partition's streams at once
-(varint_encode_with_offsets); readers decode many blocks at once
-(decode_blocks_concat).
+(varint_encode_with_offsets); readers decode a table of block rows at once
+straight from its Arrow payload buffers (decode_table).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 _MAX_VARINT_BYTES = 10  # 64-bit
@@ -159,6 +160,35 @@ def decode_ids_concat(delta_bufs, n_docs) -> np.ndarray:
     if total == 0:
         return np.zeros(0, dtype=np.uint64)
     return _block_ids(delta_bufs, ns, total)
+
+
+def _payload_stream(col: pa.Array):
+    """The blocks' payloads of one Arrow binary array as one contiguous
+    buffer (its data buffer between its first and last offset)."""
+    if not len(col):
+        return b""
+    _, off_buf, data = col.buffers()
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(off_buf, dtype=width)
+    return memoryview(data)[offs[col.offset]:offs[col.offset + len(col)]]
+
+
+def decode_table(blocks: pa.Table, ids_only: bool = False):
+    """Decode every block row of an Arrow table (columns n_docs and
+    doc_id_deltas, plus tfs and doc_lens unless ids_only) in one vectorized
+    pass: each payload column's chunks contribute their data buffers
+    directly, with no per-row copy.  Returns the doc ids, or
+    (ids, tfs, doc_lens), as uint64 in row order."""
+
+    def streams(name: str) -> list:
+        return [_payload_stream(c) for c in blocks.column(name).chunks]
+
+    ns = blocks.column("n_docs").to_numpy().astype(np.int64)
+    if ids_only:
+        return decode_ids_concat(streams("doc_id_deltas"), ns)
+    return decode_blocks_concat(
+        streams("doc_id_deltas"), streams("tfs"), streams("doc_lens"), ns,
+    )
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -64,37 +64,22 @@ from .build import (
     TERM_STATS_CACHE_MAX, IndexConfig, apply_block_encoder, block_term_stats,
     check_layout, live_files, read_field_stats, read_live,
 )
-from .codec import decode_blocks_concat
+from .codec import decode_table
 
 _LONG_FORM = "doc_id long, term string, tf long, doc_len long"
 _TABLES = ("postings", "term_stats")
-def _payload_stream(col):
-    """The blocks' payloads of one Arrow binary column as one contiguous
-    buffer (the column's data buffer between its first and last offset)."""
-    import pyarrow as pa
-
-    if not len(col):
-        return b""
-    _, off_buf, data = col.buffers()
-    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    offs = np.frombuffer(off_buf, dtype=width)
-    return memoryview(data)[offs[col.offset]:offs[col.offset + len(col)]]
 
 
 def decode_postings_df(blocks: DataFrame) -> DataFrame:
     """Inverse of the block builder: block rows -> (doc_id, term, tf, doc_len).
-    mapInArrow: each batch's blocks decode in one decode_blocks_concat call,
-    and each block's term repeats n_docs times."""
+    mapInArrow: each batch's blocks decode in one decode_table call, and
+    each block's term repeats n_docs times."""
     import pyarrow as pa
 
     def run(batches):
         for batch in batches:
             ns = batch.column("n_docs").to_numpy().astype(np.int64)
-            streams = [
-                [_payload_stream(batch.column(c))]
-                for c in ("doc_id_deltas", "tfs", "doc_lens")
-            ]
-            ids, tfs, dls = decode_blocks_concat(*streams, ns)
+            ids, tfs, dls = decode_table(pa.Table.from_batches([batch]))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(ids.astype(np.int64)),

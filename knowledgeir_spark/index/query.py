@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §3.2 "Spark shape"):
   postings scan [bucket partition-pruned to <= |q| buckets,
                  term predicate pushed to parquet row groups]
     ⋈ broadcast(query terms)
-    → groupBy(qid, salt).applyInPandas(pruned bm25 kernel)    [local top-k]
+    → groupBy(qid, salt).applyInArrow(pruned bm25 kernel)     [local top-k]
     → window or driver top-k merge                             [global]
 
 Each (qid, salt) group holds the query's posting blocks for ONE contiguous
@@ -24,6 +24,11 @@ floor(score*1e9), so the result is exact, doc_id tie-breaks included;
 tests assert it against the unpruned _score_group, which also serves the
 other models and prune=False.
 
+Every kernel takes a query id and {term: Arrow table of its block rows}
+(search(): the group split by term; search_local: resident-directory
+slices), decodes payloads straight from the Arrow buffers
+(codec.decode_table) and returns its top-k (doc_ids int64, scores float64).
+
 Scores are rank-identical to the full-scan DataFrame path and the oracle
 (same ordered summation + quantized ranking key).
 """
@@ -38,7 +43,6 @@ import threading
 import time
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -50,7 +54,7 @@ from .build import (
     TERM_STATS_CACHE_MAX, check_codec, live_files, read_field_stats, read_live,
     term_bucket_py,
 )
-from .codec import decode_blocks_concat, decode_ids_concat
+from .codec import decode_table
 from . import scoring_np as S
 
 _RANK_Q = 1e9
@@ -63,37 +67,72 @@ _BLOCK_COLUMNS = [
 ]
 
 
+def _col(g: pa.Table, name: str, dtype=np.int64) -> np.ndarray:
+    """One column of a term's block rows as a numpy array."""
+    return g.column(name).to_numpy().astype(dtype, copy=False)
+
+
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, np.int64), np.empty(0, np.float64)
+
+
+def _term_runs(tbl: pa.Table) -> tuple[pa.Table, np.ndarray, np.ndarray]:
+    """tbl stably sorted by term (each term's rows keep their order), its
+    unique terms in order, and int32 row offsets with a final end."""
+    tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")])).combine_chunks()
+    col = tbl["term"].chunk(0) if tbl.num_rows else pa.array([], pa.string())
+    starts = np.flatnonzero(np.concatenate([
+        [tbl.num_rows > 0],
+        pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False),
+    ]))
+    terms = col.take(starts).to_numpy(zero_copy_only=False)
+    return tbl, terms, np.append(starts, tbl.num_rows).astype(np.int32)
+
+
+def _split_by_term(tbl: pa.Table) -> dict[str, pa.Table]:
+    """Block rows -> {term: that term's rows, in their original order}."""
+    tbl, terms, offs = _term_runs(tbl)
+    return {
+        t: tbl.slice(a, b - a)
+        for t, a, b in zip(terms.tolist(), offs[:-1].tolist(), offs[1:].tolist())
+    }
+
+
+def _doc_span(blocks: dict[str, pa.Table]) -> tuple[int, int]:
+    """(smallest first_doc_id, doc-id span) over every block row.  Block
+    first/max doc ids are the block's min/max id under both block orders
+    (impact blocks are re-sorted by doc id at build)."""
+    base = min(pc.min(g["first_doc_id"]).as_py() for g in blocks.values())
+    top = max(pc.max(g["max_doc_id"]).as_py() for g in blocks.values())
+    return base, top - base + 1
+
+
 def _score_group(
-    pdf: pd.DataFrame,
+    qid: str,
+    blocks: dict[str, pa.Table],
     q_terms: dict[str, list[dict]],
     n: float,
     avgdl: float,
     model: str,
     k: int,
-) -> pd.DataFrame:
-    """One (qid, salt) group -> local top-k (qid, doc_id, score), unpruned:
+) -> tuple[np.ndarray, np.ndarray]:
+    """One (qid, salt) group -> local top-k (doc_ids, scores), unpruned:
     every block is decoded and every candidate scored.  The kernel for
     non-bm25 models and prune=False, and the reference the pruned kernel
     is tested against."""
-    qid = pdf["qid"].iat[0]
     terms = q_terms[qid]
     # decode all blocks per term in three vectorized passes (segmented
-    # cumsum over concatenated varint streams — see codec.decode_blocks_concat)
+    # cumsum over concatenated varint streams — see codec.decode_table)
     id_by: dict[str, np.ndarray] = {}
     tf_raw: dict[str, np.ndarray] = {}
     dl_raw: dict[str, np.ndarray] = {}
-    for term, g in pdf.groupby("term", sort=False):
-        ids, tfs, dls = decode_blocks_concat(
-            [bytes(x) for x in g["doc_id_deltas"]],
-            [bytes(x) for x in g["tfs"]],
-            [bytes(x) for x in g["doc_lens"]],
-            g["n_docs"].tolist(),
-        )
+    for term, g in blocks.items():
+        ids, tfs, dls = decode_table(g)
         id_by[term] = ids.astype(np.int64)
         tf_raw[term] = tfs.astype(np.float64)
         dl_raw[term] = dls.astype(np.float64)
     if not id_by:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return _no_hits()
     all_ids = np.unique(np.concatenate(list(id_by.values())))
     n_cand = len(all_ids)
     dl = np.zeros(n_cand, dtype=np.float64)
@@ -109,9 +148,7 @@ def _score_group(
     # local top-k with the engine ranking key (quantized desc, doc_id asc)
     qkeys = np.floor(scores * _RANK_Q).astype(np.int64)
     order = np.lexsort((all_ids, -qkeys))[: k]
-    return pd.DataFrame(
-        {"qid": qid, "doc_id": all_ids[order], "score": scores[order]}
-    )
+    return all_ids[order], scores[order]
 
 
 def _merge_topk(
@@ -170,15 +207,16 @@ class DecodedTermCache:
 
 
 def _score_group_dense(
-    pdf: pd.DataFrame,
+    qid: str,
+    blocks: dict[str, pa.Table],
     q_terms: dict[str, list[dict]],
     n: float,
     avgdl: float,
     k: int,
     cache: DecodedTermCache | None = None,
-) -> tuple[pd.DataFrame, dict]:
+) -> tuple[np.ndarray, np.ndarray, dict]:
     """The pruned bm25 kernel, on both query paths: one (qid[, salt]) group
-    -> (local top-k (qid, doc_id, score), skip statistics).
+    -> (local top-k doc_ids, their scores, skip statistics).
 
     Accumulators are flat arrays over the group's own doc-id span,
     indexed by doc_id - base (base = the group's smallest first_doc_id),
@@ -206,21 +244,11 @@ def _score_group_dense(
     posting lists, so pass it only when the group holds every block of
     its terms (search_local's one group over the slice).
     """
-    qid = str(pdf["qid"].iat[0])
     terms = sorted(q_terms[qid], key=lambda t: t["term_idx"])
-    groups = {term: g for term, g in pdf.groupby("term", sort=False)}
-    # block first/max doc ids are the block's min/max id under both block
-    # orders (impact blocks are re-sorted by doc id at build)
-    base = int(pdf["first_doc_id"].min())
-    span = int(pdf["max_doc_id"].max()) - base + 1
+    base, span = _doc_span(blocks)
 
-    def decode(g) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        ids, tfs, dls = decode_blocks_concat(
-            [bytes(x) for x in g["doc_id_deltas"]],
-            [bytes(x) for x in g["tfs"]],
-            [bytes(x) for x in g["doc_lens"]],
-            g["n_docs"].tolist(),
-        )
+    def decode(g: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        ids, tfs, dls = decode_table(g)
         return ids.astype(np.int64), tfs, dls
 
     # plan: per-term global contribution bound from block metadata (no
@@ -228,7 +256,7 @@ def _score_group_dense(
     scored_terms = []
     deferred = []  # zero-idf term groups: candidacy-only, decoded lazily
     for t in terms:
-        g = groups.get(t["term"])
+        g = blocks.get(t["term"])
         if g is None:
             continue
         df = float(t["df"])
@@ -240,8 +268,8 @@ def _score_group_dense(
         bound = float(
             np.max(
                 S.bm25_term_bound(
-                    g["max_tf"].to_numpy(np.float64),
-                    g["min_doc_len"].to_numpy(np.float64),
+                    _col(g, "max_tf", np.float64),
+                    _col(g, "min_doc_len", np.float64),
                     df, n, avgdl,
                 )
             )
@@ -279,8 +307,8 @@ def _score_group_dense(
             pos = 0  # nothing decoded: the cached arrays supplied everything
         else:
             bounds = S.bm25_term_bound(
-                g["max_tf"].to_numpy(np.float64),
-                g["min_doc_len"].to_numpy(np.float64),
+                _col(g, "max_tf", np.float64),
+                _col(g, "min_doc_len", np.float64),
                 d["df"], n, avgdl,
             )
             order = np.argsort(-bounds, kind="stable")
@@ -288,7 +316,7 @@ def _score_group_dense(
             parts = []
             while pos < len(order):
                 take = order[pos:pos + batch]
-                ids, tfs, dls = decode(g.iloc[take])
+                ids, tfs, dls = decode(g.take(take))
                 parts.append((ids, tfs, dls))
                 rel = ids - base
                 seen[rel] = True
@@ -315,9 +343,9 @@ def _score_group_dense(
                 ))
         stats = dict(
             qid=qid, n_scored_terms=1, n_essential=1,
-            blocks_total=len(g), blocks_decoded=pos, cache_hit=cache_hit,
+            blocks_total=g.num_rows, blocks_decoded=pos, cache_hit=cache_hit,
         )
-        return _dense_topk(qid, score_sel, seen, deferred, k, base), stats
+        return (*_dense_topk(score_sel, seen, deferred, k, base), stats)
 
     # SELECTION (MaxScore at block-metadata granularity — the mid-idf
     # head-term lever): decode terms in descending bound order; once the
@@ -362,7 +390,7 @@ def _score_group_dense(
     # decode only their blocks whose [first_doc_id, max_doc_id] range holds
     # a candidate (head-term blocks are doc-dense, candidates sparse, so
     # most blocks drop)
-    blocks_decoded = sum(len(d["g"]) for d in by_bound[:n_ess])
+    blocks_decoded = sum(d["g"].num_rows for d in by_bound[:n_ess])
     if n_ess < len(by_bound):
         # CANDIDATE FILTER (exact MaxScore step 2): a candidate whose upper
         # bound — its exact partial over the essential terms plus the summed
@@ -400,8 +428,8 @@ def _score_group_dense(
                 decoded[term] = hit
                 continue
             g = d["g"]
-            lo = g["first_doc_id"].to_numpy(np.int64) - base
-            hi = g["max_doc_id"].to_numpy(np.int64) - base
+            lo = _col(g, "first_doc_id") - base
+            hi = _col(g, "max_doc_id") - base
             keep = (cum[hi + 1] - cum[lo]) > 0
             if cache is not None and cache.max_postings > 0 and keep.mean() > 0.5:
                 # candidates blanket most of this term's block ranges (the
@@ -411,13 +439,13 @@ def _score_group_dense(
                 full = decode(g)
                 cache.put(term, full)
                 decoded[term] = full
-                blocks_decoded += len(g)
+                blocks_decoded += g.num_rows
             elif keep.any():
-                decoded[term] = decode(g[keep])
+                decoded[term] = decode(g.filter(keep))
                 blocks_decoded += int(keep.sum())
     stats = dict(
         qid=qid, n_scored_terms=len(by_bound), n_essential=n_ess,
-        blocks_total=sum(len(d["g"]) for d in by_bound),
+        blocks_total=sum(d["g"].num_rows for d in by_bound),
         blocks_decoded=blocks_decoded,
     )
 
@@ -435,51 +463,54 @@ def _score_group_dense(
             tfs.astype(np.float64), float(t["df"]), dls.astype(np.float64),
             n, avgdl,
         )
-    return _dense_topk(qid, score, seen, deferred, k, base), stats
+    return (*_dense_topk(score, seen, deferred, k, base), stats)
 
 
 def _score_by_salt(
-    pdf: pd.DataFrame,
+    qid: str,
+    blocks: dict[str, pa.Table],
     q_terms: dict[str, list[dict]],
     n: float,
     avgdl: float,
     k: int,
     salt_range: int,
-) -> tuple[pd.DataFrame, dict]:
+) -> tuple[np.ndarray, np.ndarray, dict]:
     """The pruned kernel over each salt range of one query's slice (doc-
     disjoint groups of <= salt_range ids, as search() groups them), merged
     into the exact top-k; counters are summed over the groups.  No decode
     cache: its arrays hold whole posting lists, which fall outside a
     group's doc-id base."""
+    groups: dict[int, dict[str, pa.Table]] = {}
+    for term, g in blocks.items():
+        salt = _col(g, "first_doc_id") // salt_range
+        for sv in np.unique(salt).tolist():
+            groups.setdefault(sv, {})[term] = g.filter(salt == sv)
     parts = [
-        _score_group_dense(g, q_terms, n, avgdl, k)
-        for _, g in pdf.groupby(pdf["first_doc_id"] // salt_range, sort=False)
+        _score_group_dense(qid, grp, q_terms, n, avgdl, k)
+        for grp in groups.values()
     ]
     top = _merge_topk([
-        (d, s) for res, _ in parts for d, s in zip(res["doc_id"], res["score"])
+        (d, s) for ids, scores, _ in parts for d, s in zip(ids, scores)
     ], k)
     stats = {
-        key: sum(st[key] for _, st in parts)
+        key: sum(st[key] for _, _, st in parts)
         for key in ("n_scored_terms", "n_essential", "blocks_total",
                     "blocks_decoded")
     }
-    qid = str(pdf["qid"].iat[0])
-    return pd.DataFrame({
-        "qid": qid, "doc_id": [d for d, _ in top], "score": [s for _, s in top],
-    }), {"qid": qid, **stats}
+    return (np.array([d for d, _ in top], np.int64),
+            np.array([s for _, s in top], np.float64), {"qid": qid, **stats})
 
 
 def _dense_topk(
-    qid: str,
     score: np.ndarray,
     seen: np.ndarray,
-    deferred: list,
+    deferred: list[pa.Table],
     k: int,
     base: int,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray]:
     """Shared dense-scorer tail: zero-idf candidacy fill, bm25 finalize,
-    quantized-key pre-selection, top-k.  score/seen are indexed by
-    doc_id - base."""
+    quantized-key pre-selection, top-k (doc_ids, scores).  score/seen are
+    indexed by doc_id - base."""
     cand = np.flatnonzero(seen)
     # a zero-idf term's docs all score exactly 0: they can only reach the
     # top-k when fewer than k positive-quantized scores exist, so their
@@ -491,13 +522,11 @@ def _dense_topk(
             need_zero = math.floor(math.log(max(kth_raw, 1.0)) * _RANK_Q) <= 0
         if need_zero:
             for g in deferred:
-                ids = decode_ids_concat(
-                    [bytes(x) for x in g["doc_id_deltas"]], g["n_docs"].tolist(),
-                ).astype(np.int64)
+                ids = decode_table(g, ids_only=True).astype(np.int64)
                 seen[ids - base] = True
             cand = np.flatnonzero(seen)
     if not len(cand):
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return _no_hits()
     sc = np.log(np.maximum(score[cand], 1.0))  # bm25 finalize
     qkeys = np.floor(sc * _RANK_Q).astype(np.int64)
     if len(cand) > max(4096, 4 * k):
@@ -508,13 +537,12 @@ def _dense_topk(
         keep = qkeys >= kth
         cand, sc, qkeys = cand[keep], sc[keep], qkeys[keep]
     order = np.lexsort((cand, -qkeys))[:k]
-    return pd.DataFrame(
-        {"qid": qid, "doc_id": cand[order] + base, "score": sc[order]}
-    )
+    return cand[order] + base, sc[order]
 
 
 def _score_group_bool(
-    pdf: pd.DataFrame,
+    qid: str,
+    blocks: dict[str, pa.Table],
     q_terms: dict[str, list[dict]],
     n: float,
     avgdl: float,
@@ -524,9 +552,9 @@ def _score_group_bool(
     cache: "DecodedTermCache | None" = None,
     return_all: bool = False,
     cand_init: np.ndarray | None = None,
-) -> tuple[pd.DataFrame, dict]:
+) -> tuple[np.ndarray, np.ndarray, dict]:
     """Conjunctive (AND / AND-NOT) retrieval over one (qid[, salt]) group
-    -> (top-k (qid, doc_id, score), skip statistics):
+    -> (top-k doc_ids, their scores, skip statistics):
     only docs containing EVERY query term and NONE of the excluded terms
     are scored (same model kernels and quantized rank key as the OR path,
     so AND of a single term is rank-identical to OR).
@@ -551,55 +579,36 @@ def _score_group_bool(
     the candidate set is value-identical to filtering the unrestricted
     result afterwards — and every term's decode is block-pruned to the
     restriction from the start."""
-    qid = pdf["qid"].iat[0]
     excl = (excl_terms or {}).get(qid, set())
     terms = [t for t in q_terms[qid] if t["term"] not in excl]
-    empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
     if not terms:
-        return empty, {}
-    groups = {t: g for t, g in pdf.groupby("term", sort=False)}
-    blocks_total = int(sum(len(g) for g in groups.values()))
+        return (*_no_hits(), {})
+    blocks_total = sum(g.num_rows for g in blocks.values())
     blocks_decoded = 0
 
     # a required term with no postings -> AND can match nothing
-    if any(t["term"] not in groups for t in terms):
-        return empty, {"bool_blocks_total": blocks_total,
-                       "bool_blocks_decoded": 0, "bool_candidates": 0}
+    if any(t["term"] not in blocks for t in terms):
+        return (*_no_hits(), {"bool_blocks_total": blocks_total,
+                              "bool_blocks_decoded": 0, "bool_candidates": 0})
 
-    def decode_rows(g: pd.DataFrame):
-        ids, tfs, dls = decode_blocks_concat(
-            [bytes(x) for x in g["doc_id_deltas"]],
-            [bytes(x) for x in g["tfs"]],
-            [bytes(x) for x in g["doc_lens"]],
-            g["n_docs"].tolist(),
-        )
+    def decode_term(term: str, g: pa.Table, cand: np.ndarray | None):
+        """Full decode via cache when available, else block-pruned decode;
+        (ids, tfs, dls) sorted by id."""
+        nonlocal blocks_decoded
+        hit = cache.get(term) if cache is not None else None
+        if hit is None:
+            if cand is not None:
+                lo = np.searchsorted(cand, _col(g, "first_doc_id"), side="left")
+                hi = np.searchsorted(cand, _col(g, "max_doc_id"), side="right")
+                g = g.filter(lo < hi)
+            blocks_decoded += g.num_rows
+            hit = decode_table(g)
+        ids, tfs, dls = hit
         ids = ids.astype(np.int64)
         order = np.argsort(ids, kind="stable")
         return ids[order], tfs[order].astype(np.float64), dls[order].astype(
             np.float64
         )
-
-    def decode_term(term: str, g: pd.DataFrame, cand: np.ndarray | None):
-        """Full decode via cache when available, else block-pruned decode."""
-        nonlocal blocks_decoded
-        hit = cache.get(term) if cache is not None else None
-        if hit is not None:
-            ids, tfs, dls = hit
-            ids = ids.astype(np.int64)
-            order = np.argsort(ids, kind="stable")
-            return ids[order], tfs[order].astype(np.float64), dls[
-                order
-            ].astype(np.float64)
-        if cand is not None:
-            first = g["first_doc_id"].to_numpy(np.int64)
-            last = g["max_doc_id"].to_numpy(np.int64)
-            lo = np.searchsorted(cand, first, side="left")
-            hi = np.searchsorted(cand, last, side="right")
-            g = g[lo < hi]
-        blocks_decoded += len(g)
-        if not len(g):
-            return (np.empty(0, np.int64), np.empty(0), np.empty(0))
-        return decode_rows(g)
 
     ordered = sorted(terms, key=lambda t: (float(t["df"]), t["term"]))
     decoded: dict[str, tuple] = {}
@@ -608,7 +617,7 @@ def _score_group_bool(
     )
     for t in ordered:
         term = t["term"]
-        ids, tfs, dls = decode_term(term, groups[term], cand)
+        ids, tfs, dls = decode_term(term, blocks[term], cand)
         decoded[term] = (ids, tfs, dls)
         cand = ids if cand is None else cand[
             np.isin(cand, ids, assume_unique=True)
@@ -617,7 +626,7 @@ def _score_group_bool(
             break
     if cand is not None and len(cand):
         for xt in sorted(excl):
-            g = groups.get(xt)
+            g = blocks.get(xt)
             if g is None:
                 continue
             x_ids, _, _ = decode_term(xt, g, cand)
@@ -628,7 +637,7 @@ def _score_group_bool(
              "bool_blocks_decoded": blocks_decoded,
              "bool_candidates": int(len(cand) if cand is not None else 0)}
     if cand is None or not len(cand):
-        return empty, stats
+        return (*_no_hits(), stats)
 
     tf_by_term: dict[str, np.ndarray] = {}
     dl = None
@@ -642,9 +651,7 @@ def _score_group_bool(
     order = np.lexsort((cand, -qkeys))
     if not return_all:
         order = order[:k]
-    return pd.DataFrame(
-        {"qid": qid, "doc_id": cand[order], "score": scores[order]}
-    ), stats
+    return cand[order], scores[order], stats
 
 
 def _check_choice(name: str, value: str, allowed: tuple[str, ...]) -> None:
@@ -974,16 +981,28 @@ class IndexReader:
         )
         joined = joined.repartition(parts, "qid", "salt")
 
-        def apply_fn(pdf):
+        def apply_fn(key, tbl):
+            qid = key[0].as_py()
+            blocks = _split_by_term(tbl)
             if mode == "and":
-                return _score_group_bool(
-                    pdf, q_terms, n, avgdl, model, k, excl_terms=excl_map,
-                )[0]
-            if prune and model == "bm25":
-                return _score_group_dense(pdf, q_terms, n, avgdl, k)[0]
-            return _score_group(pdf, q_terms, n, avgdl, model, k)
+                ids, scores, _ = _score_group_bool(
+                    qid, blocks, q_terms, n, avgdl, model, k,
+                    excl_terms=excl_map,
+                )
+            elif prune and model == "bm25":
+                ids, scores, _ = _score_group_dense(
+                    qid, blocks, q_terms, n, avgdl, k,
+                )
+            else:
+                ids, scores = _score_group(qid, blocks, q_terms, n, avgdl,
+                                           model, k)
+            return pa.table({
+                "qid": pa.array([qid] * len(ids), pa.string()),
+                "doc_id": pa.array(ids, pa.int64()),
+                "score": pa.array(scores, pa.float64()),
+            })
 
-        local = joined.groupBy("qid", "salt").applyInPandas(
+        local = joined.groupBy("qid", "salt").applyInArrow(
             apply_fn, "qid string, doc_id long, score double"
         )
         if merge == "auto":
@@ -1071,13 +1090,12 @@ class IndexReader:
         return out
 
     def _scan_bucket(self, b: int, terms: list[str] | None) -> pa.Table:
-        """Bucket b's block rows (of `terms`, or all), stably sorted by
-        term: each term's rows keep the live files' order."""
+        """Bucket b's block rows (of `terms`, or all), in the live files'
+        order."""
         filt = ds.field("bucket") == b
         if terms is not None:
             filt = filt & ds.field("term").isin(terms)
-        tbl = self._local_dataset.to_table(filter=filt, columns=_BLOCK_COLUMNS)
-        return tbl.take(pc.sort_indices(tbl, [("term", "ascending")]))
+        return self._local_dataset.to_table(filter=filt, columns=_BLOCK_COLUMNS)
 
     def _load_bucket(self, b: int) -> tuple | None:
         """Bucket b's resident entry: (block table sorted by term, sorted
@@ -1085,14 +1103,7 @@ class IndexReader:
         None when its files exceed _RESIDENT_MAX_BYTES."""
         if self._bucket_bytes.get(b, 0) > self._RESIDENT_MAX_BYTES:
             return None
-        tbl = self._scan_bucket(b, None).combine_chunks()
-        col = tbl["term"].chunk(0) if tbl.num_rows else pa.array([], pa.string())
-        starts = np.flatnonzero(np.concatenate([
-            [tbl.num_rows > 0],
-            pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False),
-        ]))
-        terms = col.take(starts).to_numpy(zero_copy_only=False)
-        offs = np.append(starts, tbl.num_rows).astype(np.int32)
+        tbl, terms, offs = _term_runs(self._scan_bucket(b, None))
         held = (tbl.nbytes + terms.nbytes + offs.nbytes
                 + sum(map(sys.getsizeof, terms)))
         return tbl, terms, offs, held
@@ -1112,39 +1123,32 @@ class IndexReader:
                 self._resident[b] = entry
             return self._resident[b]
 
-    def _blocks(
-        self, terms, columns: list[str] = _BLOCK_COLUMNS,
-    ) -> tuple[pa.Table, int]:
-        """The one block source of the serving path: (the posting-block
-        rows of `terms` with `columns`, the number of buckets read by the
-        scan fallback).  Rows come in (bucket, term) order, each term's
-        rows in the live files' order, whether the bucket is resident
-        (zero-copy slices of its table) or over the ceiling (a filtered
-        scan)."""
+    def _blocks(self, terms) -> tuple[dict[str, pa.Table], int]:
+        """The one block source of the serving path: ({term: its posting-
+        block rows} for the `terms` that have blocks, the number of
+        buckets read by the scan fallback).  Terms come in (bucket, term)
+        order, each term's rows in the live files' order, whether the
+        bucket is resident (zero-copy slices of its table) or over the
+        ceiling (a filtered scan)."""
         by_bucket: dict[int, list[str]] = {}
         for t in sorted(set(terms)):
             by_bucket.setdefault(term_bucket_py(t, self.n_buckets), []).append(t)
-        parts: list[pa.Table] = []
+        out: dict[str, pa.Table] = {}
         n_scanned = 0
-        empty = None
         for b in sorted(by_bucket):
             ts = by_bucket[b]
             entry = self._bucket(b)
             if entry is None:
                 n_scanned += 1
-                parts.append(self._scan_bucket(b, ts))
+                out.update(_split_by_term(self._scan_bucket(b, ts)))
                 continue
             tbl, dir_terms, offs, _ = entry
-            empty = tbl.slice(0, 0)
             pos = np.searchsorted(dir_terms, ts)
             for t, i in zip(ts, pos.tolist()):
                 if i < len(dir_terms) and dir_terms[i] == t:
                     start, stop = int(offs[i]), int(offs[i + 1])
-                    parts.append(tbl.slice(start, stop - start))
-        if not parts:  # no term has blocks
-            parts = [self._local_dataset.schema.empty_table()
-                     if empty is None else empty]
-        return pa.concat_tables(parts).select(columns), n_scanned
+                    out[t] = tbl.slice(start, stop - start)
+        return out, n_scanned
 
     def prewarm(self, n_terms: int = 256) -> dict:
         """Serving cold-start prewarm: populate the driver-side term_stats
@@ -1188,19 +1192,11 @@ class IndexReader:
         if not picked:
             return {"terms_warmed": 0, "postings_cached": 0,
                     "sec": round(time.time() - t0, 3)}
-        pdf = self._blocks(
-            picked, ["term", "n_docs", "doc_id_deltas", "tfs", "doc_lens"],
-        )[0].to_pandas()
         warmed = cached = 0
-        for term, g in pdf.groupby("term", sort=False):
+        for term, g in self._blocks(picked)[0].items():
             if self.decode_cache.get(term) is not None:
                 continue
-            ids, tfs, dls = decode_blocks_concat(
-                [bytes(x) for x in g["doc_id_deltas"]],
-                [bytes(x) for x in g["tfs"]],
-                [bytes(x) for x in g["doc_lens"]],
-                g["n_docs"].tolist(),
-            )
+            ids, tfs, dls = decode_table(g)
             self.decode_cache.put(term, (ids.astype(np.int64), tfs, dls))
             warmed += 1
             cached += len(ids)
@@ -1234,9 +1230,7 @@ class IndexReader:
         if self._facet_store is None:
             self._facet_store = FacetStore(self.index_dir)
         q_terms, all_terms = _query_term_dicts(queries)
-        pdf = self._blocks(
-            all_terms, ["term", "n_docs", "doc_id_deltas"]
-        )[0].to_pandas()
+        blocks = self._blocks(all_terms)[0]
         out: list[tuple[str, str, int]] = []
         for qid, _qtext in queries:
             qid = str(qid)
@@ -1246,15 +1240,11 @@ class IndexReader:
             if mode == "and":
                 per_term = []
                 for t in sorted(terms):
-                    sub = pdf[pdf["term"] == t]
-                    if not len(sub):
+                    if t not in blocks:
                         per_term = None  # OOV term -> empty conjunction
                         break
                     per_term.append(
-                        decode_ids_concat(
-                            [bytes(x) for x in sub["doc_id_deltas"]],
-                            sub["n_docs"].tolist(),
-                        ).astype(np.int64)
+                        decode_table(blocks[t], ids_only=True).astype(np.int64)
                     )
                 if per_term is None:
                     continue
@@ -1265,15 +1255,12 @@ class IndexReader:
                 if not len(ids):
                     continue
             else:
-                sub = pdf[pdf["term"].isin(terms)]
-                if not len(sub):
+                sub = [g for t, g in blocks.items() if t in terms]
+                if not sub:
                     continue
-                ids = np.unique(
-                    decode_ids_concat(
-                        [bytes(x) for x in sub["doc_id_deltas"]],
-                        sub["n_docs"].tolist(),
-                    ).astype(np.int64)
-                )
+                ids = np.unique(decode_table(
+                    pa.concat_tables(sub), ids_only=True,
+                ).astype(np.int64))
             for value, cnt in self._facet_store.counts(facet, ids):
                 out.append((qid, value, cnt))
         return out
@@ -1411,45 +1398,39 @@ class IndexReader:
         for terms in q_terms.values():
             for t in terms:
                 t["df"] = dfs.get(t["term"], 0.0)
-        tbl, n_scanned = self._blocks(all_terms)
-        pdf = tbl.to_pandas()
+        blocks, n_scanned = self._blocks(all_terms)
         out: list[tuple[str, int, float, int]] = []
         for qid, _qtext in queries:
             qid = str(qid)
             terms = {t["term"] for t in q_terms[qid]} | excl_map.get(qid, set())
-            sub = pdf[pdf["term"].isin(terms)]
-            if not len(sub):
+            sub = {t: g for t, g in blocks.items() if t in terms}
+            if not sub:
                 continue
-            sub = sub.assign(qid=qid)
             st = None
-            span = (int(sub["max_doc_id"].max())
-                    - int(sub["first_doc_id"].min()) + 1)
             if mode == "and":
-                res, st = _score_group_bool(
-                    sub, q_terms, n, avgdl, model, k,
+                ids, scores, st = _score_group_bool(
+                    qid, sub, q_terms, n, avgdl, model, k,
                     excl_terms=excl_map, cache=self.decode_cache,
                     return_all=_all_matches,
                     cand_init=(cand_init or {}).get(qid),
                 )
             elif not (prune and model == "bm25"):
-                res = _score_group(sub, q_terms, n, avgdl, model, k)
-            elif span <= self._DENSE_MAX_DOCS:
+                ids, scores = _score_group(qid, sub, q_terms, n, avgdl, model, k)
+            elif _doc_span(sub)[1] <= self._DENSE_MAX_DOCS:
                 # one group == all doc ranges -> its local top-k IS the
                 # global one
-                res, st = _score_group_dense(
-                    sub, q_terms, n, avgdl, k, cache=self.decode_cache,
+                ids, scores, st = _score_group_dense(
+                    qid, sub, q_terms, n, avgdl, k, cache=self.decode_cache,
                 )
             else:
-                res, st = _score_by_salt(
-                    sub, q_terms, n, avgdl, k,
+                ids, scores, st = _score_by_salt(
+                    qid, sub, q_terms, n, avgdl, k,
                     int(self.field_stats["salt_range"]),
                 )
             if st is not None:
                 stats.clear()
                 stats.update(st)
-            for rank, (doc_id, score) in enumerate(
-                zip(res["doc_id"], res["score"]), start=1
-            ):
+            for rank, (doc_id, score) in enumerate(zip(ids, scores), start=1):
                 out.append((qid, int(doc_id), float(score), rank))
         stats["scan_fallback_buckets"] = n_scanned
         return out

@@ -6,9 +6,12 @@ pair, and appends each run's JSON line (tagged with side, seed and pair) to
 a JSONL file.  Then, per workload and metric of BENCHMARK.json, it prints
 each side's median and quartiles, the share of pairs the change wins (ties
 count for neither), whether the median gap exceeds the parent's IQR, and
-whether the change's median is worse than the parent's by more than the
-metric's bound.  A gain is claimable when the change wins >= 0.9 of the
-pairs and the gap exceeds the parent's IQR.
+a verdict: REGRESSION when the change's median is worse than the parent's
+by more than the metric's bound, unresolved when either side's IQR
+divided by |parent median| exceeds the bound and the change does not read
+better on every run (every change run beats every parent run), else ok.
+A gain is claimable when the change wins >= 0.9 of the pairs and the gap
+exceeds the parent's IQR.
 
     python scripts/perfbench_ab.py --parent ../parent --change . \\
         --workload query --seeds 1 2 3 4 5 6 7 8 9 10 --out ab.jsonl
@@ -62,7 +65,26 @@ def run_pairs(args) -> None:
                   f"correct={res.get('correct')}", flush=True)
 
 
-def summarise(records: list[dict], benchmark: dict) -> None:
+def verdict(par: np.ndarray, chg: np.ndarray, lower: bool,
+            bound: float) -> str:
+    """ok, REGRESSION (median worse by more than bound) or unresolved
+    (run-to-run spread wider than bound and the change not better on every
+    run); spread and gap are relative to |parent median|."""
+    pq1, pmed, pq3 = np.percentile(par, [25, 50, 75])
+    cq1, cmed, cq3 = np.percentile(chg, [25, 50, 75])
+    if not pmed:
+        return "ok"
+    all_better = chg.max() < par.min() if lower else chg.min() > par.max()
+    if max(pq3 - pq1, cq3 - cq1) / abs(pmed) > bound and not all_better:
+        return "unresolved"
+    worse = ((cmed - pmed) if lower else (pmed - cmed)) / abs(pmed)
+    return "REGRESSION" if worse > bound else "ok"
+
+
+def summarise(records: list[dict], benchmark: dict) -> dict:
+    """Print the per-metric table of each workload; returns
+    {(workload, metric): verdict}."""
+    verdicts: dict[tuple[str, str], str] = {}
     by_key: dict[tuple, dict] = {}
     for r in records:
         by_key.setdefault((r["workload"], r["seed"], r["pair"]), {})[r["side"]] = r
@@ -90,12 +112,13 @@ def summarise(records: list[dict], benchmark: dict) -> None:
             cq1, cmed, cq3 = np.percentile(chg, [25, 50, 75])
             gap = (pmed - cmed) if lower else (cmed - pmed)
             worse = -gap / abs(pmed) if pmed else 0.0
-            verdict = "REGRESSION" if worse > m["bound"] else "ok"
+            v = verdicts[(wl, name)] = verdict(par, chg, lower, m["bound"])
             par_cell = f"{pmed:.4g} [{pq1:.4g},{pq3:.4g}]"
             chg_cell = f"{cmed:.4g} [{cq1:.4g},{cq3:.4g}]"
             print(f"{name:<26} {par_cell:>28} {chg_cell:>28} "
                   f"{wins / len(vals):>5.2f} {'yes' if gap > pq3 - pq1 else 'no':>5} "
-                  f"{verdict} ({-worse:+.1%})")
+                  f"{v} ({-worse:+.1%})")
+    return verdicts
 
 
 def main(argv=None) -> int:

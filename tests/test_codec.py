@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 
 from knowledgeir_spark.index.codec import (
     decode_block,
+    decode_table,
     delta_decode,
     delta_encode,
     encode_block,
@@ -54,6 +55,34 @@ def test_block_roundtrip():
     assert d_ids.tolist() == ids.tolist()
     assert d_tfs.tolist() == tfs.tolist()
     assert d_dls.tolist() == dls.tolist()
+
+    # decode_table over many blocks whose payload columns are chunked
+    # arrays of 3 chunks, one of them a slice with a nonzero offset
+    import pyarrow as pa
+
+    rows = [row] + [
+        encode_block(
+            np.sort(rng.choice(10**6, size=n, replace=False)).astype(np.uint64),
+            rng.integers(1, 50, size=n), rng.integers(1, 900, size=n),
+        )
+        for n in (1, 5, 17, 128, 3, 40)
+    ]
+    want = [np.concatenate(a) for a in zip(*map(decode_block, rows))]
+    junk = encode_block(np.array([7, 9]), np.array([3, 4]), np.array([5, 6]))
+    for typ in (pa.binary(), pa.large_binary()):
+        cols = {"n_docs": pa.array([r["n_docs"] for r in rows])}
+        for c in ("doc_id_deltas", "tfs", "doc_lens"):
+            vals = [r[c] for r in rows]
+            cols[c] = pa.chunked_array([
+                pa.array(vals[:2], typ),
+                pa.array([junk[c]] + vals[2:5] + [junk[c]], typ).slice(1, 3),
+                pa.array(vals[5:], typ),
+            ], typ)
+        tbl = pa.table(cols)
+        assert tbl["tfs"].num_chunks == 3 and tbl["tfs"].chunk(1).offset == 1
+        got = decode_table(tbl)
+        assert [g.tolist() for g in got] == [w.tolist() for w in want], typ
+        assert decode_table(tbl, ids_only=True).tolist() == want[0].tolist()
 
 
 def test_truncated_stream_raises():

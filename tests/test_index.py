@@ -81,20 +81,57 @@ def test_field_stats(built, spark):
 @pytest.mark.parametrize("model", ["bm25", "lm", "lm_dir", "tf_idf", "coordinate", "cosine"])
 @pytest.mark.parametrize("prune", [False, True])
 def test_index_search_rank_identical(spark, built, queries_pdf, model, prune):
+    """search() and search_local against the oracle, per model and prune."""
     rd = IndexReader(spark, built["idx_dir"])
     queries = [(r.qid, r.query) for r in queries_pdf.itertuples()]
-    ranked = rd.search(queries, k=20, model=model, prune=prune).collect()
+    dist = [
+        (r["qid"], r["doc_id"], r["score"], r["rank"])
+        for r in rd.search(queries, k=20, model=model, prune=prune).collect()
+    ]
+    local = rd.search_local(queries, k=20, model=model, prune=prune)
+    o = built["oracle"]
+    for path, rows in (("search", dist), ("search_local", local)):
+        got: dict[str, list] = {}
+        for qid, doc_id, score, rank in rows:
+            got.setdefault(qid, []).append((rank, doc_id, score))
+        for qid, qtext in queries:
+            expected = o.topk(qtext, k=20, model=model)
+            have = sorted(got.get(qid, []))
+            assert len(have) == len(expected), f"{path} qid={qid}"
+            for (rank, doc_id, score), (edoc, escore) in zip(have, expected):
+                assert doc_id == edoc, (
+                    f"{path} qid={qid} rank={rank} model={model} prune={prune}"
+                )
+                assert score == pytest.approx(escore, abs=1e-6)
+
+
+def test_search_groups_split_into_record_batches(spark, built, queries_pdf):
+    """With 2-row Arrow record batches every (qid, salt) group reaches the
+    scoring function as a table of many chunks; search() still equals the
+    oracle."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        rd = IndexReader(spark, built["idx_dir"])
+        queries = [(r.qid, r.query) for r in queries_pdf.itertuples()]
+        ranked = rd.search(queries, k=20).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     got: dict[str, list] = {}
     for r in ranked:
         got.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score"]))
     o = built["oracle"]
     for qid, qtext in queries:
-        expected = o.topk(qtext, k=20, model=model)
+        expected = o.topk(qtext, k=20)
         have = sorted(got.get(qid, []))
-        assert len(have) == len(expected), f"qid={qid}"
-        for (rank, doc_id, score), (edoc, escore) in zip(have, expected):
-            assert doc_id == edoc, f"qid={qid} rank={rank} model={model} prune={prune}"
-            assert score == pytest.approx(escore, abs=1e-6)
+        assert [d for _, d, _ in have] == [d for d, _ in expected], qid
+        assert [s for _, _, s in have] == pytest.approx(
+            [s for _, s in expected], abs=1e-6
+        ), qid
 
 
 def test_resume_skips_committed_stages(spark, built):
@@ -150,6 +187,17 @@ def test_bmw_serving_rank_identical(spark, built, queries_pdf):
             assert score == pytest.approx(escore, abs=1e-6)
 
 
+def _term_tables(rows: list[dict]) -> dict:
+    """encode_block rows tagged with a term -> {term: Arrow table of its
+    block rows, in row order}: the kernels' input shape."""
+    import pyarrow as pa
+
+    by_term: dict[str, list[dict]] = {}
+    for r in rows:
+        by_term.setdefault(r["term"], []).append(r)
+    return {t: pa.Table.from_pylist(rs) for t, rs in by_term.items()}
+
+
 def test_bmw_skips_block_decodes():
     """The pruned kernel must decode only a small fraction of a head term's
     blocks once a selective term sets the threshold — and still return
@@ -157,9 +205,8 @@ def test_bmw_skips_block_decodes():
     5e9, so the kernel's doc-id base (not the id itself) indexes its
     accumulators."""
     import numpy as np
-    import pandas as pd
 
-    from knowledgeir_spark.index import query as Q
+    from knowledgeir_spark.index import codec, query as Q
     from knowledgeir_spark.index.codec import encode_block
 
     rows = []
@@ -169,14 +216,14 @@ def test_bmw_skips_block_decodes():
     for bi, s in enumerate(range(0, len(mid_docs), 128)):
         ids = mid_docs[s:s + 128]
         blk = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 20))
-        blk.update(term="mid", qid="1")
+        blk.update(term="mid")
         rows.append(blk)
     # selective term "rare": 10 high-tf short docs (rare-only, no overlap)
     rare_docs = np.arange(1, 20001, 2000, dtype=np.uint64) + shift
     blk = encode_block(rare_docs, np.full(10, 5), np.full(10, 10))
-    blk.update(term="rare", qid="1")
+    blk.update(term="rare")
     rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
 
     q_terms = {"1": [
         {"term": "rare", "term_idx": 0, "q_tf": 1, "df": 10.0},
@@ -185,24 +232,28 @@ def test_bmw_skips_block_decodes():
     n, avgdl, k = 100000.0, 20.0, 5
 
     n_decoded = {"n": 0}
-    orig = Q.decode_blocks_concat
+    orig = codec.decode_blocks_concat
 
     def counting(*a, **kw):
         n_decoded["n"] += len(a[3])  # blocks in this decode call
         return orig(*a, **kw)
 
-    Q.decode_blocks_concat = counting
+    # the kernels decode through codec.decode_table, which calls this name
+    codec.decode_blocks_concat = counting
     try:
-        res, _ = Q._score_group_dense(pdf, q_terms, n, avgdl, k, cache=None)
+        res_ids, res_scores, _ = Q._score_group_dense(
+            "1", blocks, q_terms, n, avgdl, k, cache=None,
+        )
     finally:
-        Q.decode_blocks_concat = orig
+        codec.decode_blocks_concat = orig
     decoded_blocks = n_decoded["n"]
-    assert decoded_blocks < len(pdf) * 0.2, (decoded_blocks, len(pdf))
+    assert decoded_blocks > 0
+    assert decoded_blocks < len(rows) * 0.2, (decoded_blocks, len(rows))
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-    assert list(res["doc_id"]) == list(brute["doc_id"])
-    assert min(res["doc_id"]) >= shift
-    assert np.allclose(res["score"], brute["score"])
+    brute_ids, brute_scores = Q._score_group("1", blocks, q_terms, n, avgdl, "bm25", k)
+    assert list(res_ids) == list(brute_ids)
+    assert min(res_ids) >= shift
+    assert np.allclose(res_scores, brute_scores)
 
 
 def test_dense_scorer_matches_union_scorer():
@@ -212,7 +263,6 @@ def test_dense_scorer_matches_union_scorer():
     where k exceeds the positive-score docs so zero-score candidates fill
     the tail in doc_id order."""
     import numpy as np
-    import pandas as pd
 
     from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.codec import encode_block
@@ -223,25 +273,29 @@ def test_dense_scorer_matches_union_scorer():
     for s in range(0, 700, 128):
         ids = head_docs[s:s + 128]
         blk = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 15))
-        blk.update(term="head", qid="1")
+        blk.update(term="head")
         rows.append(blk)
     # "rare": 7 docs, positive idf
     rare_docs = np.array([5, 100, 333, 334, 500, 650, 800], dtype=np.uint64)
     blk = encode_block(rare_docs, np.array([2, 1, 3, 1, 1, 2, 1]),
                        np.array([10, 20, 15, 15, 30, 10, 25]))
-    blk.update(term="rare", qid="1")
+    blk.update(term="rare")
     rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
     q_terms = {"1": [
         {"term": "head", "term_idx": 0, "q_tf": 1, "df": 700.0},
         {"term": "rare", "term_idx": 1, "q_tf": 1, "df": 7.0},
     ]}
     n, avgdl = 1000.0, 18.0
     for k in (5, 7, 50):  # 50 > positive-score docs -> zero-tie fallback
-        dense, _ = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
-        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-        assert list(dense["doc_id"]) == list(brute["doc_id"]), k
-        assert np.allclose(dense["score"], brute["score"]), k
+        dense_ids, dense_scores, _ = Q._score_group_dense(
+            "1", blocks, q_terms, n, avgdl, k,
+        )
+        brute_ids, brute_scores = Q._score_group(
+            "1", blocks, q_terms, n, avgdl, "bm25", k,
+        )
+        assert list(dense_ids) == list(brute_ids), k
+        assert np.allclose(dense_scores, brute_scores), k
 
 
 def test_dense_scorer_maxscore_skips_blocks():
@@ -250,7 +304,6 @@ def test_dense_scorer_maxscore_skips_blocks():
     the selective term fixes the threshold) — and stay BIT-identical to
     the decode-everything scorer, doc_id ties included."""
     import numpy as np
-    import pandas as pd
 
     from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.codec import encode_block
@@ -261,14 +314,14 @@ def test_dense_scorer_maxscore_skips_blocks():
     for s in range(0, len(mid_docs), 128):
         ids = mid_docs[s:s + 128]
         blk = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 20))
-        blk.update(term="mid", qid="1")
+        blk.update(term="mid")
         rows.append(blk)
     # selective term: 10 docs, high tf, spread across the id space
     rare_docs = np.arange(1, 100001, 10000, dtype=np.uint64)
     blk = encode_block(rare_docs, np.full(10, 5), np.full(10, 10))
-    blk.update(term="rare", qid="1")
+    blk.update(term="rare")
     rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
 
     q_terms = {"1": [
         {"term": "mid", "term_idx": 0, "q_tf": 1, "df": 30000.0},
@@ -276,20 +329,21 @@ def test_dense_scorer_maxscore_skips_blocks():
     ]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+    dense_ids, dense_scores, stats = Q._score_group_dense(
+        "1", blocks, q_terms, n, avgdl, k,
+    )
     assert stats["n_essential"] == 1, stats
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.2, stats
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-    assert list(dense["doc_id"]) == list(brute["doc_id"])
-    assert list(dense["score"]) == list(brute["score"])  # bit-identical
+    brute_ids, brute_scores = Q._score_group("1", blocks, q_terms, n, avgdl, "bm25", k)
+    assert list(dense_ids) == list(brute_ids)
+    assert list(dense_scores) == list(brute_scores)  # bit-identical
 
 
 def test_dense_scorer_maxscore_no_skip_when_unsafe():
     """When every term has a comparable bound (no selective anchor), the
     MaxScore loop must decode everything — identical output, zero skips."""
     import numpy as np
-    import pandas as pd
 
     from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.codec import encode_block
@@ -300,20 +354,22 @@ def test_dense_scorer_maxscore_no_skip_when_unsafe():
         for s in range(0, len(docs), 128):
             ids = docs[s:s + 128]
             blk = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 12))
-            blk.update(term=t, qid="1")
+            blk.update(term=t)
             rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
     q_terms = {"1": [
         {"term": "alpha", "term_idx": 0, "q_tf": 1, "df": 1000.0},
         {"term": "beta", "term_idx": 1, "q_tf": 1, "df": 1000.0},
         {"term": "gamma", "term_idx": 2, "q_tf": 1, "df": 1000.0},
     ]}
     n, avgdl, k = 10000.0, 12.0, 10
-    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+    dense_ids, dense_scores, stats = Q._score_group_dense(
+        "1", blocks, q_terms, n, avgdl, k,
+    )
     assert stats["blocks_decoded"] == stats["blocks_total"], stats
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-    assert list(dense["doc_id"]) == list(brute["doc_id"])
-    assert list(dense["score"]) == list(brute["score"])
+    brute_ids, brute_scores = Q._score_group("1", blocks, q_terms, n, avgdl, "bm25", k)
+    assert list(dense_ids) == list(brute_ids)
+    assert list(dense_scores) == list(brute_scores)
 
 
 def test_dense_scorer_single_term_block_cut():
@@ -322,7 +378,6 @@ def test_dense_scorer_single_term_block_cut():
     block bound quantizes below the k-th best — identical output to the
     decode-everything scorer."""
     import numpy as np
-    import pandas as pd
 
     from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.codec import encode_block
@@ -337,18 +392,20 @@ def test_dense_scorer_single_term_block_cut():
             tfs[:8] = 8
             dls[:8] = 10
         blk = encode_block(ids, tfs, dls)
-        blk.update(term="solo", qid="1")
+        blk.update(term="solo")
         rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
     q_terms = {"1": [{"term": "solo", "term_idx": 0, "q_tf": 1, "df": 20000.0}]}
     n, avgdl, k = 100000.0, 20.0, 5
 
-    dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+    dense_ids, dense_scores, stats = Q._score_group_dense(
+        "1", blocks, q_terms, n, avgdl, k,
+    )
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.5, stats
 
-    brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-    assert list(dense["doc_id"]) == list(brute["doc_id"])
-    assert list(dense["score"]) == list(brute["score"])
+    brute_ids, brute_scores = Q._score_group("1", blocks, q_terms, n, avgdl, "bm25", k)
+    assert list(dense_ids) == list(brute_ids)
+    assert list(dense_scores) == list(brute_scores)
 
 
 def test_serving_decode_cache_identical_results(spark, built, queries_pdf):
@@ -553,7 +610,6 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
     blocks at smaller k — while staying bit-identical to the
     decode-everything scorer."""
     import numpy as np
-    import pandas as pd
 
     from knowledgeir_spark.index import query as Q
     from knowledgeir_spark.index.codec import encode_block
@@ -562,7 +618,7 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
     # selective anchor: 10 docs, strongly spread tfs, spread across id space
     a_docs = np.arange(1, 100001, 10000, dtype=np.uint64)
     blk = encode_block(a_docs, np.arange(5, 15), np.full(10, 20))
-    blk.update(term="anchor", qid="1")
+    blk.update(term="anchor")
     rows.append(blk)
     # two mid terms covering only the low half of the id space
     for t, start in (("mid1", 0), ("mid2", 1)):
@@ -570,9 +626,9 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
         for s in range(0, len(docs), 128):
             ids = docs[s:s + 128]
             b = encode_block(ids, np.ones(len(ids)), np.full(len(ids), 20))
-            b.update(term=t, qid="1")
+            b.update(term=t)
             rows.append(b)
-    pdf = pd.DataFrame(rows)
+    blocks = _term_tables(rows)
     q_terms = {"1": [
         {"term": "anchor", "term_idx": 0, "q_tf": 1, "df": 10.0},
         {"term": "mid1", "term_idx": 1, "q_tf": 1, "df": 30000.0},
@@ -582,11 +638,15 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
 
     decoded = {}
     for k in (3, 10):
-        dense, stats = Q._score_group_dense(pdf, q_terms, n, avgdl, k)
+        dense_ids, dense_scores, stats = Q._score_group_dense(
+            "1", blocks, q_terms, n, avgdl, k,
+        )
         decoded[k] = stats["blocks_decoded"]
-        brute = Q._score_group(pdf, q_terms, n, avgdl, "bm25", k)
-        assert list(dense["doc_id"]) == list(brute["doc_id"]), k
-        assert list(dense["score"]) == list(brute["score"]), k
+        brute_ids, brute_scores = Q._score_group(
+            "1", blocks, q_terms, n, avgdl, "bm25", k,
+        )
+        assert list(dense_ids) == list(brute_ids), k
+        assert list(dense_scores) == list(brute_scores), k
     total = stats["blocks_total"]
     # k=3 keeps only the top-tf anchor docs (all in the mid-free id half):
     # the fill-in decodes nothing beyond the anchor block
