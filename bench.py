@@ -510,29 +510,24 @@ def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
 
 def suggest_probe_once(cpus: int) -> dict:
     """Subprocess entry: spell/autocomplete dictionary at web vocabulary
-    scale (verdict item 7).  The suggest dictionary consumes term_stats
+    scale (verdict item 7).  The suggest dictionary consumes (term, df)
     only, so VOCABULARY size is the scale axis: build the delete-key index
-    over synthetic Zipf (term, df) vocabularies of 100k / 1M / 2M terms
-    (2M = the df-cache ceiling, IndexReader._TERM_STATS_CACHE_MAX), measure
-    build wall + per-probe latency, then measure the DISTRIBUTED fallback
-    (operators/spell.spell_correct over a term_stats table) on the same
-    probe set — the measured crossover the serving code claims."""
+    over synthetic Zipf (term, df) vocabularies of 100k / 1M / 2M terms,
+    measure build wall + per-probe latency, then measure the distributed
+    operator (operators/spell.spell_correct over a 2M-term table) on the
+    same probe set, for comparison with the driver-side dictionary."""
     import statistics
 
     from pyspark.sql import functions as F
 
     from knowledgeir_spark.index.query import (
-        IndexReader,
         _build_spell_index,
         _suggest_from_dict,
     )
     from knowledgeir_spark.operators.spell import spell_correct
     from knowledgeir_spark.session import get_spark
 
-    out: dict = {
-        "df_cache_ceiling_terms": IndexReader._TERM_STATS_CACHE_MAX,
-        "local": {},
-    }
+    out: dict = {"local": {}}
     n_probe = 200
 
     def mk_term(i: int) -> str:
@@ -558,7 +553,7 @@ def suggest_probe_once(cpus: int) -> dict:
             "probe_p95_us": round(sorted(lat)[int(n_probe * 0.95) - 1] * 1e6, 1),
         }
         del dfc, idx
-    # distributed fallback: the path suggest() takes above the ceiling
+    # the distributed operator on the same probes
     spark = get_spark(cpus=cpus, app_name="kir-suggest-probe")
     n_dist = 2_000_000
     vocab = spark.range(n_dist).select(

@@ -84,11 +84,10 @@ _LAYOUT_FIELDS = (
     "tokenizer", "block_size", "salt_range", "block_order", "n_buckets",
 )
 
-# a term_stats table of at most this many rows is handled on the
-# coordinator: IndexReader collects it into a driver-side df dict (a few
-# MB), and compact(mode="append") merges delta stats into it with pyarrow.
-# Larger vocabularies stay in Spark (a filtered scan per search, a Spark
-# union/groupBy per fold).
+# compact(mode="append") merges delta stats into a term_stats table of at
+# most this many rows on the coordinator with pyarrow; a larger vocabulary
+# folds through a Spark union/groupBy.  (IndexReader does not read
+# term_stats: its df comes from the posting blocks' term directory.)
 TERM_STATS_CACHE_MAX = 2_000_000
 
 

@@ -38,9 +38,9 @@ from __future__ import annotations
 import functools
 import math
 import os
-import sys
 import threading
 import time
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -51,8 +51,7 @@ from pyspark.sql import functions as F
 
 from ..operators.topk import topk_per_query
 from .build import (
-    TERM_STATS_CACHE_MAX, check_codec, live_files, read_field_stats, read_live,
-    term_bucket_py,
+    check_codec, live_files, read_field_stats, read_live, term_bucket_py,
 )
 from .codec import decode_table
 from . import scoring_np as S
@@ -76,17 +75,17 @@ def _no_hits() -> tuple[np.ndarray, np.ndarray]:
     return np.empty(0, np.int64), np.empty(0, np.float64)
 
 
-def _term_runs(tbl: pa.Table) -> tuple[pa.Table, np.ndarray, np.ndarray]:
+def _term_runs(tbl: pa.Table) -> tuple[pa.Table, pa.StringArray, np.ndarray]:
     """tbl stably sorted by term (each term's rows keep their order), its
-    unique terms in order, and int32 row offsets with a final end."""
+    unique terms in order as an Arrow array, and int32 row offsets with a
+    final end."""
     tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")])).combine_chunks()
     col = tbl["term"].chunk(0) if tbl.num_rows else pa.array([], pa.string())
     starts = np.flatnonzero(np.concatenate([
         [tbl.num_rows > 0],
         pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False),
     ]))
-    terms = col.take(starts).to_numpy(zero_copy_only=False)
-    return tbl, terms, np.append(starts, tbl.num_rows).astype(np.int32)
+    return tbl, col.take(starts), np.append(starts, tbl.num_rows).astype(np.int32)
 
 
 def _split_by_term(tbl: pa.Table) -> dict[str, pa.Table]:
@@ -94,8 +93,44 @@ def _split_by_term(tbl: pa.Table) -> dict[str, pa.Table]:
     tbl, terms, offs = _term_runs(tbl)
     return {
         t: tbl.slice(a, b - a)
-        for t, a, b in zip(terms.tolist(), offs[:-1].tolist(), offs[1:].tolist())
+        for t, a, b in zip(terms.to_pylist(), offs[:-1].tolist(), offs[1:].tolist())
     }
+
+
+def _find(terms: pa.StringArray, keys: list[str]) -> list[int]:
+    """Positions of `keys` in the sorted unique Arrow string array `terms`
+    (-1 where absent): a binary search over its offsets and data buffers,
+    so no Python string is made per entry.  UTF-8 byte order is code-point
+    order, the order Python's sorted() and Arrow's sort use."""
+    _, obuf, dbuf = terms.buffers()
+    offs = memoryview(obuf).cast("i")[terms.offset:]
+    data = memoryview(dbuf)
+    out = []
+    for key in keys:
+        k = key.encode()
+        lo, hi = 0, len(terms)
+        while lo < hi:
+            mid = (lo + hi) // 2
+            if data[offs[mid]:offs[mid + 1]].tobytes() < k:
+                lo = mid + 1
+            else:
+                hi = mid
+        hit = lo < len(terms) and data[offs[lo]:offs[lo + 1]].tobytes() == k
+        out.append(lo if hit else -1)
+    return out
+
+
+class _TermDir(NamedTuple):
+    """One bucket's resident term directory: its sorted unique terms, int32
+    row offsets with a final end, each term's df (the sum of n_docs over
+    its block rows), and the block rows sorted by term, or None for a
+    bucket over IndexReader._RESIDENT_MAX_BYTES (scanned per call)."""
+
+    terms: pa.StringArray
+    rows: np.ndarray
+    df: np.ndarray
+    tbl: pa.Table | None
+    nbytes: int
 
 
 def _doc_span(blocks: dict[str, pa.Table]) -> tuple[int, int]:
@@ -747,39 +782,36 @@ def _lev_le1(a: str, b: str) -> int | None:
 class IndexReader:
     """Reads a committed index (build.build_index layout), pinned to the
     generation field_stats.json commits when the reader opens: every scan
-    touches only that generation's files, and its term_stats is read at
-    open.  Maintenance deletes a file only at the second commit that does
-    not list it, so a reader survives at least one later commit, and any
-    number of append folds (which drop no postings file).  Open a new
-    reader to see later commits.
+    touches only that generation's postings files; the reader reads no
+    term_stats file.  Maintenance deletes a file only at the second commit
+    that does not list it, so a reader survives at least one later commit,
+    and any number of append folds (which drop no postings file).  Open a
+    new reader to see later commits.
 
-    Serving (search_local, prewarm, facet_counts_local) reads posting
-    blocks from a resident term directory: the first call that touches
-    bucket b reads b's live files once into an Arrow table sorted by term,
-    plus a sorted unique-term array with int32 row offsets; later calls
-    look terms up with np.searchsorted and take zero-copy slices, so a
+    Every term lookup (term_stats_for, search_local, prewarm, suggest,
+    facet_counts_local) goes through one resident term directory per
+    bucket: the first call that touches bucket b reads b's live files once
+    and keeps its sorted unique terms as an Arrow string array, int32 row
+    offsets and int64 df (the sum of n_docs over each term's block rows),
+    with the block rows as an Arrow table sorted by term.  Later calls
+    binary-search the term array's buffers and take zero-copy slices, so a
     query runs no parquet scan.  A bucket whose live files exceed
-    _RESIDENT_MAX_BYTES is never loaded and is read with a filtered scan
-    on every call instead; both branches give the same rows in the same
-    order.
+    _RESIDENT_MAX_BYTES keeps only its directory (read from its term and
+    n_docs columns); its block rows are read with a filtered scan on every
+    call instead, and both branches give the same rows in the same order.
 
-    Thread safety: search_local, prewarm, facet_counts_local and
-    term_stats_for may run concurrently on one reader.  Bucket loads and
-    the df dict are built under the reader's lock (each bucket is loaded
-    exactly once), and the decode cache locks its own state.
-    last_query_stats() then reports whichever search_local call started
-    last."""
+    Thread safety: search_local, prewarm, facet_counts_local, suggest and
+    term_stats_for may run concurrently on one reader.  Buckets load under
+    the reader's lock (each bucket exactly once), and the decode cache
+    locks its own state.  last_query_stats() then reports whichever
+    search_local call started last."""
 
-    # term_stats tables up to this row count are read once into a
-    # driver-side dict (a few MB); larger vocabularies fall back to a
-    # filtered Spark scan per search.  Per-instance override hook.
-    _TERM_STATS_CACHE_MAX = TERM_STATS_CACHE_MAX
-    # a bucket whose live postings files hold more bytes than this is not
-    # loaded into the resident term directory: each serving call scans
-    # it with a bucket and term filter instead.  Resident memory is
-    # 1.4-1.9x the files' bytes plus ~68 bytes per distinct term (measured
-    # at 100k and 3k docs), so the ceiling bounds one bucket at ~120 MB
-    # plus its directory.  Per-instance override hook.
+    # a bucket whose live postings files hold more bytes than this keeps
+    # only its term directory: each serving call scans its block rows with
+    # a bucket and term filter instead.  A loaded bucket holds 1.4-1.9x its
+    # files' bytes (measured at 100k and 3k docs) plus ~23 bytes per
+    # distinct term for its directory, so the ceiling bounds one bucket at
+    # ~120 MB plus its directory.  Per-instance override hook.
     _RESIDENT_MAX_BYTES = 64 << 20
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -792,22 +824,9 @@ class IndexReader:
         # the doc tokenizer the index was built with (phrase verification
         # must tokenize identically); older indexes predate the key
         self.tokenizer = self.field_stats.get("tokenizer", "spec")
-        # the Spark scan DataFrames (_postings, _term_stats) are built on
-        # first use: opening a reader and serving search_local run no Spark
-        # job; only search() and the oversized-vocabulary fallbacks need them
-        self._df_cache: dict[str, float] | None = None
-        self._df_cache_checked = False
-        # the generation's term_stats, read with pyarrow (no Spark job) so
-        # the reader keeps it after a commit deletes its file; an
-        # oversized vocabulary stays on disk for the Spark fallbacks
-        dset = ds.dataset(
-            live_files(index_dir, "term_stats", self.field_stats),
-            format="parquet",
-        )
-        self._term_stats_table = (
-            dset.to_table(columns=["term", "df"])
-            if dset.count_rows() <= self._TERM_STATS_CACHE_MAX else None
-        )
+        # the Spark scan DataFrame (_postings) is built on first use:
+        # opening a reader and serving search_local run no Spark job; only
+        # search() needs it
         # serving hot-term cache (decoded postings; one index snapshot per
         # reader, so no invalidation concern).  Budget scales with the
         # corpus: a fixed 10M-posting cap starves large indexes (at 2M docs
@@ -819,20 +838,19 @@ class IndexReader:
             max_postings=max(10_000_000,
                              12 * int(self.field_stats.get("n_docs", 0)))
         )
-        # lazy delete-key index for suggest(); built once per reader
-        self._spell_index: dict[str, list[str]] | None = None
+        # lazy (vocabulary {term: df}, its delete-key index) for suggest();
+        # built once per reader
+        self._spell: tuple[dict, dict] | None = None
         # lazy facet sidecar reader (facet_counts_local)
         self._facet_store = None
         # lazy nextword (head-head bigram) store reader, None if absent
         self._nextword = False  # False = not yet probed
         # the last search_local call's skip counters (last_query_stats)
         self._last_stats: dict = {}
-        # resident term directory: bucket -> (block table sorted by term,
-        # sorted unique terms, int32 row offsets, bytes held), or None for
-        # a bucket over _RESIDENT_MAX_BYTES (scanned per call)
-        self._resident: dict[int, tuple | None] = {}
+        # resident term directory: bucket -> its _TermDir
+        self._resident: dict[int, _TermDir] = {}
         self._bucket_loads = 0
-        # guards the lazy one-time loads (buckets, df dict)
+        # guards the lazy one-time bucket loads
         self._lock = threading.Lock()
 
     def _nextword_store(self):
@@ -849,11 +867,6 @@ class IndexReader:
     def _postings(self) -> DataFrame:
         return read_live(self.spark, self.index_dir, "postings", self.field_stats)
 
-    @functools.cached_property
-    def _term_stats(self) -> DataFrame:
-        return read_live(self.spark, self.index_dir, "term_stats",
-                         self.field_stats)
-
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
         buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
         return (
@@ -863,24 +876,13 @@ class IndexReader:
         )
 
     def term_stats_for(self, terms: list[str]) -> dict[str, float]:
-        if not self._df_cache_checked:
-            # build the dict once per reader from the table read at open;
-            # the flag is set after the dict, so a concurrent caller waits
-            # for it instead of taking the Spark fallback
-            with self._lock:
-                if not self._df_cache_checked:
-                    tbl, self._term_stats_table = self._term_stats_table, None
-                    if (tbl is not None
-                            and tbl.num_rows <= self._TERM_STATS_CACHE_MAX):
-                        self._df_cache = dict(zip(
-                            tbl["term"].to_pylist(),
-                            tbl["df"].to_numpy().astype(np.float64).tolist(),
-                        ))
-                    self._df_cache_checked = True
-        if self._df_cache is not None:
-            return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-        rows = self._term_stats.filter(F.col("term").isin(list(terms))).collect()
-        return {r["term"]: float(r["df"]) for r in rows}
+        """{term: df} for the `terms` the index holds, from the term
+        directory (loads each touched bucket)."""
+        return {
+            t: float(d.df[i])
+            for _, d, ts, pos in self._lookup(terms)
+            for t, i in zip(ts, pos) if i >= 0
+        }
 
     # scoring-exchange sizing: the Python scorer pays a fixed per-task cost
     # (worker round-trip + Arrow serde), so the partition count follows the
@@ -1059,8 +1061,8 @@ class IndexReader:
         model: str = "bm25", prune: bool = True,
     ):
         """Route point queries to the serving path when the |q|-term slice is
-        coordinator-sized (sum of df from term_stats), else run distributed.
-        Returns a DataFrame either way."""
+        coordinator-sized (sum of df from the term directory), else run
+        distributed.  Returns a DataFrame either way."""
         q_terms, all_terms = _query_term_dicts(queries)
         dfs = self.term_stats_for(sorted(all_terms))
         slice_postings = sum(dfs.values())
@@ -1089,27 +1091,30 @@ class IndexReader:
             out[b] = out.get(b, 0) + os.path.getsize(p)
         return out
 
-    def _scan_bucket(self, b: int, terms: list[str] | None) -> pa.Table:
+    def _scan_bucket(self, b: int, terms: list[str] | None,
+                     columns: list[str] = _BLOCK_COLUMNS) -> pa.Table:
         """Bucket b's block rows (of `terms`, or all), in the live files'
         order."""
         filt = ds.field("bucket") == b
         if terms is not None:
             filt = filt & ds.field("term").isin(terms)
-        return self._local_dataset.to_table(filter=filt, columns=_BLOCK_COLUMNS)
+        return self._local_dataset.to_table(filter=filt, columns=columns)
 
-    def _load_bucket(self, b: int) -> tuple | None:
-        """Bucket b's resident entry: (block table sorted by term, sorted
-        unique terms, int32 row offsets with a final end, bytes held), or
-        None when its files exceed _RESIDENT_MAX_BYTES."""
-        if self._bucket_bytes.get(b, 0) > self._RESIDENT_MAX_BYTES:
-            return None
-        tbl, terms, offs = _term_runs(self._scan_bucket(b, None))
-        held = (tbl.nbytes + terms.nbytes + offs.nbytes
-                + sum(map(sys.getsizeof, terms)))
-        return tbl, terms, offs, held
+    def _load_bucket(self, b: int) -> _TermDir:
+        """Bucket b's term directory, with its block rows when its live
+        files hold at most _RESIDENT_MAX_BYTES (a larger bucket is read
+        for its term and n_docs columns only)."""
+        resident = self._bucket_bytes.get(b, 0) <= self._RESIDENT_MAX_BYTES
+        tbl, terms, rows = _term_runs(self._scan_bucket(
+            b, None, _BLOCK_COLUMNS if resident else ["term", "n_docs"]))
+        df = np.add.reduceat(_col(tbl, "n_docs"), rows[:-1])
+        held = terms.nbytes + rows.nbytes + df.nbytes
+        if not resident:
+            return _TermDir(terms, rows, df, None, held)
+        return _TermDir(terms, rows, df, tbl, held + tbl.nbytes)
 
-    def _bucket(self, b: int) -> tuple | None:
-        """Bucket b's resident entry, loaded by the first call to touch b
+    def _bucket(self, b: int) -> _TermDir:
+        """Bucket b's term directory, loaded by the first call to touch b
         (under the reader's lock: once per bucket, however many threads
         race to it)."""
         try:
@@ -1118,82 +1123,83 @@ class IndexReader:
             pass
         with self._lock:
             if b not in self._resident:
-                entry = self._load_bucket(b)
-                self._bucket_loads += entry is not None
-                self._resident[b] = entry
+                self._resident[b] = self._load_bucket(b)
+                self._bucket_loads += 1
             return self._resident[b]
 
-    def _blocks(self, terms) -> tuple[dict[str, pa.Table], int]:
-        """The one block source of the serving path: ({term: its posting-
-        block rows} for the `terms` that have blocks, the number of
-        buckets read by the scan fallback).  Terms come in (bucket, term)
-        order, each term's rows in the live files' order, whether the
-        bucket is resident (zero-copy slices of its table) or over the
-        ceiling (a filtered scan)."""
+    def _lookup(self, terms) -> list[tuple[int, _TermDir, list[str], list[int]]]:
+        """The reader's one term lookup: per touched bucket, in bucket
+        order, (bucket, its directory, its `terms` sorted, their directory
+        positions with -1 for absent terms)."""
         by_bucket: dict[int, list[str]] = {}
         for t in sorted(set(terms)):
             by_bucket.setdefault(term_bucket_py(t, self.n_buckets), []).append(t)
-        out: dict[str, pa.Table] = {}
+        out = []
+        for b, ts in sorted(by_bucket.items()):
+            d = self._bucket(b)
+            out.append((b, d, ts, _find(d.terms, ts)))
+        return out
+
+    def _blocks(self, terms) -> tuple[dict[str, pa.Table], dict[str, float], int]:
+        """The one block source of the serving path: ({term: its posting-
+        block rows} and {term: df} for the `terms` the index holds, the
+        number of buckets read by the scan fallback).  Terms come in
+        (bucket, term) order, each term's rows in the live files' order,
+        whether the bucket is resident (zero-copy slices of its table) or
+        over the ceiling (a filtered scan)."""
+        blocks: dict[str, pa.Table] = {}
+        dfs: dict[str, float] = {}
         n_scanned = 0
-        for b in sorted(by_bucket):
-            ts = by_bucket[b]
-            entry = self._bucket(b)
-            if entry is None:
+        for b, d, ts, pos in self._lookup(terms):
+            if d.tbl is None:
                 n_scanned += 1
-                out.update(_split_by_term(self._scan_bucket(b, ts)))
-                continue
-            tbl, dir_terms, offs, _ = entry
-            pos = np.searchsorted(dir_terms, ts)
-            for t, i in zip(ts, pos.tolist()):
-                if i < len(dir_terms) and dir_terms[i] == t:
-                    start, stop = int(offs[i]), int(offs[i + 1])
-                    out[t] = tbl.slice(start, stop - start)
-        return out, n_scanned
+                blocks.update(_split_by_term(self._scan_bucket(b, ts)))
+            for t, i in zip(ts, pos):
+                if i < 0:
+                    continue
+                dfs[t] = float(d.df[i])
+                if d.tbl is not None:
+                    start, stop = int(d.rows[i]), int(d.rows[i + 1])
+                    blocks[t] = d.tbl.slice(start, stop - start)
+        return blocks, dfs, n_scanned
 
     def prewarm(self, n_terms: int = 256) -> dict:
-        """Serving cold-start prewarm: populate the driver-side term_stats
-        dict, and pre-decode the highest-df POSITIVE-idf terms into the
+        """Serving cold-start prewarm: load every bucket's term directory,
+        and pre-decode the highest-df POSITIVE-idf terms into the
         DecodedTermCache (zero-idf Zipf-head terms contribute 0 to every
         score and are decoded lazily by the scorer only in the rare
         under-k case, so caching them would spend the postings budget on
         dead weight).  Fill stops at the cache's postings budget — prewarm
         never evicts what it just decoded.
         Returns {terms_warmed, postings_cached, sec} for observability.
-        The head terms' blocks come from the resident term directory, so
-        prewarm also loads every bucket they touch — amortizing exactly
-        the first-touch latency a cold coordinator otherwise pays on its
-        first head-term queries."""
+        Loading the buckets amortizes exactly the first-touch latency a
+        cold coordinator otherwise pays on its first queries."""
         t0 = time.time()
         n = float(self.field_stats["n_docs"])
-        self.term_stats_for([])  # populate / size-check the df dict once
-        if self._df_cache is not None:
-            items = self._df_cache.items()
-        else:  # oversized vocab: fetch just the df head via Spark
-            items = [
-                (r["term"], float(r["df"]))
-                for r in self._term_stats.orderBy(F.col("df").desc())
-                .limit(4 * n_terms).collect()
-            ]
-        pos = [
-            (t, df) for t, df in items
-            if max((n - df + 0.5) / (df + 0.5), 1.0) > 1.0
-        ]
-        pos.sort(key=lambda kv: (-kv[1], kv[0]))
+        dirs = [self._bucket(b) for b in range(self.n_buckets)]
+        df = np.concatenate([d.df for d in dirs]).astype(np.float64)
+        head = pa.table({
+            "df": df, "term": pa.concat_arrays([d.terms for d in dirs]),
+        }).filter((n - df + 0.5) / (df + 0.5) > 1.0)  # positive idf
+        # (-df, term) order; a term lives in one bucket, so the key is total
+        head = head.take(pc.sort_indices(
+            head, [("df", "descending"), ("term", "ascending")])[:4 * n_terms])
         budget = self.decode_cache.max_postings
-        picked: list[str] = []
+        picked: list[int] = []
         total = 0
-        for t, df in pos[: 4 * n_terms]:
+        for i, t_df in enumerate(head["df"].to_numpy().astype(np.int64).tolist()):
             if len(picked) >= n_terms:
                 break
-            if total + int(df) > budget:
+            if total + t_df > budget:
                 continue
-            picked.append(t)
-            total += int(df)
+            picked.append(i)
+            total += t_df
         if not picked:
             return {"terms_warmed": 0, "postings_cached": 0,
                     "sec": round(time.time() - t0, 3)}
         warmed = cached = 0
-        for term, g in self._blocks(picked)[0].items():
+        terms = head["term"].take(picked).to_pylist()
+        for term, g in self._blocks(terms)[0].items():
             if self.decode_cache.get(term) is not None:
                 continue
             ids, tfs, dls = decode_table(g)
@@ -1282,12 +1288,13 @@ class IndexReader:
         search() path does not report them: its scoring runs on executors.
 
         The resident term directory reports on the reader as a whole:
-        resident_buckets (buckets loaded), resident_bytes (their Arrow
-        tables plus directories), bucket_loads (loads so far: each bucket
+        resident_buckets (buckets whose block rows are loaded),
+        resident_bytes (those Arrow tables plus every loaded bucket's
+        directory), bucket_loads (directories loaded so far: each bucket
         loads at most once per reader); scan_fallback_buckets is the
         number of buckets the last search_local call read with the scan
         fallback (over _RESIDENT_MAX_BYTES)."""
-        resident = [e for e in list(self._resident.values()) if e is not None]
+        dirs = list(self._resident.values())
         return {
             **self._last_stats,
             "cache_hits": self.decode_cache.hits,
@@ -1295,8 +1302,8 @@ class IndexReader:
             "cache_postings": self.decode_cache._total,
             "cache_budget": self.decode_cache.max_postings,
             "cache_terms": len(self.decode_cache._d),
-            "resident_buckets": len(resident),
-            "resident_bytes": sum(e[3] for e in resident),
+            "resident_buckets": sum(d.tbl is not None for d in dirs),
+            "resident_bytes": sum(d.nbytes for d in dirs),
             "bucket_loads": self._bucket_loads,
         }
 
@@ -1308,31 +1315,24 @@ class IndexReader:
         candidates via symmetric deletes, ranked (ed asc, df desc, term
         asc); in-vocab inputs return themselves at ed 0).
 
-        When the vocabulary fits the driver-side df cache (the common
-        serving case), the delete-key index is built once per reader and
-        lookups are dictionary probes — microseconds per query term.
-        Oversized vocabularies fall back to the distributed operator over
-        the term_stats table.
+        The first call builds the {term: df} vocabulary from every
+        bucket's term directory, then its delete-key index, once per
+        reader; lookups are then dictionary probes — microseconds per
+        query term.
         """
-        self.term_stats_for([])  # run the cache size-check once
-        if self._df_cache is None:
-            from ..operators.spell import spell_correct
+        if self._spell is None:
+            vocab = self._vocab()
+            self._spell = vocab, _build_spell_index(vocab)
+        return _suggest_from_dict(terms, *self._spell, min_len)
 
-            inp = self.spark.createDataFrame(
-                [(t,) for t in terms], "input string"
-            )
-            rows = spell_correct(
-                inp, self._term_stats.select("term", "df"), min_len=min_len
-            ).collect()
-            return {
-                r["input"]: (r["suggestion"], r["ed"], float(r["sugg_df"]))
-                for r in rows
-            }
-        if self._spell_index is None:
-            self._spell_index = _build_spell_index(self._df_cache)
-        return _suggest_from_dict(
-            terms, self._df_cache, self._spell_index, min_len
-        )
+    def _vocab(self) -> dict[str, float]:
+        """{term: df} over the whole index, from every bucket's term
+        directory (loads them all)."""
+        vocab: dict[str, float] = {}
+        for b in range(self.n_buckets):
+            d = self._bucket(b)
+            vocab.update(zip(d.terms.to_pylist(), d.df.astype(np.float64).tolist()))
+        return vocab
 
     def search_local(
         self,
@@ -1387,18 +1387,18 @@ class IndexReader:
             # stopword-only phrase) — an empty isin() set would reach
             # pyarrow as a null-typed array and raise ArrowTypeError
             return []
+        # one directory probe per term gives its block rows and its df
+        blocks, dfs, n_scanned = self._blocks(all_terms)
         if stats_override is not None:
             # sharded serving: score THIS shard's postings with the global
             # corpus statistics so per-shard top-k merge exactly
             n, avgdl, dfs = stats_override
         else:
-            dfs = self.term_stats_for(sorted(all_terms))
             n = float(self.field_stats["n_docs"])
             avgdl = float(self.field_stats["avg_doc_len"])
         for terms in q_terms.values():
             for t in terms:
                 t["df"] = dfs.get(t["term"], 0.0)
-        blocks, n_scanned = self._blocks(all_terms)
         out: list[tuple[str, int, float, int]] = []
         for qid, _qtext in queries:
             qid = str(qid)
@@ -1613,18 +1613,11 @@ class ShardedReader:
     ) -> dict[str, tuple[str, int, float]]:
         """Spell suggestions over the UNION vocabulary with global df
         (a term's prior sums across shards) — same spec as
-        IndexReader.suggest.  Requires every shard's vocabulary to fit its
-        driver-side cache (the serving case); oversized shards raise."""
+        IndexReader.suggest."""
         if self._global_df is None:
             merged: dict[str, float] = {}
             for r in self.readers:
-                r.term_stats_for([])
-                if r._df_cache is None:
-                    raise ValueError(
-                        "shard vocabulary exceeds the driver cache; use the "
-                        "distributed operators/spell path instead"
-                    )
-                for t, df in r._df_cache.items():
+                for t, df in r._vocab().items():
                     merged[t] = merged.get(t, 0.0) + df
             self._global_df = merged
             self._global_spell_index = _build_spell_index(merged)

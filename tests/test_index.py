@@ -10,6 +10,9 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 
 from knowledgeir_spark.index.build import (
@@ -18,6 +21,7 @@ from knowledgeir_spark.index.build import (
 from knowledgeir_spark.index.codec import decode_block
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
+from knowledgeir_spark.oracle.tokenizer import tokenize_query
 
 CFG = IndexConfig(block_size=16, salt_range=64, n_buckets=8, build_partitions=8)
 
@@ -26,6 +30,8 @@ CFG = IndexConfig(block_size=16, salt_range=64, n_buckets=8, build_partitions=8)
 def built(spark, webpages_pdf, tmp_path_factory):
     idx_dir = str(tmp_path_factory.mktemp("index"))
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    # one indexed term holding '/', which the doc tokenizer keeps
+    pdf.loc[7, "text"] += " tcp/ip"
     docs = spark.createDataFrame(pdf[["doc_id", "text"]])
     results = build_index(spark, docs, idx_dir, CFG, input_token="webpages300")
     oracle = OracleIndex(list(zip(pdf["doc_id"], pdf["text"])))
@@ -449,9 +455,9 @@ def test_prewarm_cache_and_identical_results(spark, built, queries_pdf):
 
 
 def test_reader_opens_and_serves_without_spark_job(spark, built, queries_pdf):
-    """Opening a reader, sizing and loading its df dict, prewarm and a
-    search_local run no Spark job (the scan DataFrames are lazy).  The df
-    dict equals term_stats collected through Spark, and search() — the
+    """Opening a reader, term_stats_for over the whole vocabulary, prewarm
+    and a search_local run no Spark job (the scan DataFrame is lazy).  The
+    dfs equal term_stats collected through Spark, and search() — the
     first user of the lazy postings DataFrame — still ranks identically
     to the oracle."""
     sc = spark.sparkContext
@@ -540,6 +546,14 @@ def test_impact_layout_rank_identical_and_discriminative(
 
 def _edge_queries(oracle) -> list[tuple[str, str]]:
     vocab = sorted(oracle.postings)
+    by_bucket: dict[int, list[str]] = {}
+    for t in vocab:
+        by_bucket.setdefault(term_bucket_py(t, CFG.n_buckets), []).append(t)
+    # each bucket directory's first and last entry
+    ends = [(f"b{b}_{end}", ts[i]) for b, ts in sorted(by_bucket.items())
+            for end, i in (("first", 0), ("last", -1))]
+    stem = next(t for t in vocab if len(t) > 2 and t[:-1] not in oracle.df
+                and t + "x" not in oracle.df)
     return [
         ("empty", ""),
         ("blank", " \t  "),
@@ -548,19 +562,33 @@ def _edge_queries(oracle) -> list[tuple[str, str]]:
         ("punct", "!!! ... ,;: ??"),
         ("long", " ".join((vocab * 200)[:200])),
         ("repeat", "web web web page"),
+        *ends,
+        # sorts before / after every directory entry
+        ("before", "! data"),
+        ("after", "~ data"),
+        ("prefix", f"{stem[:-1]} web"),
+        ("extended", f"{stem}x web"),
+        ("slash", next(t for t in vocab if "/" in t)),
+        # query terms the doc tokenizer never indexes
+        ("nonascii", "café 東京 data"),
     ]
 
 
 @pytest.mark.parametrize("layout", ["docid", "impact"])
 def test_edge_queries_match_oracle(spark, built, built_impact, layout):
     """Empty, blank, OOV-only, stopword-only, punctuation-only, 200-term and
-    repeated-term queries, and an empty query list: search_local == search
-    == oracle on both block layouts."""
+    repeated-term queries, each term directory's first and last entry,
+    terms sorting before and after every entry, a prefix and an extension
+    of an indexed term, a term holding '/', non-ASCII terms, and an empty
+    query list: search_local == search == oracle on both block layouts,
+    and term_stats_for gives the oracle's df, absent terms absent."""
     rd = IndexReader(spark, built_impact if layout == "impact" else built["idx_dir"])
     o = built["oracle"]
     queries = _edge_queries(o)
     assert rd.search_local([], k=10) == []
     assert rd.search([], k=10).collect() == []
+    terms = sorted({t for _, q in queries for t in tokenize_query(q)})
+    assert rd.term_stats_for(terms) == {t: o.df[t] for t in terms if t in o.df}
 
     local: dict[str, list] = {}
     for qid, doc_id, score, rank in rd.search_local(queries, k=10):
@@ -654,9 +682,9 @@ def test_dense_scorer_candidate_filter_narrows_fillin():
 
 
 def test_reader_suggest_matches_spark_operator(spark, built):
-    """IndexReader.suggest (driver-side delete-key index) and the
-    distributed spell_correct operator must implement the same spec over
-    the same vocabulary — including the oversized-vocab fallback path."""
+    """IndexReader.suggest (driver-side delete-key index over the term
+    directory) and the distributed spell_correct operator must implement
+    the same spec over the same vocabulary."""
     from pyspark.sql import functions as F
 
     from knowledgeir_spark.operators.spell import spell_correct
@@ -675,12 +703,39 @@ def test_reader_suggest_matches_spark_operator(spark, built):
     assert got == want
     assert want[terms[0]][1] == 0  # in-vocab passes through at ed 0
 
-    # force the oversized-vocabulary fallback (no driver df cache)
-    rd2 = IndexReader(spark, built["idx_dir"])
-    rd2._TERM_STATS_CACHE_MAX = 0
-    got2 = rd2.suggest(inputs)
-    assert rd2._df_cache is None
-    assert got2 == want
+
+def test_reader_serves_without_term_stats(spark, built, queries_pdf, tmp_path):
+    """The reader takes every df from its term directory and opens no
+    term_stats file: on a copy of the index without term_stats/,
+    term_stats_for (the whole vocabulary), search_local, search(), prewarm
+    and suggest equal the oracle and a reader on the intact index."""
+    idx_dir = str(tmp_path / "idx")
+    shutil.copytree(built["idx_dir"], idx_dir)
+    shutil.rmtree(os.path.join(idx_dir, "term_stats"))
+    rd = IndexReader(spark, idx_dir)
+    intact = IndexReader(spark, built["idx_dir"])
+    o = built["oracle"]
+    assert rd.term_stats_for(sorted(o.df) + ["zzqxjv"]) == o.df
+
+    warmed = [r.prewarm(n_terms=64) for r in (rd, intact)]
+    assert [w["terms_warmed"] for w in warmed] == [64, 64]
+    assert warmed[0]["postings_cached"] == warmed[1]["postings_cached"]
+    assert list(rd.decode_cache._d) == list(intact.decode_cache._d)
+
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()]
+    for q in queries:
+        got = rd.search_local([q], k=10)
+        assert got == intact.search_local([q], k=10), q
+        want = o.topk(q[1], k=10)
+        assert [r[1] for r in got] == [d for d, _ in want], q
+        assert [r[2] for r in got] == pytest.approx([s for _, s in want], abs=1e-6)
+    dist = sorted(map(tuple, rd.search(queries[:5], k=10).collect()))
+    assert dist == sorted(map(tuple, intact.search(queries[:5], k=10).collect()))
+
+    head = sorted(o.df, key=lambda t: (-o.df[t], t))[:20]
+    inputs = [t[:2] + t[3:] for t in head if len(t) >= 5] + ["zzzzqq", head[0]]
+    assert rd.suggest(inputs) == intact.suggest(inputs)
+    assert rd.suggest([head[0]])[head[0]] == (head[0], 0, o.df[head[0]])
 
 
 def test_sharded_reader_rank_identical_to_monolith(spark, built, tmp_path_factory):

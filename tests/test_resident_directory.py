@@ -6,12 +6,14 @@ bucket holds several files) under both block orders, the resident tables
 and the per-call scan fallback (ceiling forced to 0) give the same
 search_local (OR, AND with exclude), prewarm + search_local and
 facet_counts_local results, and those equal the oracle.  Once its buckets
-are loaded, a reader serves with no pyarrow dataset scan at all, and two
-threads racing on one cold reader load each bucket exactly once.
+are loaded, a reader serves with no pyarrow dataset scan at all, and
+three threads racing on one cold reader (two search_local calls and a
+term_stats_for) load each bucket exactly once.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import threading
 import time
@@ -188,9 +190,11 @@ def test_loaded_reader_runs_no_scan(spark, frag_index, queries_pdf, monkeypatch)
 def test_concurrent_first_calls_load_each_bucket_once(
     spark, frag_index, monkeypatch
 ):
-    """Two threads make their first call on ONE cold reader at the same
-    time, on queries sharing a bucket; the load is slowed so both reach
-    it together.  Both get the oracle's top-k; each bucket loads once."""
+    """Two threads make their first search_local call on ONE cold reader
+    at the same time, on queries sharing a bucket, while a third asks
+    term_stats_for the whole vocabulary; the load is slowed so all reach
+    it together.  Both get the oracle's top-k, the third the oracle's df;
+    each bucket loads once."""
     idx_dir, oracle, _ = frag_index
     reader = IndexReader(spark, idx_dir)
     qa, qb = ("a", "the data w0005"), ("b", "data w0100")
@@ -207,18 +211,21 @@ def test_concurrent_first_calls_load_each_bucket_once(
         return orig(b)
 
     monkeypatch.setattr(reader, "_load_bucket", slow_load)
-    start = threading.Barrier(2)
+    start = threading.Barrier(3)
     got: dict[str, list] = {}
     errors: list[BaseException] = []
 
-    def run(q):
+    def run(name, call):
         try:
             start.wait()
-            got[q[0]] = reader.search_local([q], k=10)
+            got[name] = call()
         except BaseException as e:  # surfaced below
             errors.append(e)
 
-    threads = [threading.Thread(target=run, args=(q,)) for q in (qa, qb)]
+    work = {q[0]: functools.partial(reader.search_local, [q], k=10)
+            for q in (qa, qb)}
+    work["df"] = functools.partial(reader.term_stats_for, sorted(oracle.df))
+    threads = [threading.Thread(target=run, args=kv) for kv in work.items()]
     for t in threads:
         t.start()
     for t in threads:
@@ -226,5 +233,6 @@ def test_concurrent_first_calls_load_each_bucket_once(
     assert not errors, errors
     for q in (qa, qb):
         _check_topk(got[q[0]], oracle.topk(q[1], k=10))
-    assert sorted(calls) == sorted(set(calls))
-    assert reader.last_query_stats()["bucket_loads"] == len(set(calls))
+    assert got["df"] == oracle.df
+    assert sorted(calls) == sorted(set(calls)) == list(range(CFG.n_buckets))
+    assert reader.last_query_stats()["bucket_loads"] == CFG.n_buckets
