@@ -1,16 +1,17 @@
 """Index query path: pruned BM25 top-k from the posting shards.
 
-Plan shape (SURVEY.md §3.2 "Spark shape"):
+Plan shape of search(), one Spark job per batch, no exchange:
 
-  postings scan [bucket partition-pruned to <= |q| buckets,
-                 term predicate pushed to parquet row groups]
-    ⋈ broadcast(query terms)
-    → groupBy(qid, salt).applyInArrow(pruned bm25 kernel)     [local top-k]
-    → window or driver top-k merge                             [global]
+  spark.range(tasks).mapInArrow(task)       [task i: its own salt ranges]
+    task: pyarrow read of the query terms' block rows from only their
+          buckets' files [term and salt predicates pushed to the reader]
+          → split by (salt, term) → kernel per (qid, salt) group
+          → per-query top-k over the task's salt ranges    [<= k rows/query]
+  → driver: per-query top-k merge of the tasks' rows       [global]
 
 Each (qid, salt) group holds the query's posting blocks for ONE contiguous
 doc_id range (the build's range salt), so groups are disjoint in docs: local
-top-k lists merge into the exact global top-k.  Executors therefore process
+top-k lists merge into the exact global top-k.  Tasks therefore process
 doc ranges in parallel per query — the WAND analog of doc-partitioned
 sharding in Lucene/Indri.
 
@@ -37,6 +38,7 @@ from __future__ import annotations
 
 import functools
 import math
+import operator
 import os
 import threading
 import time
@@ -47,12 +49,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.topk import topk_per_query
-from .build import (
-    check_codec, live_files, read_field_stats, read_live, term_bucket_py,
-)
+from .build import check_codec, live_files, read_field_stats, term_bucket_py
 from .codec import decode_table
 from . import scoring_np as S
 
@@ -65,6 +63,12 @@ _BLOCK_COLUMNS = [
     "doc_id_deltas", "tfs", "doc_lens",
 ]
 
+# what each search() task returns: at most k rows per query
+_HITS_SCHEMA = pa.schema([
+    ("qid", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64()),
+])
+_HITS_SCHEMA_DDL = "qid string, doc_id long, score double"
+
 
 def _col(g: pa.Table, name: str, dtype=np.int64) -> np.ndarray:
     """One column of a term's block rows as a numpy array."""
@@ -75,12 +79,37 @@ def _no_hits() -> tuple[np.ndarray, np.ndarray]:
     return np.empty(0, np.int64), np.empty(0, np.float64)
 
 
-def _term_runs(tbl: pa.Table) -> tuple[pa.Table, pa.StringArray, np.ndarray]:
-    """tbl stably sorted by term (each term's rows keep their order), its
-    unique terms in order as an Arrow array, and int32 row offsets with a
-    final end."""
-    tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending")])).combine_chunks()
-    col = tbl["term"].chunk(0) if tbl.num_rows else pa.array([], pa.string())
+def _read_blocks(
+    files: list[str],
+    terms: list[str] | None,
+    columns: list[str] = _BLOCK_COLUMNS,
+    salts: tuple[int | None, int | None] = (None, None),
+) -> pa.Table:
+    """The one block source of both query paths: the block rows of `terms`
+    (None: every term) in the parquet `files`, in the files' order, read
+    with pyarrow with the term and salt-range [lo, hi) (None: an open end)
+    predicates pushed down.  The reader's bucket loads and scan fallback
+    call it on the driver; search()'s tasks call it on the executors."""
+    lo, hi = salts
+    preds = [] if terms is None else [ds.field("term").isin(terms)]
+    if lo is not None:
+        preds.append(ds.field("salt") >= lo)
+    if hi is not None:
+        preds.append(ds.field("salt") < hi)
+    return ds.dataset(files, format="parquet").to_table(
+        columns=columns,
+        filter=functools.reduce(operator.and_, preds) if preds else None,
+    )
+
+
+def _term_runs(
+    tbl: pa.Table, key: str = "term"
+) -> tuple[pa.Table, pa.Array, np.ndarray]:
+    """tbl stably sorted by column `key` (rows with one value keep their
+    order), its unique values in order as an Arrow array, and int32 row
+    offsets with a final end."""
+    tbl = tbl.take(pc.sort_indices(tbl, [(key, "ascending")])).combine_chunks()
+    col = tbl[key].chunk(0) if tbl.num_rows else pa.array([], pa.string())
     starts = np.flatnonzero(np.concatenate([
         [tbl.num_rows > 0],
         pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False),
@@ -88,12 +117,12 @@ def _term_runs(tbl: pa.Table) -> tuple[pa.Table, pa.StringArray, np.ndarray]:
     return tbl, col.take(starts), np.append(starts, tbl.num_rows).astype(np.int32)
 
 
-def _split_by_term(tbl: pa.Table) -> dict[str, pa.Table]:
-    """Block rows -> {term: that term's rows, in their original order}."""
-    tbl, terms, offs = _term_runs(tbl)
+def _split_by(tbl: pa.Table, key: str = "term") -> dict:
+    """Block rows -> {value of `key`: its rows, in their original order}."""
+    tbl, values, offs = _term_runs(tbl, key)
     return {
-        t: tbl.slice(a, b - a)
-        for t, a, b in zip(terms.to_pylist(), offs[:-1].tolist(), offs[1:].tolist())
+        v: tbl.slice(a, b - a)
+        for v, a, b in zip(values.to_pylist(), offs[:-1].tolist(), offs[1:].tolist())
     }
 
 
@@ -124,13 +153,19 @@ class _TermDir(NamedTuple):
     """One bucket's resident term directory: its sorted unique terms, int32
     row offsets with a final end, each term's df (the sum of n_docs over
     its block rows), and the block rows sorted by term, or None for a
-    bucket over IndexReader._RESIDENT_MAX_BYTES (scanned per call)."""
+    bucket loaded by a df lookup only (its rows load on the first block
+    lookup) or over IndexReader._RESIDENT_MAX_BYTES (scanned per call)."""
 
     terms: pa.StringArray
     rows: np.ndarray
     df: np.ndarray
     tbl: pa.Table | None
     nbytes: int
+
+
+# the directory of a bucket with no file: no indexed term hashes to it
+_NO_TERMS = _TermDir(pa.array([], pa.string()), np.zeros(1, np.int32),
+                     np.zeros(0, np.int64), pa.table({}), 0)
 
 
 def _doc_span(blocks: dict[str, pa.Table]) -> tuple[int, int]:
@@ -689,6 +724,58 @@ def _score_group_bool(
     return cand[order], scores[order], stats
 
 
+def _salt_ranges(n_salts: int, parallelism: int) -> list[tuple[int | None, int | None]]:
+    """search()'s tasks: min(n_salts, parallelism) contiguous salt ranges
+    [lo, hi) over salt ids 0..n_salts-1, the first open below and the last
+    open above, so together they hold every salt id exactly once."""
+    parts = max(1, min(n_salts, parallelism))
+    cuts = [n_salts * i // parts for i in range(1, parts)]
+    return list(zip([None, *cuts], [*cuts, None]))
+
+
+def _score_salts(
+    files: list[str], terms: list[str], salts: tuple[int | None, int | None],
+    q_terms: dict[str, list[dict]], excl: dict[str, set[str]],
+    n: float, avgdl: float, model: str, prune: bool, mode: str, k: int,
+) -> pa.RecordBatch:
+    """One search() task: the block rows of `terms` (every query and
+    excluded term the index holds) in the salt range `salts` of `files`
+    (their buckets' files), scored per (qid, salt) group by the kernel
+    that mode and model route to, then merged per query into at most k
+    (qid, doc_id, score) rows."""
+    want = {
+        qid: [t["term"] for t in ts] + sorted(excl.get(qid, ()))
+        for qid, ts in q_terms.items()
+    }
+    tbl = _read_blocks(files, terms, [*_BLOCK_COLUMNS, "salt"], salts)
+    hits: dict[str, list[tuple[int, float]]] = {}
+    for grp in _split_by(tbl, "salt").values():
+        blocks = _split_by(grp)
+        for qid, ts in want.items():
+            sub = {t: blocks[t] for t in ts if t in blocks}
+            if not sub:
+                continue
+            if mode == "and":
+                ids, scores, _ = _score_group_bool(
+                    qid, sub, q_terms, n, avgdl, model, k, excl_terms=excl)
+            elif prune and model == "bm25":
+                ids, scores, _ = _score_group_dense(qid, sub, q_terms, n, avgdl, k)
+            else:
+                ids, scores = _score_group(qid, sub, q_terms, n, avgdl, model, k)
+            hits.setdefault(qid, []).extend(zip(ids.tolist(), scores.tolist()))
+    rows = [(q, d, s) for q, c in hits.items() for d, s in _merge_topk(c, k)]
+    return pa.RecordBatch.from_pydict(
+        {name: [r[i] for r in rows] for i, name in enumerate(_HITS_SCHEMA.names)},
+        schema=_HITS_SCHEMA,
+    )
+
+
+def _qid_key(qid: str) -> tuple:
+    """Total order of search()'s result qids: numeric qids by value, then
+    the rest by string."""
+    return (0, int(qid), qid) if qid.isdecimal() else (1, 0, qid)
+
+
 def _check_choice(name: str, value: str, allowed: tuple[str, ...]) -> None:
     if value not in allowed:
         raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
@@ -789,22 +876,24 @@ class IndexReader:
     new reader to see later commits.
 
     Every term lookup (term_stats_for, search_local, prewarm, suggest,
-    facet_counts_local) goes through one resident term directory per
-    bucket: the first call that touches bucket b reads b's live files once
-    and keeps its sorted unique terms as an Arrow string array, int32 row
-    offsets and int64 df (the sum of n_docs over each term's block rows),
-    with the block rows as an Arrow table sorted by term.  Later calls
-    binary-search the term array's buffers and take zero-copy slices, so a
-    query runs no parquet scan.  A bucket whose live files exceed
-    _RESIDENT_MAX_BYTES keeps only its directory (read from its term and
-    n_docs columns); its block rows are read with a filtered scan on every
-    call instead, and both branches give the same rows in the same order.
+    facet_counts_local, search()'s df) goes through one resident term
+    directory per bucket: the first call that touches bucket b reads b's
+    live files once and keeps its sorted unique terms as an Arrow string
+    array, int32 row offsets and int64 df (the sum of n_docs over each
+    term's block rows), with the block rows as an Arrow table sorted by
+    term.  Later calls binary-search the term array's buffers and take
+    zero-copy slices, so a query runs no parquet scan.  A df-only lookup
+    (term_stats_for, suggest, search()) reads a bucket's term and n_docs
+    columns only; the first block lookup then reads its rows, once.  A
+    bucket whose live files exceed _RESIDENT_MAX_BYTES keeps only its
+    directory; its block rows are read with a filtered scan on every call
+    instead, and both branches give the same rows in the same order.
 
     Thread safety: search_local, prewarm, facet_counts_local, suggest and
     term_stats_for may run concurrently on one reader.  Buckets load under
-    the reader's lock (each bucket exactly once), and the decode cache
-    locks its own state.  last_query_stats() then reports whichever
-    search_local call started last."""
+    the reader's lock (a directory once, its rows at most once), and the
+    decode cache locks its own state.  last_query_stats() then reports
+    whichever search_local call started last."""
 
     # a bucket whose live postings files hold more bytes than this keeps
     # only its term directory: each serving call scans its block rows with
@@ -824,9 +913,6 @@ class IndexReader:
         # the doc tokenizer the index was built with (phrase verification
         # must tokenize identically); older indexes predate the key
         self.tokenizer = self.field_stats.get("tokenizer", "spec")
-        # the Spark scan DataFrame (_postings) is built on first use:
-        # opening a reader and serving search_local run no Spark job; only
-        # search() needs it
         # serving hot-term cache (decoded postings; one index snapshot per
         # reader, so no invalidation concern).  Budget scales with the
         # corpus: a fixed 10M-posting cap starves large indexes (at 2M docs
@@ -863,35 +949,14 @@ class IndexReader:
             )
         return self._nextword
 
-    @functools.cached_property
-    def _postings(self) -> DataFrame:
-        return read_live(self.spark, self.index_dir, "postings", self.field_stats)
-
-    def postings_for_terms(self, terms: list[str]) -> DataFrame:
-        buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
-        return (
-            self._postings
-            .filter(F.col("bucket").isin(buckets))       # partition pruning
-            .filter(F.col("term").isin(list(terms)))     # row-group pushdown
-        )
-
     def term_stats_for(self, terms: list[str]) -> dict[str, float]:
         """{term: df} for the `terms` the index holds, from the term
-        directory (loads each touched bucket)."""
+        directory (a bucket first touched here loads its directory only)."""
         return {
             t: float(d.df[i])
-            for _, d, ts, pos in self._lookup(terms)
+            for _, d, ts, pos in self._lookup(terms, rows=False)
             for t, i in zip(ts, pos) if i >= 0
         }
-
-    # scoring-exchange sizing: the Python scorer pays a fixed per-task cost
-    # (worker round-trip + Arrow serde), so the partition count follows the
-    # candidate volume (sum of term dfs) instead of the session shuffle
-    # width; capped at defaultParallelism = one wave of Python workers.
-    _CAND_POSTINGS_PER_TASK = 15_000
-    # merge="auto" routes to the driver scatter-gather merge when the
-    # estimated fan-in (k * queries * salt ranges) is below this
-    _DRIVER_MERGE_MAX_ROWS = 50_000
 
     def search(
         self,
@@ -899,151 +964,74 @@ class IndexReader:
         k: int = 20,
         model: str = "bm25",
         prune: bool = True,
-        merge: str = "auto",
         mode: str = "or",
         exclude: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """queries: [(qid, query_text)] or DataFrame(qid string, query string).
         Returns (qid, doc_id, score, rank) — TREC-shaped, rank-identical to
-        the full-scan path/oracle.
-
-        merge="spark": global top-k via window (the fully-distributed path —
-        right when the per-query candidate fan-in is large).
-        merge="driver": scatter-gather — each (query, doc-range) group's local
-        top-k (<= k rows) is collected and merged on the driver with the same
-        quantized ranking key; one Spark job instead of three stages, the
-        standard low-latency coordinator shape.  Identical results (tested).
-        merge="auto" (default): driver scatter-gather when the estimated
-        fan-in (k * |queries| * salt ranges) is coordinator-sized
-        (_DRIVER_MERGE_MAX_ROWS), else the spark window path.
+        the full-scan path/oracle; numeric qids by value, then the rest by
+        string.  One Spark job (module docstring): min(salt ranges,
+        defaultParallelism) tasks of contiguous salt ranges each score
+        their (qid, salt) groups (_score_salts) and the driver merges
+        their per-query top-k; the df come from the driver's term
+        directory, and collecting the result runs no further job.
 
         mode="and" / exclude: conjunctive (AND-NOT) retrieval.  Correct
         under the salted layout because the salt is a CONTIGUOUS DOC
         RANGE shared by every term — each (qid, salt) group sees all
         postings of its doc range, so per-group intersection composes to
-        the global one with no extra shuffle.
+        the global one.
         """
         _check_choice("model", model, S.MODELS)
         _check_choice("mode", mode, ("or", "and"))
-        _check_choice("merge", merge, ("auto", "spark", "driver"))
         if isinstance(queries, DataFrame):
             queries = [(r["qid"], r["query"]) for r in queries.collect()]
         excl_map = {str(q): set(ts) for q, ts in (exclude or {}).items()}
         if excl_map and mode != "and":
             raise ValueError("exclude requires mode='and'")
-        # driver-side query-term table (queries are small by definition)
         q_terms, all_terms = _query_term_dicts(queries)
-        if excl_map:
-            all_terms = set(all_terms)
-            for ts in excl_map.values():
-                all_terms.update(ts)
+        all_terms = all_terms.union(*excl_map.values())
         dfs = self.term_stats_for(sorted(all_terms))
         for terms in q_terms.values():
             for t in terms:
                 t["df"] = dfs.get(t["term"], 0.0)
+        if not dfs:
+            return self._rows_df([])  # no query term is in the index
 
         n = float(self.field_stats["n_docs"])
         avgdl = float(self.field_stats["avg_doc_len"])
+        terms = sorted(dfs)
+        files = [f for b, _ in self._by_bucket(terms) for f in self._bucket_files[b]]
+        n_salts = -(-int(n) // int(self.field_stats["salt_range"])) or 1
+        ranges = _salt_ranges(n_salts, self.spark.sparkContext.defaultParallelism)
 
-        qt_rows = [
-            (qid, t["term"]) for qid, terms in q_terms.items() for t in terms
-        ]
-        qt_rows += [
-            (qid, xt)
-            for qid, xts in excl_map.items()
-            for xt in sorted(xts)
-            if xt not in {t["term"] for t in q_terms.get(qid, [])}
-        ]
-        if not qt_rows:
-            return self.spark.createDataFrame(
-                [], "qid string, doc_id long, score double, rank int"
-            )
-        postings = self.postings_for_terms(sorted(all_terms))
-        if len(q_terms) == 1:
-            # single query: every pruned posting row belongs to the one qid,
-            # so a literal column replaces the broadcast join (drops the
-            # BroadcastExchange and the driver->JVM row conversion)
-            joined = postings.withColumn("qid", F.lit(next(iter(q_terms))))
-        else:
-            qt_df = self.spark.createDataFrame(
-                qt_rows, "qid string, term string"
-            )
-            joined = postings.join(F.broadcast(qt_df), "term")
-        # Explicitly size the scoring exchange from the per-(qid, term)
-        # candidate volume.  Left to the session default, AQE coalesces the
-        # tiny point-query exchange to ONE partition and the Python scorer
-        # runs serially (measured: 1.11s -> 0.42s per query at 100k docs).
-        work = sum(dfs.get(t, 0.0) for _, t in qt_rows)
-        parts = max(
-            1,
-            min(
-                -(-int(work) // self._CAND_POSTINGS_PER_TASK),
-                self.spark.sparkContext.defaultParallelism,
-            ),
-        )
-        joined = joined.repartition(parts, "qid", "salt")
+        def task(batches):
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    yield _score_salts(files, terms, ranges[i], q_terms,
+                                       excl_map, n, avgdl, model, prune, mode, k)
 
-        def apply_fn(key, tbl):
-            qid = key[0].as_py()
-            blocks = _split_by_term(tbl)
-            if mode == "and":
-                ids, scores, _ = _score_group_bool(
-                    qid, blocks, q_terms, n, avgdl, model, k,
-                    excl_terms=excl_map,
-                )
-            elif prune and model == "bm25":
-                ids, scores, _ = _score_group_dense(
-                    qid, blocks, q_terms, n, avgdl, k,
-                )
-            else:
-                ids, scores = _score_group(qid, blocks, q_terms, n, avgdl,
-                                           model, k)
-            return pa.table({
-                "qid": pa.array([qid] * len(ids), pa.string()),
-                "doc_id": pa.array(ids, pa.int64()),
-                "score": pa.array(scores, pa.float64()),
-            })
-
-        local = joined.groupBy("qid", "salt").applyInArrow(
-            apply_fn, "qid string, doc_id long, score double"
-        )
-        if merge == "auto":
-            n_salts = -(-int(n) // int(
-                self.field_stats.get("salt_range", 1 << 20)
-            )) or 1
-            est_rows = k * len(q_terms) * n_salts
-            merge = (
-                "driver" if est_rows <= self._DRIVER_MERGE_MAX_ROWS
-                else "spark"
-            )
-        if merge == "spark":
-            return topk_per_query(
-                local, k=k, single_partition_sort=(k * len(q_terms) <= 100_000)
-            )
-        # driver-side scatter-gather merge (rows collected: <= k * n_ranges)
-        by_q: dict[str, list] = {}
-        for r in local.collect():
-            by_q.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
-        out = []
-        for qid in sorted(by_q, key=lambda q: int(q) if q.isdigit() else 0):
-            out.extend(
-                (qid, doc_id, float(score), rank)
-                for rank, (doc_id, score) in enumerate(
-                    _merge_topk(by_q[qid], k), start=1
-                )
-            )
-        return self._rows_df(out)
+        hits = self.spark.range(0, len(ranges), 1, len(ranges)).mapInArrow(
+            task, _HITS_SCHEMA_DDL).toArrow()
+        by_q: dict[str, list[tuple[int, float]]] = {}
+        for qid, doc_id, score in zip(*(hits[c].to_pylist() for c in _HITS_SCHEMA.names)):
+            by_q.setdefault(qid, []).append((doc_id, score))
+        return self._rows_df([
+            (qid, doc_id, score, rank)
+            for qid in sorted(by_q, key=_qid_key)
+            for rank, (doc_id, score) in enumerate(_merge_topk(by_q[qid], k), start=1)
+        ])
 
     def _rows_df(self, rows: list[tuple]) -> DataFrame:
-        """TREC-shaped rows -> DataFrame as a SINGLE-slice RDD: the default
-        createDataFrame parallelizes tiny result sets over
-        defaultParallelism empty slices, so every downstream collect()
-        schedules ~32 no-op tasks (measured 0.27s per point query)."""
-        schema = "qid string, doc_id long, score double, rank int"
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        rdd = self.spark.sparkContext.parallelize(rows, 1)
-        return self.spark.createDataFrame(rdd, schema)
+        """TREC-shaped rows -> DataFrame, built from an Arrow table: a
+        local relation, so collecting it runs no Spark job."""
+        cols = list(zip(*rows)) or [()] * 4
+        return self.spark.createDataFrame(pa.table({
+            "qid": pa.array(cols[0], pa.string()),
+            "doc_id": pa.array(cols[1], pa.int64()),
+            "score": pa.array(cols[2], pa.float64()),
+            "rank": pa.array(cols[3], pa.int32()),
+        }), "qid string, doc_id long, score double, rank int")
 
     # ------------------------------------------------------------------
     # serving path: no Spark job per query
@@ -1072,71 +1060,66 @@ class IndexReader:
         return self.search(queries, k=k, model=model, prune=prune)
 
     @functools.cached_property
-    def _local_dataset(self) -> ds.Dataset:
-        """The pinned generation's postings files as one pyarrow dataset,
-        `bucket` read from the paths (a filter on it opens only that
-        bucket's files)."""
-        return ds.dataset(
-            live_files(self.index_dir, "postings", self.field_stats),
-            format="parquet", partitioning="hive",
-            partition_base_dir=os.path.join(self.index_dir, "postings"),
-        )
+    def _bucket_files(self) -> dict[int, list[str]]:
+        """bucket -> its files in the pinned generation, in live-list
+        order (buckets with no file are absent)."""
+        out: dict[int, list[str]] = {}
+        for p in live_files(self.index_dir, "postings", self.field_stats):
+            b = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
+            out.setdefault(b, []).append(p)
+        return out
 
     @functools.cached_property
     def _bucket_bytes(self) -> dict[int, int]:
         """bucket -> bytes of its live postings files (file sizes only)."""
-        out: dict[int, int] = {}
-        for p in live_files(self.index_dir, "postings", self.field_stats):
-            b = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
-            out[b] = out.get(b, 0) + os.path.getsize(p)
-        return out
+        return {b: sum(map(os.path.getsize, fs))
+                for b, fs in self._bucket_files.items()}
 
-    def _scan_bucket(self, b: int, terms: list[str] | None,
-                     columns: list[str] = _BLOCK_COLUMNS) -> pa.Table:
-        """Bucket b's block rows (of `terms`, or all), in the live files'
-        order."""
-        filt = ds.field("bucket") == b
-        if terms is not None:
-            filt = filt & ds.field("term").isin(terms)
-        return self._local_dataset.to_table(filter=filt, columns=columns)
+    def _by_bucket(self, terms) -> list[tuple[int, list[str]]]:
+        """`terms` grouped by bucket: (bucket, its terms sorted), in
+        bucket order."""
+        out: dict[int, list[str]] = {}
+        for t in sorted(set(terms)):
+            out.setdefault(term_bucket_py(t, self.n_buckets), []).append(t)
+        return sorted(out.items())
 
-    def _load_bucket(self, b: int) -> _TermDir:
-        """Bucket b's term directory, with its block rows when its live
-        files hold at most _RESIDENT_MAX_BYTES (a larger bucket is read
-        for its term and n_docs columns only)."""
-        resident = self._bucket_bytes.get(b, 0) <= self._RESIDENT_MAX_BYTES
-        tbl, terms, rows = _term_runs(self._scan_bucket(
-            b, None, _BLOCK_COLUMNS if resident else ["term", "n_docs"]))
-        df = np.add.reduceat(_col(tbl, "n_docs"), rows[:-1])
-        held = terms.nbytes + rows.nbytes + df.nbytes
-        if not resident:
-            return _TermDir(terms, rows, df, None, held)
-        return _TermDir(terms, rows, df, tbl, held + tbl.nbytes)
+    def _load_bucket(self, b: int, rows: bool) -> _TermDir:
+        """Bucket b's term directory, with its block rows if `rows`
+        (otherwise read from its term and n_docs columns only)."""
+        tbl, terms, offs = _term_runs(_read_blocks(
+            self._bucket_files[b], None,
+            _BLOCK_COLUMNS if rows else ["term", "n_docs"]))
+        df = np.add.reduceat(_col(tbl, "n_docs"), offs[:-1])
+        held = terms.nbytes + offs.nbytes + df.nbytes
+        if not rows:
+            return _TermDir(terms, offs, df, None, held)
+        return _TermDir(terms, offs, df, tbl, held + tbl.nbytes)
 
-    def _bucket(self, b: int) -> _TermDir:
+    def _bucket(self, b: int, rows: bool = True) -> _TermDir:
         """Bucket b's term directory, loaded by the first call to touch b
         (under the reader's lock: once per bucket, however many threads
-        race to it)."""
-        try:
-            return self._resident[b]
-        except KeyError:
-            pass
-        with self._lock:
-            if b not in self._resident:
-                self._resident[b] = self._load_bucket(b)
-                self._bucket_loads += 1
-            return self._resident[b]
+        race to it).  With `rows`, a bucket within _RESIDENT_MAX_BYTES
+        holds its block rows: one loaded by a df lookup only loads again,
+        with them, once."""
+        if b not in self._bucket_files:
+            return _NO_TERMS
+        rows = rows and self._bucket_bytes[b] <= self._RESIDENT_MAX_BYTES
+        d = self._resident.get(b)
+        if d is None or (rows and d.tbl is None):
+            with self._lock:
+                d = self._resident.get(b)
+                if d is None or (rows and d.tbl is None):
+                    d = self._resident[b] = self._load_bucket(b, rows)
+                    self._bucket_loads += 1
+        return d
 
-    def _lookup(self, terms) -> list[tuple[int, _TermDir, list[str], list[int]]]:
+    def _lookup(self, terms, rows: bool = True) -> list[tuple]:
         """The reader's one term lookup: per touched bucket, in bucket
         order, (bucket, its directory, its `terms` sorted, their directory
         positions with -1 for absent terms)."""
-        by_bucket: dict[int, list[str]] = {}
-        for t in sorted(set(terms)):
-            by_bucket.setdefault(term_bucket_py(t, self.n_buckets), []).append(t)
         out = []
-        for b, ts in sorted(by_bucket.items()):
-            d = self._bucket(b)
+        for b, ts in self._by_bucket(terms):
+            d = self._bucket(b, rows)
             out.append((b, d, ts, _find(d.terms, ts)))
         return out
 
@@ -1153,7 +1136,7 @@ class IndexReader:
         for b, d, ts, pos in self._lookup(terms):
             if d.tbl is None:
                 n_scanned += 1
-                blocks.update(_split_by_term(self._scan_bucket(b, ts)))
+                blocks.update(_split_by(_read_blocks(self._bucket_files[b], ts)))
             for t, i in zip(ts, pos):
                 if i < 0:
                     continue
@@ -1290,8 +1273,9 @@ class IndexReader:
         The resident term directory reports on the reader as a whole:
         resident_buckets (buckets whose block rows are loaded),
         resident_bytes (those Arrow tables plus every loaded bucket's
-        directory), bucket_loads (directories loaded so far: each bucket
-        loads at most once per reader); scan_fallback_buckets is the
+        directory), bucket_loads (bucket reads so far: a bucket loads at
+        most twice per reader, its directory for a df lookup, then its
+        directory and rows for a block lookup); scan_fallback_buckets is the
         number of buckets the last search_local call read with the scan
         fallback (over _RESIDENT_MAX_BYTES)."""
         dirs = list(self._resident.values())
@@ -1327,10 +1311,10 @@ class IndexReader:
 
     def _vocab(self) -> dict[str, float]:
         """{term: df} over the whole index, from every bucket's term
-        directory (loads them all)."""
+        directory (loads each directory, not its block rows)."""
         vocab: dict[str, float] = {}
         for b in range(self.n_buckets):
-            d = self._bucket(b)
+            d = self._bucket(b, rows=False)
             vocab.update(zip(d.terms.to_pylist(), d.df.astype(np.float64).tolist()))
         return vocab
 

@@ -27,7 +27,6 @@ def topk_per_query(
     qid_col: str = "qid",
     doc_col: str = "doc_id",
     score_col: str = "score",
-    single_partition_sort: bool = False,
 ) -> DataFrame:
     """Ranking key = (floor(score*1e9) desc, doc_id asc).
 
@@ -36,11 +35,6 @@ def topk_per_query(
     only merges scores closer than 1e-9 (far above float noise ~1e-13, far
     below the 1e-6 reporting tolerance) into a tie resolved by doc_id — this
     is what makes rank-identity robust across platforms/partitionings.
-
-    ``single_partition_sort``: at most k * |queries| rows survive the rank
-    filter; when the caller knows that is coordinator-sized, a one-partition
-    sort yields the same row order as the global orderBy without the
-    range-partitioning exchange and its sampling job.
     """
     w = Window.partitionBy(qid_col).orderBy(
         F.floor(F.col(score_col) * RANK_QUANTUM).desc(), F.col(doc_col).asc()
@@ -49,10 +43,6 @@ def topk_per_query(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-    if single_partition_sort:
-        return ranked.coalesce(1).sortWithinPartitions(
-            F.col(qid_col).cast("long"), "rank"
-        )
     return ranked.orderBy(F.col(qid_col).cast("long"), "rank")
 
 

@@ -48,21 +48,10 @@ def main() -> None:
         queries = [
             (r.qid, r.query) for r in gen_queries(50).itertuples()
         ]
-        single = capture(reader.search(queries[:1], k=20))
-        if "Exchange" not in single:
-            # merge="auto" routed to the driver scatter-gather merge: the
-            # scoring job already ran and the returned frame is a 1-slice
-            # local relation.  Record that AND the distributed window plan
-            # (merge="spark") the same call shape used before round 6.
-            single = (
-                "(merge='auto' chose the driver scatter-gather merge; the"
-                " returned frame is a single-slice local relation — the"
-                " scoring job plan equals the merge='spark' plan below"
-                " minus the window/top-k stages)\n" + single + "\n"
-                "== merge='spark' (pre-round-6 path) ==\n"
-                + capture(reader.search(queries[:1], k=20, merge="spark"))
-            )
-        plans["query_search_single"] = single
+        # search() runs its one scoring job (a mapInArrow over salt-range
+        # tasks) inside the call and returns a local relation of the
+        # merged rows: the captured plan is that relation's scan
+        plans["query_search_single"] = capture(reader.search(queries[:1], k=20))
         plans["query_search_batch50"] = capture(reader.search(queries, k=20))
 
     for name, text in plans.items():

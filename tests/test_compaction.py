@@ -964,6 +964,39 @@ def test_reader_pinned_to_its_generation(
             [d for d, _ in oracle.topk(q[1], k=10)], q
 
 
+@pytest.mark.parametrize("op", ["append", "merge", "defrag"])
+def test_search_first_after_fold_stays_pinned(
+    spark, webpages_pdf, queries_pdf, tmp_path, op
+):
+    """A reader opened before a fold whose first call afterwards is
+    search(): the driver has loaded nothing yet, so the tasks read the
+    pinned generation's file lists, not the bucket directories (which now
+    also hold the fold's files); its rows equal a reader's over a copy of
+    the pre-fold index."""
+    import shutil
+
+    from knowledgeir_spark.index.compact import defrag
+
+    idx_dir, _ = _build_with_one_delta(spark, webpages_pdf, tmp_path, f"sf_{op}")
+    if op == "defrag":
+        compact(spark, idx_dir, CFG, mode="append")
+    pre = str(tmp_path / f"pre_sf_{op}")
+    shutil.copytree(idx_dir, pre)
+    queries = [(str(r.qid), r.query) for r in queries_pdf.itertuples()][:10]
+
+    first = IndexReader(spark, idx_dir)
+    if op == "defrag":
+        assert defrag(spark, idx_dir, CFG, buckets=list(range(CFG.n_buckets)))
+    else:
+        assert compact(spark, idx_dir, CFG, mode=op)
+
+    want = IndexReader(spark, pre).search(queries, k=10).collect()
+    assert want
+    assert first.search(queries, k=10).collect() == want
+    if op != "defrag":  # the fold added docs: a fresh reader answers anew
+        assert IndexReader(spark, idx_dir).search(queries, k=10).collect() != want
+
+
 def test_reader_survives_two_append_folds(
     spark, webpages_pdf, queries_pdf, tmp_path
 ):

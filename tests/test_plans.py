@@ -31,27 +31,66 @@ def test_doc_terms_is_map_only(spark, webpages_pdf, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_postings_scan_prunes_buckets(spark, webpages_pdf, tmp_path):
-    """A query's postings scan must hit only the query terms' bucket dirs and
-    push the term predicate into the parquet scan."""
-    from knowledgeir_spark.index.build import IndexConfig, build_index
-    from knowledgeir_spark.index.query import IndexReader
+def test_postings_scan_prunes_buckets(spark, webpages_pdf, tmp_path, monkeypatch):
+    """A search() task's block read must open only the query terms' bucket
+    files of the pinned generation and push the term and salt-range
+    predicate into pyarrow's parquet reader."""
+    import pyarrow.dataset as ds
+
+    from knowledgeir_spark.index import query
+    from knowledgeir_spark.index.build import (
+        IndexConfig, build_index, live_files, term_bucket_py,
+    )
+    from knowledgeir_spark.index.query import IndexReader, _query_term_dicts
 
     idx = str(tmp_path / "idx")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"}).iloc[:100]
     docs = spark.createDataFrame(pdf[["doc_id", "text"]])
     build_index(spark, docs, idx, IndexConfig(n_buckets=8, salt_range=64), "plans")
     reader = IndexReader(spark, idx)
-    scan = reader.postings_for_terms(["data", "spark"])
-    plan = _plan(scan)
-    assert "PartitionFilters" in plan and "bucket" in plan, plan
-    assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200], plan
-    # files actually read: only the matching bucket dirs
-    n_parts = scan.select(F.input_file_name()).distinct().count()
-    from knowledgeir_spark.index.build import term_bucket_py
+    terms = ["data", "spark"]
+    wanted = {term_bucket_py(t, 8) for t in terms}
+    files = [f for b, _ in reader._by_bucket(terms) for f in reader._bucket_files[b]]
+    live = live_files(idx, "postings")
+    assert sorted(files) == sorted(
+        p for p in live if int(p.rsplit("bucket=", 1)[1].split("/")[0]) in wanted)
+    assert 0 < len(files) < len(live)
 
-    wanted = {term_bucket_py(t, 8) for t in ("data", "spark")}
-    assert n_parts <= len(wanted) * 4  # few files, not all 8 buckets' worth
+    opened = []
+
+    class _SpyDs:
+        """pyarrow.dataset, recording each dataset's files and filter."""
+
+        field = staticmethod(ds.field)
+
+        @staticmethod
+        def dataset(paths, **kw):
+            real = ds.dataset(paths, **kw)
+
+            class _Dataset:
+                def to_table(self, **tkw):
+                    opened.append((list(paths), tkw["filter"]))
+                    return real.to_table(**tkw)
+
+            return _Dataset()
+
+    q_terms, _ = _query_term_dicts([("1", " ".join(terms))])
+    dfs = reader.term_stats_for(terms)
+    for t in q_terms["1"]:
+        t["df"] = dfs.get(t["term"], 0.0)
+    monkeypatch.setattr(query, "ds", _SpyDs)
+    fs = reader.field_stats
+    hits = query._score_salts(files, terms, (0, 1), q_terms, {}, fs["n_docs"],
+                              fs["avg_doc_len"], "bm25", True, "or", 10)
+    assert hits.num_rows > 0
+    ((paths, filt),) = opened
+    assert paths == files
+    pred = str(filt)
+    assert all(f'"{t}"' in pred for t in terms) and "salt" in pred, pred
+    # the pushed read returns exactly the terms' rows of salt 0
+    got = ds.dataset(files).to_table(filter=filt)
+    assert set(got["term"].to_pylist()) == set(terms)
+    assert set(got["salt"].to_pylist()) == {0}
 
 
 def test_retrieval_broadcasts_query_side(spark, webpages_pdf, queries_pdf):

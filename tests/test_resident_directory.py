@@ -25,6 +25,7 @@ from knowledgeir_spark.index.build import (
     IndexConfig, build_index, live_files, term_bucket_py,
 )
 from knowledgeir_spark.index.compact import compact
+from knowledgeir_spark.index import query
 from knowledgeir_spark.index.facetstore import write_facet_store
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
@@ -153,11 +154,9 @@ def test_prewarm_then_search_matches_oracle(spark, frag_index, queries_pdf):
     assert st["cache_hits"] > 0 and st["cache_hits"] == scan.last_query_stats()["cache_hits"]
 
 
-class _NoScan:
-    """Stands in for the reader's pyarrow dataset: any use raises."""
-
-    def __getattr__(self, name):
-        raise AssertionError(f"pyarrow dataset scan after load: .{name}")
+def _no_scan(*args, **kwargs):
+    """Stands in for the block source: any read raises."""
+    raise AssertionError("parquet read after load")
 
 
 def test_loaded_reader_runs_no_scan(spark, frag_index, queries_pdf, monkeypatch):
@@ -177,7 +176,7 @@ def test_loaded_reader_runs_no_scan(spark, frag_index, queries_pdf, monkeypatch)
     assert st["resident_buckets"] == st["bucket_loads"] == CFG.n_buckets
     assert st["resident_bytes"] > 0
 
-    monkeypatch.setattr(reader, "_local_dataset", _NoScan())
+    monkeypatch.setattr(query, "_read_blocks", _no_scan)
     assert [reader.search_local([q], k=10) for q in queries] == want_or
     assert reader.search_local(queries, k=10, mode="and") == want_and
     assert reader.facet_counts_local(queries, "grp") == want_facets
@@ -194,21 +193,25 @@ def test_concurrent_first_calls_load_each_bucket_once(
     at the same time, on queries sharing a bucket, while a third asks
     term_stats_for the whole vocabulary; the load is slowed so all reach
     it together.  Both get the oracle's top-k, the third the oracle's df;
-    each bucket loads once."""
+    each bucket loads once, and the searched buckets' rows load once: a
+    bucket the df lookup reached first loads its directory only, then
+    loads again with its rows for the search."""
     idx_dir, oracle, _ = frag_index
     reader = IndexReader(spark, idx_dir)
     qa, qb = ("a", "the data w0005"), ("b", "data w0100")
     shared = ({term_bucket_py(t, CFG.n_buckets) for t in tokenize_query(qa[1])}
               & {term_bucket_py(t, CFG.n_buckets) for t in tokenize_query(qb[1])})
     assert shared
+    searched = {term_bucket_py(t, CFG.n_buckets)
+                for q in (qa, qb) for t in tokenize_query(q[1])}
 
-    calls: list[int] = []
+    calls: list[tuple[int, bool]] = []
     orig = reader._load_bucket
 
-    def slow_load(b):
-        calls.append(b)
+    def slow_load(b, rows):
+        calls.append((b, rows))
         time.sleep(0.05)
-        return orig(b)
+        return orig(b, rows)
 
     monkeypatch.setattr(reader, "_load_bucket", slow_load)
     start = threading.Barrier(3)
@@ -234,5 +237,119 @@ def test_concurrent_first_calls_load_each_bucket_once(
     for q in (qa, qb):
         _check_topk(got[q[0]], oracle.topk(q[1], k=10))
     assert got["df"] == oracle.df
-    assert sorted(calls) == sorted(set(calls)) == list(range(CFG.n_buckets))
-    assert reader.last_query_stats()["bucket_loads"] == CFG.n_buckets
+    assert len(calls) == len(set(calls))
+    assert {b for b, _ in calls} == set(range(CFG.n_buckets))
+    assert sorted(b for b, rows in calls if rows) == sorted(searched)
+    # a directory-only load comes before the bucket's row load, never after
+    assert all((b, True) not in calls[:i] for i, (b, rows) in enumerate(calls)
+               if not rows)
+    st = reader.last_query_stats()
+    assert st["bucket_loads"] == len(calls)
+    assert st["resident_buckets"] == len(searched)
+
+
+def test_df_lookups_load_no_block_rows(
+    spark, frag_index, queries_pdf, monkeypatch
+):
+    """search() and term_stats_for on a fresh reader load each touched
+    bucket's term directory only: the reader holds no block rows.  A later
+    search_local reads each bucket's rows exactly once and equals the
+    oracle."""
+    idx_dir, oracle, _ = frag_index
+    queries = _queries(queries_pdf)
+    reader = IndexReader(spark, idx_dir)
+    dist = reader.search(queries, k=10).collect()
+    assert reader.term_stats_for(sorted(oracle.df)) == oracle.df
+    st = reader.last_query_stats()
+    assert st["resident_buckets"] == 0
+    assert st["bucket_loads"] == CFG.n_buckets
+    assert 0 < st["resident_bytes"] < 40 * len(oracle.df)
+
+    reads: list[tuple[str, ...]] = []
+    orig = query._read_blocks
+
+    def counting_read(files, terms, columns=query._BLOCK_COLUMNS, *args):
+        if "doc_id_deltas" in columns:
+            reads.append(tuple(files))
+        return orig(files, terms, columns, *args)
+
+    monkeypatch.setattr(query, "_read_blocks", counting_read)
+    for q in queries:
+        got = reader.search_local([q], k=10)
+        _check_topk(got, oracle.topk(q[1], k=10))
+        assert [(r[1], r[2]) for r in got] == [
+            (r["doc_id"], r["score"]) for r in dist if r["qid"] == q[0]]
+    assert sorted(reads) == sorted(set(reads))
+    assert len(reads) == CFG.n_buckets
+    st = reader.last_query_stats()
+    assert st["resident_buckets"] == CFG.n_buckets
+    assert st["bucket_loads"] == 2 * CFG.n_buckets
+
+
+def test_many_threads_mixing_df_and_block_lookups(spark, frag_index, queries_pdf):
+    """Eight threads (more than the cores) on one cold reader, with a short
+    switch interval: half ask term_stats_for, half search_local, over the
+    same buckets.  Every call equals the oracle; no bucket's directory or
+    rows load twice (a lost update would double a load or miss a count)."""
+    import sys
+
+    idx_dir, oracle, _ = frag_index
+    queries = _queries(queries_pdf)
+    reader = IndexReader(spark, idx_dir)
+    calls: list[tuple[int, bool]] = []
+    orig = reader._load_bucket
+
+    def load(b, rows):
+        calls.append((b, rows))
+        return orig(b, rows)
+
+    reader._load_bucket = load
+    errors: list[BaseException] = []
+
+    def run(i):
+        try:
+            for q in queries[i::8]:
+                if i % 2:
+                    got = reader.term_stats_for(tokenize_query(q[1]))
+                    assert got == {t: oracle.df[t] for t in tokenize_query(q[1])
+                                   if t in oracle.df}
+                else:
+                    _check_topk(reader.search_local([q], k=10),
+                                oracle.topk(q[1], k=10))
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(calls) == len(set(calls))
+    assert reader.last_query_stats()["bucket_loads"] == len(calls)
+
+
+def test_bucket_without_files(spark, tmp_path):
+    """An index whose vocabulary leaves buckets empty: lookups of terms that
+    hash to an empty bucket find nothing, on every path."""
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame([(0, "w0001 w0002")], "doc_id long, text string"),
+                idx_dir, IndexConfig(block_size=16, salt_range=64, n_buckets=16),
+                input_token="one_doc")
+    buckets = {int(p.rsplit("bucket=", 1)[1].split("/")[0])
+               for p in live_files(idx_dir, "postings")}
+    absent = next(t for t in (f"zz{i}" for i in range(100))
+                  if term_bucket_py(t, 16) not in buckets)
+    reader = IndexReader(spark, idx_dir)
+    assert reader.term_stats_for([absent, "w0001"]) == {"w0001": 1.0}
+    assert reader.search_local([("1", absent)], k=5) == []
+    assert reader.search([("1", absent)], k=5).collect() == []
+    assert [r[1] for r in reader.search_local([("1", f"{absent} w0002")], k=5)] == [0]
+    assert reader.prewarm(n_terms=4)["terms_warmed"] >= 0
+    assert reader.suggest(["w0001"])["w0001"][1] == 0
