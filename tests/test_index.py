@@ -871,10 +871,13 @@ def test_last_query_stats_per_reader_across_threads(spark, built):
     assert a.last_query_stats()["n_scored_terms"] == 3
 
 
-@pytest.mark.parametrize("kw", [{"mode": "xor"}, {"model": "bm99"}])
+@pytest.mark.parametrize("kw", [
+    {"mode": "xor"}, {"exclude": {"1": ["zzznope"]}}, {"model": "bm99"},
+])
 def test_search_rejects_unknown_choices(spark, built, kw):
-    """An unknown mode or model raises ValueError up front instead of
-    silently running OR, returning [] or failing inside a Spark task."""
+    """An unknown mode or model, or exclude without mode='and', raises
+    ValueError up front instead of silently running OR, returning [] or
+    failing inside a Spark task."""
     rd = IndexReader(spark, built["idx_dir"])
     queries = [("1", "zzznope")]  # OOV: nothing to score, no task to fail
     with pytest.raises(ValueError, match=next(iter(kw))):
